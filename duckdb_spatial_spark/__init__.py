@@ -8,7 +8,7 @@ Re-expresses the capability surface of the duckdb/duckdb_spatial extension
   columns with pure Column-expression kernels (no Python cost)
 * ~110 ST_* functions registered as Spark SQL functions
 * spatial join, Hilbert clustering + bbox pruning (R-tree analog)
-* large-scale pipeline operators: dedup, ANN, text analysis, multimodal
+* ST_Read-style format readers and writers
 """
 
 __version__ = "0.1.0"
@@ -50,7 +50,7 @@ def _ensure_worker_alloc_tunables(spark):
 
 
 def register_all(spark):
-    """Register every ST_* function + pipeline SQL function on the session."""
+    """Register every ST_* function on the session."""
     from .functions import register_all as _reg
 
     _ensure_worker_alloc_tunables(spark)

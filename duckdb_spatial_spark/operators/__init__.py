@@ -1,4 +1,4 @@
-"""Relational-level spatial operators (join, aggregates, knn, dedup, text)."""
+"""Relational-level spatial operators (join, aggregates)."""
 
 from .aggregates import st_collect_agg, st_extent_agg, st_intersection_agg, st_union_agg  # noqa: F401
 from .join import st_join  # noqa: F401

@@ -39,7 +39,7 @@ def _fixed_record_binary(recs, width, nan):
     (``width`` bytes per row), ``nan`` the null mask. One
     ``Array.from_buffers`` replaces the per-row ``rows[i*w:(i+1)*w]``
     bytes-slice list the pandas_udf shape needs (r16 opt note 6b; the
-    r17 kernel A/B in scripts/ab_wkb_kernel.py measures 12-16x on the
+    r17 kernel A/B measured 12-16x on the
     21-byte point record and 3-11x on the 93-byte envelope, both
     boundary conversions included). Null rows keep their record bytes
     in the data buffer (offsets stay uniform); the validity bitmap
@@ -341,12 +341,19 @@ def hilbert_cluster_points(
 
     spark = df.sparkSession
     n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    # NULL/NaN-coordinate rows get a NULL hilbert, so they must not reach
+    # the stats either: Spark's max() returns NaN if any input is NaN, and
+    # a NaN in the sample has no defined int64 cast in hilbert_scaled.
+    finite = df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y")).filter(
+        F.col("x").isNotNull() & F.col("y").isNotNull()
+        & ~F.isnan("x") & ~F.isnan("y")
+    )
     if bounds is None:
-        r = df.agg(F.min(x_col), F.min(y_col), F.max(x_col), F.max(y_col)).collect()[0]
+        r = finite.agg(F.min("x"), F.min("y"), F.max("x"), F.max("y")).collect()[0]
         bounds = (r[0], r[1], r[2], r[3])
     b0, b1, b2, b3 = (float(b) for b in bounds)
     sample = (
-        df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
+        finite
         .sample(fraction=float(sample_fraction), seed=seed)
         .limit(2_000_000)  # driver-memory guard: 1% of a 100 TB table is not collectable
         .collect()
@@ -391,7 +398,7 @@ def hilbert_cluster_points(
         placed = routed.repartition(nb, F.col("_route")).sortWithinPartitions("hilbert")
     # WKB + bbox sidecars materialize HERE, post-sort, in the write stage;
     # bbox NULL iff either coordinate is NULL (the fused lane's semantics).
-    # r17: zero-boxing arrow_udf kernel (scripts/ab_wkb_kernel.py)
+    # r17: zero-boxing arrow_udf kernel
     return placed.select(
         *keep,
         _point_wkb_arrow(px, py).alias(geom_col),
@@ -495,7 +502,7 @@ def hilbert_cluster_boxes(
     # WKB assembled HERE — after the exchange and sort, once, in the write
     # stage; bbox sidecars are zero-cost renames of the bound columns.
     # r17: zero-boxing arrow_udf kernel, byte-identical to
-    # udfs.st_makeenvelope (scripts/ab_wkb_kernel.py)
+    # udfs.st_makeenvelope
     return placed.select(
         *keep,
         _envelope_wkb_arrow(mnx, mny, mxx, mxy).alias(geom_col),
@@ -539,7 +546,7 @@ def write_geo_parquet(
     (DELTA_BINARY_PACKED for the SORTED hilbert int64 + id, DELTA_BYTE_ARRAY
     prefix-delta for WKB whose consecutive rows share header + high
     coordinate bytes after the hilbert sort) + zstd. Measured on the bench
-    layouts (scripts/probe_parquet_encoding.py, 3M rows, interleaved reps):
+    layouts (3M rows, interleaved reps):
     envelope layout 76.9 -> 31.5 MB (2.4x) with best write wall 3.9 -> 3.2 s,
     point layout 176.9 -> 145.6 MB (1.22x) with 4.0 -> 2.9 s; row-identical
     content (exceptAll both ways = 0 and per-column bit_xor(xxhash64)

@@ -1,0 +1,70 @@
+"""Spark-free consistency of the package and the driver file.
+
+The driver rows import the package lazily, inside their bodies, so a
+deleted or renamed module only surfaces when that row runs. These checks
+catch it statically: every package module imports, every lazy
+``from duckdb_spatial_spark... import name`` in ``__spark_entry__.py``
+resolves, and every ``oracle_sql()`` key names a registered row.
+"""
+
+import ast
+import importlib
+import pathlib
+import pkgutil
+
+import duckdb_spatial_spark
+import __spark_entry__ as E
+
+_ENTRY = pathlib.Path(E.__file__)
+
+
+def test_every_package_module_imports():
+    names = [
+        m.name
+        for m in pkgutil.walk_packages(
+            duckdb_spatial_spark.__path__, prefix="duckdb_spatial_spark."
+        )
+    ]
+    assert names
+    for name in names:
+        importlib.import_module(name)
+
+
+def _lazy_package_imports():
+    tree = ast.parse(_ENTRY.read_text())
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and node.module
+                and node.module.split(".")[0] == "duckdb_spatial_spark"
+            ):
+                for alias in node.names:
+                    yield fn.name, node.module, alias.name
+
+
+def _resolves(module, name):
+    try:
+        mod = importlib.import_module(module)
+        return hasattr(mod, name) or bool(importlib.import_module(f"{module}.{name}"))
+    except ImportError:
+        return False
+
+
+def test_driver_lazy_imports_resolve():
+    seen = list(_lazy_package_imports())
+    assert seen
+    missing = [
+        f"{fn}: from {module} import {name}"
+        for fn, module, name in seen
+        if not _resolves(module, name)
+    ]
+    assert not missing, "\n".join(missing)
+
+
+def test_every_oracle_names_a_row():
+    rows = set(E.queries()) | set(E.retired_queries())
+    orphans = sorted(set(E.oracle_sql()) - rows)
+    assert not orphans, orphans

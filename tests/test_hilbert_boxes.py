@@ -73,20 +73,34 @@ def test_point_lane_null_semantics(spark):
     """r16 post-sort-WKB refactor of hilbert_cluster_points: bbox, hilbert
     and geom must be NULL iff EITHER coordinate is NULL (the pre-r16 fused
     lane's semantics — a bare rename of x into bbox_min_x would wrongly
-    keep x's value when only y is null)."""
+    keep x's value when only y is null). A NaN coordinate nulls hilbert and
+    geom too, and NULL/NaN rows stay out of the bounds and split sample:
+    a NaN there reaches an undefined float-to-int64 cast."""
+    import warnings
+
     from duckdb_spatial_spark.plans.pruning import hilbert_cluster_points
 
     df = spark.sql(
         """
         SELECT id,
-               CASE WHEN id % 5 = 1 THEN NULL ELSE CAST(id * 3 % 97 AS DOUBLE) END AS x,
+               CASE WHEN id % 5 = 1 THEN NULL
+                    WHEN id = 3 THEN CAST('NaN' AS DOUBLE)
+                    ELSE CAST(id * 3 % 97 AS DOUBLE) END AS x,
                CASE WHEN id % 5 = 2 THEN NULL ELSE CAST(id * 7 % 89 AS DOUBLE) END AS y
         FROM range(200)
         """
     )
-    out = {r.id: r for r in hilbert_cluster_points(df, "x", "y", num_partitions=2).collect()}
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        out = {
+            r.id: r
+            for r in hilbert_cluster_points(df, "x", "y", num_partitions=2).collect()
+        }
     assert len(out) == 200
+    assert out[3].geom is None and out[3].hilbert is None
     for i, r in out.items():
+        if i == 3:
+            continue
         if i % 5 in (1, 2):
             assert r.geom is None and r.hilbert is None
             assert r.bbox_min_x is None and r.bbox_min_y is None

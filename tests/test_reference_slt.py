@@ -86,7 +86,7 @@ def test_reference_corpus(registered, tmp_path):
         "known_deviations": KNOWN_DEVIATIONS,
         "structural_skips": {k: v for k, v in STRUCTURAL.items()},
     }
-    with open(os.path.join(os.path.dirname(__file__), "..", "docs", "SLT_REPORT.json"), "w") as f:
+    with open(tmp_path / "SLT_REPORT.json", "w") as f:
         json.dump(report, f, indent=1)
     assert not failures, "\n".join(failures[:20])
     # regression floor: the corpus currently passes 383 query/statement

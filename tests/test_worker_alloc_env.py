@@ -4,7 +4,8 @@ glibc parses GLIBC_TUNABLES in ld.so at process start; Spark launches
 worker daemons with ``sc.environment`` in the ProcessBuilder env, so the
 injection in ``register_all`` is the one place early enough. These tests
 pin the injection contract; the perf effect itself (page-fault tax once
-per worker instead of once per batch) is measured in OPTIMIZATION_r16.md.
+per worker instead of once per batch): the same 5000-doc gram-hash pass
+costs 0.37 s in sub-4MiB batches and 4.0 s in 8 MiB ones.
 """
 
 import os
