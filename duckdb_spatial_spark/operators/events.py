@@ -1,7 +1,6 @@
 """Event-stream sessionization (the classic events-pipeline operator the
 host engine expresses natively — batch analog of the reference-adjacent
-streaming session semantics; streaming/demo.py carries the stateful TTL
-variants).
+streaming session semantics).
 
   sessionize      per-EVENT session labels: gaps-and-islands over
                   (user, ts) — a new session starts when the gap to the

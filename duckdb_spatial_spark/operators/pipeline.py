@@ -2,7 +2,7 @@
 
 These are the operations a 100 TB pretraining-data pipeline runs between
 raw crawl and tokenized shards: repetition-based quality filtering
-(Gopher rules), benchmark decontamination, deterministic train/val/test
+(Gopher rules), deterministic train/val/test
 splitting and stratified sampling, greedy sequence packing, PII
 scrubbing, corpus-wide line dedup, and per-label embedding centroids.
 
@@ -12,9 +12,6 @@ no engine-specific hash appears in any output column.
 
 Scale notes (100 TB):
   * gopher_repetition  - one mapInPandas projection, zero shuffles.
-  * decontaminate      - benchmark n-gram set broadcast as a frozenset
-                         into one zero-shuffle Arrow pass (default);
-                         broadcast-join plan for oversized benchmarks.
   * hash_split         - pure Column arithmetic (MINSTD LCG), zero
                          shuffles, no UDF.
   * sample_stratified  - one windowed shuffle on the stratum key.
@@ -42,7 +39,6 @@ from ._ascii import ws_split as _ws_split, ws_strip as _ws_strip
 
 __all__ = [
     "gopher_repetition",
-    "decontaminate",
     "hash_split",
     "pack_sequences",
     "embedding_centroids",
@@ -199,133 +195,6 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     return widen_narrow_input(
         df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
     ).mapInPandas(run, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# Benchmark decontamination
-# ---------------------------------------------------------------------------
-
-
-def _gram_array(text_col, n: int):
-    """Array of distinct lowercase word n-grams (n words joined by one
-    space); empty when the doc has fewer than n words. Arrow-batched
-    Python builder (dedup._shingles_py) — the pure-Column spelling
-    (transform+slice+array_join) is CodegenFallback, interpreted per
-    element, and measured ~8x slower at 5k docs."""
-    from .dedup import _shingles_py
-
-    return F.coalesce(_shingles_py(text_col, n), F.array())
-
-
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str | None = None,
-    n: int = 8,
-    method: str = "broadcast",
-    max_bench_grams: int = 5_000_000,
-) -> DataFrame:
-    """Flag documents sharing any lowercase word ``n``-gram with a
-    benchmark/eval set (train-test contamination check).
-
-    Returns (id, n_hits, contaminated) for every input doc, where n_hits
-    counts the *distinct* overlapping n-grams.
-
-    Two plans, identical results:
-
-    * ``"broadcast"`` (default) — the benchmark's distinct gram set
-      (eval suites are small by design) ships to executors ONCE as a
-      broadcast frozenset, and the doc side is a single zero-shuffle
-      Arrow pass: shingle the doc, count set membership, emit the row —
-      no explode, no join, no groupBy, no restore-clean-docs left join.
-      Guarded by ``max_bench_grams`` (one ``limit(max+1)`` collect, so
-      an oversized benchmark fails loudly before the driver fills up)
-      with a pointer here.
-    * ``"join"`` — the r10 shape for benchmark sets too big to hold as
-      a Python set (tens of millions of grams): doc grams explode
-      map-side, hits survive a broadcast join, one shuffle counts them
-      per doc, a left join restores clean docs.
-    """
-    bench_text_col = bench_text_col or text_col
-    bench_grams = (
-        benchmark.select(F.explode(_gram_array(F.col(bench_text_col), n)).alias("gram"))
-        .distinct()
-    )
-    if method == "broadcast":
-        rows = bench_grams.limit(int(max_bench_grams) + 1).collect()
-        if len(rows) > max_bench_grams:
-            raise ValueError(
-                f"decontaminate: benchmark has more than max_bench_grams="
-                f"{max_bench_grams} distinct {n}-grams; pass "
-                f"method='join' (broadcast-join plan) or raise the cap"
-            )
-        bset = frozenset(r[0] for r in rows)
-        bc = docs.sparkSession.sparkContext.broadcast(bset)
-        out_schema = T.StructType(
-            [
-                docs.schema[id_col],
-                T.StructField("n_hits", T.LongType()),
-                T.StructField("contaminated", T.BooleanType()),
-            ]
-        )
-        ii, ti = 0, 1  # the scan runs over select(id, text) below
-        nn = int(n)
-
-        def scan(batches):
-            S = bc.value
-            for pdf in batches:
-                ids, hits = [], []
-                for did, t in zip(pdf.iloc[:, ii], pdf.iloc[:, ti]):
-                    cnt = 0
-                    if t is not None:
-                        toks = _ws_split(str(t).lower())
-                        if nn <= 1:
-                            grams = set(toks)
-                        elif len(toks) < nn:
-                            grams = ()
-                        else:
-                            grams = {
-                                " ".join(toks[i : i + nn])
-                                for i in range(len(toks) - nn + 1)
-                            }
-                        cnt = sum(1 for g in grams if g in S)
-                    ids.append(did)
-                    hits.append(cnt)
-                h = pd.Series(hits, dtype="int64")
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids),
-                        "n_hits": h,
-                        "contaminated": (h > 0).astype(object),
-                    }
-                )
-
-        # input widening measured neutral here (the benchmark gram
-        # collect dominates at small scale) - not applied
-        return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
-            scan, out_schema
-        )
-    if method != "join":
-        raise ValueError(f"decontaminate: unknown method {method!r}")
-    doc_grams = docs.select(
-        F.col(id_col), F.explode(_gram_array(F.col(text_col), n)).alias("gram")
-    )
-    hits = (
-        doc_grams.join(F.broadcast(bench_grams), "gram")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_hits"))
-    )
-    return (
-        docs.select(id_col)
-        .join(hits, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-            (F.coalesce(F.col("n_hits"), F.lit(0)) > 0).alias("contaminated"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -991,103 +860,3 @@ def robots_allowed(
             yield out
 
     return joined.mapInPandas(eval_gen, out_schema)
-
-
-def linear_classifier_score(
-    df: DataFrame,
-    weights,
-    bias: float = 0.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 7,
-    lowercase: bool = False,
-    threshold: float = 0.0,
-    ndigits: int = 6,
-) -> DataFrame:
-    """fastText-style hashed linear quality classifier (Joulin et al.
-    2016 — the "model-based quality filtering" stage of CCNet/LLaMA-class
-    pipelines): documents are scored by a trained weight vector over
-    hashed unigram+bigram buckets.
-
-    ``weights`` is the trained vector (list/ndarray; its length IS the
-    bucket count — train offline however you like, apply here). Per doc:
-    ``clf_raw = bias + mean over grams of weights[bucket(gram)]`` — the
-    fastText average-of-features with a 1-d output. Returns
-    ``(id, clf_grams, clf_raw, clf_keep)`` with ``clf_raw`` rounded
-    half-away-from-zero and the keep decision made from the ROUNDED
-    value on both engines (repo float-parity rule); ``sigmoid`` is
-    monotone, so a probability cut translates to a ``threshold`` in
-    logit space. Empty docs carry no grams and drop (as in DSIR).
-
-    Scale shape: ZERO shuffle — scoring fuses into the gram-hash Arrow
-    pass itself. The trained weight vector rides to executors as one
-    numpy broadcast (8 B/bucket — tens of millions of buckets is a
-    sub-GB broadcast, never a driver-side row materialization), each
-    doc's grams hash vectorized (the batch-global prefix-hash kernel,
-    ``dsir._batch_gram_buckets``) and reduce to (sum, count) within the
-    doc's own row; the output is one narrow mapInPandas with no
-    exchange anywhere. Per-doc summation order is the doc's gram order
-    (segmented ``np.add.reduceat``); with binary-fraction weights the
-    sum is exact in any order, and for general weights a fixed
-    deterministic order is applied."""
-    import numpy as np
-
-    from .dsir import _batch_gram_buckets
-
-    spark = df.sparkSession
-    w = np.asarray([float(x) for x in weights], dtype=np.float64)
-    nb = len(w)
-    if nb == 0:
-        raise ValueError("linear_classifier_score: empty weights")
-    bw = spark.sparkContext.broadcast(w)
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("clf_grams", T.LongType()),
-            T.StructField("clf_raw", T.DoubleType()),
-            T.StructField("clf_keep", T.BooleanType()),
-        ]
-    )
-    ii, ti = 0, 1  # the pass runs over select(id, text) below
-    mul = 10.0 ** int(ndigits)
-    b0 = float(bias)
-    thr = float(threshold)
-    sd = int(seed)
-    lc = bool(lowercase)
-
-    def gen(batches):
-        wv = bw.value
-        for pdf in batches:
-            dids, buckets, counts = _batch_gram_buckets(
-                pdf.iloc[:, ii], pdf.iloc[:, ti], nb, sd, lc
-            )
-            if not dids:
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series([]),
-                        "clf_grams": pd.Series([], dtype="int64"),
-                        "clf_raw": pd.Series([], dtype="float64"),
-                        "clf_keep": pd.Series([], dtype="object"),
-                    }
-                )
-                continue
-            offs = np.zeros(len(counts), dtype=np.int64)
-            np.cumsum(counts[:-1], out=offs[1:])
-            sw = np.add.reduceat(wv[buckets], offs)
-            # same expression association + half-away-from-zero floor as
-            # the SQL oracle (repo float-parity rule)
-            raw = np.floor((b0 + sw / counts) * mul + 0.5) / mul
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(dids),
-                    "clf_grams": pd.Series(counts, dtype="int64"),
-                    "clf_raw": pd.Series(raw, dtype="float64"),
-                    "clf_keep": pd.Series(raw >= thr, dtype="object"),
-                }
-            )
-
-    from ._util import widen_narrow_input
-
-    return widen_narrow_input(
-        df.select(F.col(id_col), F.col(text_col))
-    ).mapInPandas(gen, out_schema)

@@ -60,7 +60,7 @@ def main():
     spark.sparkContext.setLogLevel("FATAL")
 
     con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents".split():
+    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
         con.execute(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")
 
     qs = dict(E.queries())

@@ -1,5 +1,5 @@
-"""Round-6 pipeline operators: gopher filters, decontamination, splits,
-packing, centroids, and the Arrow IPC source."""
+"""Round-6 pipeline operators: gopher filters, splits, packing,
+centroids, and the Arrow IPC source."""
 
 import os
 import tempfile
@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_spatial_spark.operators.pipeline import (
-    decontaminate,
     embedding_centroids,
     gopher_repetition,
     hash_split,
@@ -42,38 +41,6 @@ def test_gopher_repetition_empty_and_clean(spark):
     assert rows[2]["gopher_pass"] is False or rows[2]["n_lines"] == 0
     assert rows[3]["dup_line_frac"] == 0.0
     assert rows[3]["gopher_pass"]
-
-
-def test_decontaminate_flags_shared_ngrams(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "completely different words entirely unrelated text"),
-            (3, "QUICK BROWN FOX jumps high"),  # case-insensitive hit
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(100, "a quick brown fox jumps away")], "doc_id long, text string"
-    )
-    out = {r["doc_id"]: r for r in decontaminate(docs, bench, n=4).collect()}
-    assert out[1]["contaminated"] and out[1]["n_hits"] == 1  # "quick brown fox jumps"
-    assert not out[2]["contaminated"] and out[2]["n_hits"] == 0
-    assert out[3]["contaminated"]
-    # the broadcast-set and join plans are the same operator
-    outj = {
-        r["doc_id"]: r
-        for r in decontaminate(docs, bench, n=4, method="join").collect()
-    }
-    for k in out:
-        assert (out[k]["n_hits"], out[k]["contaminated"]) == (
-            outj[k]["n_hits"], outj[k]["contaminated"]
-        ), k
-    # oversized benchmark fails loudly before the driver fills up
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_bench_grams"):
-        decontaminate(docs, bench, n=1, max_bench_grams=2)
 
 
 def test_hash_split_deterministic_and_balanced(spark):
@@ -174,29 +141,6 @@ def test_arrow_ipc_max_rows_guard(spark):
     df = spark.range(100)
     with pytest.raises(ValueError, match="max_rows"):
         write_arrow_ipc(df, tempfile.mktemp(suffix=".arrow"), max_rows=50)
-
-
-def test_assign_nearest_centroid(spark):
-    from duckdb_spatial_spark.operators.knn import assign_nearest_centroid
-
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0]),
-            (2, [0.9, 0.1]),
-            (3, [0.0, 2.0]),
-            (4, None),  # null vector dropped
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    cent = spark.createDataFrame(
-        [(10, [1.0, 0.0]), (20, [0.0, 1.0])], "label int, centroid array<double>"
-    )
-    out = {r["vec_id"]: (r["assigned"], r["cosine"]) for r in
-           assign_nearest_centroid(df, cent, c_label_col="label").collect()}
-    assert out[1] == (10, 1.0)
-    assert out[3] == (20, 1.0)
-    assert out[2][0] == 10 and out[2][1] > 0.99
-    assert 4 not in out
 
 
 def test_pii_scrub(spark):
@@ -367,45 +311,6 @@ def test_ngram_counts(spark):
     assert uni == {"a": 3, "b": 3}
 
 
-def test_minhash_index_build_query_append(spark, tmp_path):
-    from duckdb_spatial_spark.operators.dedup import (
-        minhash_index_append,
-        minhash_index_build,
-        minhash_index_query,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog again and again today"),
-            (2, "completely different content about spark sql execution engines"),
-            (3, "numbers one two three four five six seven eight nine ten"),
-        ],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "mhidx")
-    minhash_index_build(corpus, idx, bands=16, num_hashes=64)
-
-    batch = spark.createDataFrame(
-        [
-            (101, "the quick brown fox jumps over the lazy dog again and again today"),
-            (102, "entirely novel text with no overlap whatsoever in this corpus"),
-        ],
-        "doc_id long, text string",
-    )
-    hits = minhash_index_query(batch, idx, threshold=0.7).collect()
-    assert [(h.query_id, h.index_id) for h in hits] == [(101, 1)]
-    assert hits[0].est_jaccard == 1.0  # identical text -> identical signature
-
-    # append the novel doc, then a near-copy of it must hit
-    minhash_index_append(batch.filter("doc_id = 102"), idx)
-    batch2 = spark.createDataFrame(
-        [(201, "entirely novel text with no overlap whatsoever in this corpus")],
-        "doc_id long, text string",
-    )
-    hits2 = minhash_index_query(batch2, idx, threshold=0.7).collect()
-    assert [(h.query_id, h.index_id) for h in hits2] == [(201, 102)]
-
-
 def test_url_canonicalize(spark):
     from duckdb_spatial_spark.operators.textops import url_canonicalize
 
@@ -457,23 +362,6 @@ def test_bpe_encode_and_count(spark):
     ).collect()[0].bpe_tokens
     # (a,b) rank 0 fires first -> ab, c</w>; then (ab, c</w>) rank 2 -> abc</w>
     assert one == ["abc</w>"]
-
-
-def test_kmv_distinct_sketch(spark):
-    from duckdb_spatial_spark.operators.sketch import distinct_count_kmv
-
-    # group A: 500 distinct values (estimator path); group B: 5 (exact path)
-    rows = [(("A", f"value-{i}")) for i in range(500)]
-    rows += [("A", f"value-{i}") for i in range(100)]  # duplicates, no effect
-    rows += [("B", f"v{i}") for i in range(5)] * 3
-    df = spark.createDataFrame(rows, "g string, v string")
-    got = {r.g: r.est_distinct for r in distinct_count_kmv(df, "g", "v", k=64).collect()}
-    assert got["B"] == 5.0  # below k -> exact
-    # KMV with k=64 on 500 distinct: relative error ~ 1/sqrt(k-2) ~ 13%
-    assert 300 <= got["A"] <= 750, got["A"]
-    # deterministic: same input -> identical estimate
-    again = {r.g: r.est_distinct for r in distinct_count_kmv(df, "g", "v", k=64).collect()}
-    assert again == got
 
 
 def test_chunk_documents_windows(spark):
@@ -636,54 +524,6 @@ def test_text_entropy(spark):
     assert got[4].token_entropy == math.floor(math.log(5) * 1e6 + 0.5) / 1e6
 
 
-def test_minhash_index_poly131_space(spark, tmp_path):
-    """The signature space is an index property: poly131 builds store the
-    hash name in the sidecar, queries and appends follow it, and exact
-    copies hit at est_jaccard 1.0 exactly as in the xxhash64 space."""
-    import json
-
-    from duckdb_spatial_spark.operators.dedup import (
-        minhash_index_append,
-        minhash_index_build,
-        minhash_index_query,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog again and again today"),
-            (2, "completely different content about spark sql execution engines"),
-        ],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "mhidx_poly")
-    minhash_index_build(corpus, idx, num_hashes=8, bands=4, hash="poly131")
-    meta = json.loads((tmp_path / "mhidx_poly" / "_minhash_index.json").read_text())
-    assert meta["hash"] == "poly131"
-
-    batch = spark.createDataFrame(
-        [(101, "the quick brown fox jumps over the lazy dog again and again today")],
-        "doc_id long, text string",
-    )
-    hits = minhash_index_query(batch, idx, threshold=0.99).collect()
-    assert [(h.query_id, h.index_id, h.est_jaccard) for h in hits] == [(101, 1, 1.0)]
-
-    # append uses the sidecar space too: a copy of an appended doc hits
-    nov = spark.createDataFrame(
-        [(102, "entirely novel text with no overlap whatsoever in this corpus")],
-        "doc_id long, text string",
-    )
-    minhash_index_append(nov, idx)
-    hits2 = minhash_index_query(
-        nov.selectExpr("doc_id + 100 AS doc_id", "text"), idx, threshold=0.99
-    ).collect()
-    assert [(h.query_id, h.index_id) for h in hits2] == [(202, 102)]
-
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown minhash index hash"):
-        minhash_index_build(corpus, str(tmp_path / "bad"), hash="md5")
-
-
 def test_winnowing_short_doc_signed_fingerprint(spark):
     """A doc with <= window k-grams emits exactly one fingerprint, and a
     uint64 window min >= 2^63 must wrap into the signed int64 column
@@ -701,70 +541,3 @@ def test_winnowing_short_doc_signed_fingerprint(spark):
         by_id.setdefault(r.id, []).append(r.fingerprint)
     assert len(by_id) == 64 and all(len(fps) == 1 for fps in by_id.values())
     assert any(fp < 0 for fps in by_id.values() for fp in fps)
-
-
-def test_semantic_dedup_hot_cluster_guard(spark):
-    """SemDeDup's quadratic stage is per-cluster: a cluster above
-    max_cluster_size must fail loudly BEFORE the self-join launches, and
-    the same corpus must pass with the guard raised/disabled."""
-    import pytest
-
-    from duckdb_spatial_spark.operators.dedup import semantic_dedup
-
-    # 40 vectors, all nearest to centroid "hot" (one is a genuine dup pair)
-    vecs = [(i, [1.0, 0.001 * i]) for i in range(40)]
-    vecs.append((100, [1.0, 0.0]))  # exact dup of vec 0
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    cents = spark.createDataFrame(
-        [("hot", [1.0, 0.0]), ("cold", [-1.0, 0.0])],
-        "label string, centroid array<double>",
-    )
-
-    with pytest.raises(ValueError, match="max_cluster_size=10"):
-        semantic_dedup(df, cents, threshold=0.9999, max_cluster_size=10)
-
-    for kw in ({"max_cluster_size": 1000}, {"max_cluster_size": None}):
-        out = {r.vec_id: r for r in semantic_dedup(df, cents, threshold=0.9999, **kw).collect()}
-        assert len(out) == 41
-        assert out[100].rep_id == 0 and not out[100].keep and out[0].keep
-
-
-def test_linear_classifier_score(spark):
-    """fastText-style hashed linear classifier: hand-computed parity on a
-    tiny corpus + the binary-fraction exactness property (weights are
-    multiples of 1/1024, so the mean is order-independent)."""
-    from duckdb_spatial_spark.operators.dsir import _poly_bucket
-    from duckdb_spatial_spark.operators.pipeline import linear_classifier_score
-
-    nb = 64
-    w = [(((b * 31) % 129) - 64) / 1024.0 for b in range(nb)]
-    docs = [
-        (1, "good words here"),
-        (2, "bad content bad content"),
-        (3, ""),          # no grams -> no row
-        (4, None),        # null -> no row
-        (5, "single"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           linear_classifier_score(df, w, bias=0.25, seed=7, threshold=0.2).collect()}
-    assert 3 not in out and 4 not in out
-
-    def expect(text):
-        toks = text.split()
-        grams = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-        s = sum(w[_poly_bucket(g, nb, 7)] for g in grams)
-        import math
-        raw = math.floor((0.25 + s / len(grams)) * 1e6 + 0.5) / 1e6
-        return len(grams), raw
-
-    for did, text in [(1, docs[0][1]), (2, docs[1][1]), (5, "single")]:
-        n, raw = expect(text)
-        r = out[did]
-        assert (r.clf_grams, r.clf_raw) == (n, raw), (did, r)
-        assert r.clf_keep == (raw >= 0.2)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="empty weights"):
-        linear_classifier_score(df, [])

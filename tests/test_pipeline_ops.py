@@ -1,12 +1,8 @@
-"""Dedup / ANN / text / multimodal operators over the real testdata tables."""
+"""Text operators over the real testdata tables."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from duckdb_spatial_spark.operators import dedup as D
-from duckdb_spatial_spark.operators import knn as K
-from duckdb_spatial_spark.operators import multimodal as M
 from duckdb_spatial_spark.operators import textops as X
 
 SF = "/root/testdata/sf0.001"
@@ -15,183 +11,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet")
-
-
-def test_dedup_exact(spark, docs):
-    dup = docs.union(docs.limit(20))  # inject exact dups
-    out = D.dedup_exact(dup, "text", id_col="doc_id")
-    assert out.count() == docs.select("text").distinct().count()
-
-
-def test_ngram_jaccard_pairs(spark):
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog today"),
-        (2, "the quick brown fox jumps over the lazy dog today"),  # identical
-        (3, "the quick brown fox jumps over the lazy cat today"),  # near-dup
-        (4, "completely different text about spark and parquet files"),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    out = {(r.id_a, r.id_b): r.jaccard for r in D.ngram_jaccard_pairs(df, "id", "text", n=3, threshold=0.3).collect()}
-    assert out[(1, 2)] == 1.0
-    assert (1, 3) in out and 0.3 <= out[(1, 3)] < 1.0
-    assert not any(4 in p for p in out)
-
-
-def test_ngram_jaccard_df_cut_bounds_candidates(spark):
-    # 50 docs all sharing one boilerplate lead-in, pairwise near-dups only
-    # inside two planted pairs; with the cut the boilerplate shingles stop
-    # generating k^2 candidates but discovered pairs keep exact jaccard
-    boiler = "subscribe to our newsletter for updates "
-    rows = [(i, boiler + f"unique body {i} " + "filler words " * 3) for i in range(50)]
-    rows.append((100, "the quick brown fox jumps over the lazy dog again and again"))
-    rows.append((101, "the quick brown fox jumps over the lazy dog again and again"))
-    df = spark.createDataFrame(rows, "id long, text string")
-    cut = D.ngram_jaccard_pairs(df, "id", "text", n=3, threshold=0.3, max_shingle_df=10)
-    nocut = D.ngram_jaccard_pairs(df, "id", "text", n=3, threshold=0.3, max_shingle_df=None)
-    got_cut = {(r.id_a, r.id_b): r.jaccard for r in cut.collect()}
-    got_all = {(r.id_a, r.id_b): r.jaccard for r in nocut.collect()}
-    assert got_cut[(100, 101)] == got_all[(100, 101)] == 1.0
-    # every pair the cut lane reports carries the same exact jaccard
-    for k, v in got_cut.items():
-        assert got_all[k] == v
-    # pairs whose ENTIRE overlap is boilerplate (df 50 > cut 10) are not
-    # discovered — that is the candidate bound doing its job
-    assert not any(a < 50 and b < 50 for (a, b) in got_cut)
-    assert any(a < 50 and b < 50 for (a, b) in got_all)
-
-
-def test_minhash_lsh_recall(spark, docs):
-    # identical docs must always collide in every band
-    dup = docs.limit(30).union(docs.limit(30).withColumn("doc_id", F.col("doc_id") + 100000))
-    pairs = D.minhash_lsh_pairs(dup, "doc_id", "text", n=3, num_hashes=32, bands=8, threshold=0.99)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    expected = {(i, i + 100000) for i in [r.doc_id for r in docs.limit(30).collect()]}
-    assert expected <= got
-
-
-def test_simhash_neardup(spark):
-    rows = [
-        (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5),
-        (2, "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5),
-        (3, "one two three four five six seven eight nine ten " * 5),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    sh = D.simhash(df, "id", "text").collect()
-    by_id = {r.id: r.simhash for r in sh}
-    assert by_id[1] == by_id[2] != by_id[3]
-    pairs = {(r.id_a, r.id_b) for r in D.simhash_neardup_pairs(df, "id", "text", max_hamming=3).collect()}
-    assert (1, 2) in pairs and (1, 3) not in pairs
-
-
-def test_embedding_neardup_and_brute_topk(spark, emb):
-    emb2 = emb.withColumn("embedding", F.transform("embedding", lambda x: x.cast("float")))
-    queries = emb2.limit(5)
-    # max_queries guard fires before any broadcast (fused limit+collect)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_queries"):
-        K.ann_brute_topk(emb2, emb2, k=5, max_queries=3)
-    topk = K.ann_brute_topk(emb2, queries, k=5).collect()
-    by_q = {}
-    for r in topk:
-        by_q.setdefault(r.query_id, []).append(r)
-    assert set(by_q) == {r.vec_id for r in queries.collect()}
-    for qid, rows in by_q.items():
-        rows.sort(key=lambda r: r.rank)
-        # self is its own nearest neighbor at cosine ~1
-        assert rows[0].neighbor_id == qid and rows[0].cosine > 0.999999
-        assert len(rows) == 5
-        assert all(rows[i].cosine >= rows[i + 1].cosine - 1e-12 for i in range(4))
-
-
-def test_embedding_neardup_blocked_matches_exact(spark, emb):
-    emb2 = emb.withColumn("embedding", F.transform("embedding", lambda x: x.cast("double")))
-    exact = D.embedding_neardup_pairs(emb2, "vec_id", "embedding", threshold=0.35, strategy="exact")
-    er = sorted((r.id_a, r.id_b, round(r.cosine, 9)) for r in exact.collect())
-    # small block_size forces many blocks -> same-block + cross-block paths
-    blocked = D.embedding_neardup_pairs(
-        emb2, "vec_id", "embedding", threshold=0.35, strategy="blocked", block_size=64
-    )
-    br = sorted((r.id_a, r.id_b, round(r.cosine, 9)) for r in blocked.collect())
-    assert er == br and len(er) > 0
-
-
-def test_embedding_neardup_blocked_string_ids(spark, emb):
-    # string id columns must survive the blocked lane (schema + min/max pair
-    # ordering are derived from the input id type, not hardcoded long)
-    emb2 = emb.select(
-        F.concat(F.lit("doc-"), F.lpad(F.col("vec_id").cast("string"), 6, "0")).alias("sid"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    out = D.embedding_neardup_pairs(
-        emb2, "sid", "embedding", threshold=0.35, strategy="blocked", block_size=64
-    )
-    assert dict(out.dtypes)["id_a"] == "string"
-    rows = out.collect()
-    assert len(rows) > 0
-    assert all(r.id_a < r.id_b for r in rows)
-
-
-def test_embedding_neardup_lsh_default_no_cartesian(spark):
-    # planted near-dup clusters: base vector + tiny noise => cosine > 0.99
-    rng = np.random.RandomState(42)
-    base = rng.standard_normal((20, 32))
-    rows = []
-    vid = 0
-    expected = set()
-    for c in range(20):
-        members = []
-        for k in range(3):
-            v = base[c] + rng.standard_normal(32) * 0.02
-            rows.append((vid, [float(x) for x in v]))
-            members.append(vid)
-            vid += 1
-        for i in range(3):
-            for j in range(i + 1, 3):
-                expected.add((members[i], members[j]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = D.embedding_neardup_pairs(df, "vec_id", "embedding", threshold=0.95)  # auto -> lsh
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    got = {(r.id_a, r.id_b) for r in out.collect()}
-    # every planted intra-cluster pair found, no cross-cluster false dups
-    assert expected <= got
-    for a, b in got - expected:
-        assert a // 3 == b // 3
-
-
-def test_ann_lsh_and_ivf_recall(spark, emb):
-    emb2 = emb.withColumn("embedding", F.transform("embedding", lambda x: x.cast("float")))
-    queries = emb2.limit(10)
-    exact = K.ann_brute_topk(emb2, queries, k=5)
-    exact_pairs = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    # weak neighbors (near-random vectors) need coarse buckets + multiprobe
-    lsh = K.ann_lsh_topk(emb2, queries, k=5, bits=4, tables=8)
-    lsh_pairs = {(r.query_id, r.neighbor_id) for r in lsh.collect()}
-    recall = len(exact_pairs & lsh_pairs) / len(exact_pairs)
-    assert recall >= 0.5, f"LSH recall too low: {recall}"
-    ivf = K.ann_ivf_topk(emb2, queries, k=5, nlist=8, nprobe=3)
-    ivf_pairs = {(r.query_id, r.neighbor_id) for r in ivf.collect()}
-    recall_ivf = len(exact_pairs & ivf_pairs) / len(exact_pairs)
-    assert recall_ivf >= 0.6, f"IVF recall too low: {recall_ivf}"
-    # persistent IVF index: build once, query = identical results to the
-    # per-call path (same seed/params => same quantizer and rerank)
-    import tempfile
-
-    idx = tempfile.mkdtemp() + "/ivf"
-    n = K.build_ivf_index(emb2, idx, nlist=8)
-    assert n == 8
-    via_idx = K.ivf_index_query(queries, idx, k=5, nprobe=3)
-    idx_pairs = {(r.query_id, r.neighbor_id) for r in via_idx.collect()}
-    assert idx_pairs == ivf_pairs
-    # probed-cell partition filter reaches the scan
-    plan = via_idx._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or "cell" in plan
 
 
 def test_text_metrics_quality_langid(spark, docs):
@@ -264,135 +83,3 @@ def test_fingerprints(spark, docs):
         1817948233958924258,
         2361024517637207965,
     ]
-
-
-def test_multimodal_plumbing(spark):
-    import struct as st
-
-    png = b"\x89PNG\r\n\x1a\n" + b"\x00" * 8 + (640).to_bytes(4, "big") + (480).to_bytes(4, "big") + b"\x00" * 10
-    gif = b"GIF89a" + (320).to_bytes(2, "little") + (200).to_bytes(2, "little") + b"\x00" * 8
-    wav = b"RIFF" + b"\x00" * 4 + b"WAVE" + b"fmt " + b"\x00" * 4 + st.pack("<HH", 1, 2) + st.pack("<I", 44100) + b"\x00" * 8
-    df = spark.createDataFrame([(1, bytearray(png)), (2, bytearray(gif))], "id long, image binary")
-    meta = {r.id: r.image_meta for r in M.image_metadata(df).collect()}
-    assert (meta[1].width, meta[1].height, meta[1].format) == (640, 480, "png")
-    assert (meta[2].width, meta[2].height, meta[2].format) == (320, 200, "gif")
-
-    feats = M.image_features(df, dim=64).collect()
-    assert all(len(r.features) == 64 for r in feats)
-    s = sum(feats[0].features)
-    assert abs(s - 1.0) < 1e-3  # histogram normalized to unit mass
-
-    adf = spark.createDataFrame([(1, bytearray(wav))], "id long, audio binary")
-    am = M.audio_metadata(adf).collect()[0].audio_meta
-    assert am.sample_rate == 44100 and am.format == "wav"
-
-    # resize is now REAL for decodable formats; these synthetic headers are
-    # not decodable PNG/GIF payloads, so they resolve to NULL (round-4:
-    # see test_codecs.py for the real-decode coverage)
-    resized = M.image_resize(df).collect()
-    assert all(r.resized is None for r in resized)
-    # video sampling is REAL for uncompressed AVI since round 6 (see
-    # test_codecs.py::test_video_frame_sample_spark); a frame with no
-    # matching column still fails loudly
-    with pytest.raises(ValueError):
-        M.video_frame_sample(df)
-
-
-def test_ngram_jaccard_df_cut(spark):
-    """max_shingle_df drops boilerplate shingles from the join side."""
-    boiler = "lorem ipsum dolor sit amet " * 3
-    rows = [(i, boiler + f"unique tail {i} {i*7} {i*13}") for i in range(20)]
-    rows.append((100, "alpha beta gamma delta " * 4))
-    rows.append((101, "alpha beta gamma delta " * 4))
-    df = spark.createDataFrame(rows, "id long, text string")
-    # without the cut, boilerplate links all 20 docs
-    full = D.ngram_jaccard_pairs(df, "id", "text", n=3, threshold=0.3)
-    n_full = full.count()
-    cut = D.ngram_jaccard_pairs(df, "id", "text", n=3, threshold=0.3, max_shingle_df=5)
-    pairs = {(r.id_a, r.id_b) for r in cut.collect()}
-    assert (100, 101) in pairs          # true duplicates survive the cut
-    assert cut.count() < n_full         # boilerplate pairs pruned
-
-
-def test_duplicate_clusters(spark):
-    """Connected components (large-star/small-star): chains collapse to the
-    min id, separate components stay separate, singletons self-label."""
-    pairs = [(i, i + 1) for i in range(49)] + [(101, 100), (300, 200)]
-    pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in list(range(50)) + [100, 101, 200, 300, 999]], "id long"
-    )
-    m = {r["id"]: r["cluster_id"] for r in D.duplicate_clusters(pdf, nodes=nodes).collect()}
-    assert all(m[i] == 0 for i in range(50))        # 50-chain needs log-round convergence
-    assert m[100] == 100 and m[101] == 100
-    assert m[200] == 200 and m[300] == 200
-    assert m[999] == 999                            # singleton from nodes=
-    # without nodes=, only pair members come back
-    m2 = {r["id"]: r["cluster_id"] for r in D.duplicate_clusters(pdf).collect()}
-    assert 999 not in m2 and len(m2) == 54
-
-
-def test_ivfpq_index_recall_and_compression(spark, emb):
-    """IVF-PQ (Jégou et al. 2011): codes are m bytes per vector, the ADC
-    scorer touches no floats, and recall vs the exact baseline must hold
-    on the near-random embeddings with generous probing."""
-    import tempfile
-
-    emb2 = emb.withColumn("embedding", F.transform("embedding", lambda x: x.cast("float")))
-    dim = len(emb2.first().embedding)
-    m = next(mm for mm in (8, 4, 2, 1) if dim % mm == 0)
-    queries = emb2.limit(10)
-    exact = K.ann_brute_topk(emb2, queries, k=5)
-    exact_pairs = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-
-    idx = tempfile.mkdtemp() + "/ivfpq"
-    n = K.build_ivfpq_index(emb2, idx, nlist=8, m=m, nbits=8)
-    assert n == 8
-    out = K.ivfpq_index_query(queries, idx, k=5, nprobe=8)  # probe all: isolate PQ error
-    rows = out.collect()
-    got_pairs = {(r.query_id, r.neighbor_id) for r in rows}
-    recall = len(exact_pairs & got_pairs) / len(exact_pairs)
-    assert recall >= 0.5, f"IVF-PQ recall too low: {recall}"
-    # ADC approximates cosine: scores bounded and ranked descending
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append((r.rank, r.score_adc))
-    for q, lst in by_q.items():
-        lst.sort()
-        scores = [s for _, s in lst]
-        assert scores == sorted(scores, reverse=True)
-        assert all(-1.5 < s < 1.5 for s in scores)
-    # the stored codes really are m bytes per vector
-    codes = spark.read.parquet(f"{idx}/codes")
-    lens = codes.selectExpr("length(code) AS l").distinct().collect()
-    assert [r.l for r in lens] == [m]
-    # a query that IS a base vector must retrieve itself at rank 1
-    # (its code reconstructs its own residual cell-exactly enough)
-    self_q = emb2.limit(3)
-    self_hits = {
-        r.query_id: r.neighbor_id
-        for r in K.ivfpq_index_query(self_q, idx, k=1, nprobe=8).collect()
-    }
-    matched = sum(1 for q, nb in self_hits.items() if q == nb)
-    assert matched >= 2, f"self-retrieval failed: {self_hits}"
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not divisible"):
-        K.build_ivfpq_index(emb2, tempfile.mkdtemp() + "/bad", nlist=4, m=dim + 1)
-
-
-def test_minhash_verify_undefined_jaccard_dropped(spark):
-    """Undefined Jaccard (null text, sub-n-token docs with empty shingle
-    sets) must come back as a real null from the verify lane — Spark
-    orders NaN above every number, so a surviving NaN would PASS the
-    `jaccard >= threshold` filter and emit a bogus pair."""
-    rows = [(1, "too short"), (2, "too short"),
-            (3, None), (4, None),
-            (5, "alpha beta gamma delta " * 10),
-            (6, "alpha beta gamma delta " * 10)]
-    df = spark.createDataFrame(rows, "id long, text string")
-    pairs = D.minhash_lsh_pairs(df, "id", "text", n=3, num_hashes=32,
-                                bands=8, threshold=0.1)
-    got = sorted((r.id_a, r.id_b, r.jaccard) for r in pairs.collect())
-    assert got == [(5, 6, 1.0)]

@@ -35,7 +35,7 @@ def duck_con():
 
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem"
-              " events documents").split():
+              " events documents embeddings").split():
         con.execute(f"CREATE VIEW {t} AS FROM '{_SF_DIR}/{t}.parquet'")
     yield con
     con.close()

@@ -1,68 +1,4 @@
-"""Structured Streaming: windowed geofence counts + stateful dedup."""
-
-import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from duckdb_spatial_spark.streaming import streaming_envelope_counts, streaming_session_dedup
-
-
-def test_streaming_envelope_counts(spark, tmp_path):
-    src = str(tmp_path / "stream_src")
-    schema = "id long, ts timestamp, x double, y double"
-    rows = []
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1)
-    for i in range(1000):
-        rows.append(
-            (i, base + dt.timedelta(seconds=30 * i), float(i % 1000), float((i * 7) % 1000))
-        )
-    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(src)
-
-    events = spark.readStream.schema(schema).parquet(src)
-    agg = streaming_envelope_counts(events, envelope=(100.0, 100.0, 500.0, 500.0))
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("geofence_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT sum(n_hits) AS s FROM geofence_out").collect()[0].s
-    # batch parity
-    batch = streaming_envelope_counts(
-        spark.read.parquet(src), envelope=(100.0, 100.0, 500.0, 500.0)
-    )
-    expected = batch.agg(F.sum("n_hits")).collect()[0][0]
-    # append mode emits only watermark-closed windows; all but the last close
-    assert got is not None and expected is not None
-    assert got <= expected and got >= expected * 0.8
-
-
-def test_streaming_session_dedup(spark, tmp_path):
-    src = str(tmp_path / "docs_src")
-    rows = [(i, f"text {i % 30}") for i in range(200)]  # 30 distinct texts
-    spark.createDataFrame(rows, "doc_id long, text string").write.mode("overwrite").parquet(src)
-
-    docs = spark.readStream.schema("doc_id long, text string").parquet(src)
-    out = streaming_session_dedup(docs)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    n = spark.sql("SELECT count(*) AS n FROM dedup_out").collect()[0].n
-    assert n == 30
-    # batch parity path
-    nb = streaming_session_dedup(spark.read.parquet(src)).count()
-    assert nb == 30
+"""Structured Streaming: stream-static spatial join."""
 
 
 def test_streaming_spatial_join(spark, tmp_path):
@@ -113,258 +49,3 @@ def test_streaming_spatial_join(spark, tmp_path):
         ).select("pid", "rid").collect()
     }
     assert got == expected and len(expected) > 20
-
-
-def test_streaming_session_dedup_ttl(spark, tmp_path):
-    """ProcessingTimeTimeout TTL: an expired fingerprint is evicted, so a
-    duplicate arriving after the TTL is re-emitted as first-seen (the
-    bounded-state contract for a 100 TB/day stream). One continuous query;
-    timeout batches fire between file arrivals. TTL 5s >> the file-source
-    discovery latency so in-window suppression is observable."""
-    import time
-
-    src = str(tmp_path / "ttl_src")
-    schema = "doc_id long, text string"
-    spark.createDataFrame([(1, "dup"), (2, "uniq")], schema).write.mode(
-        "overwrite"
-    ).parquet(src)
-
-    docs = spark.readStream.schema(schema).parquet(src)
-    out = streaming_session_dedup(docs, state_ttl_ms=5000)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ttl_out")
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-
-    def rows():
-        return {(r.fp, r.doc_id) for r in spark.sql("SELECT * FROM ttl_out").collect()}
-
-    def wait_for(n, deadline=60.0):
-        t0 = time.time()
-        while time.time() - t0 < deadline:
-            got = rows()
-            if len(got) >= n:
-                return got
-            time.sleep(0.2)
-        raise AssertionError(f"timed out waiting for {n} rows; have {rows()}")
-
-    try:
-        got1 = wait_for(2)
-        assert {d for _, d in got1} == {1, 2}
-        fp_dup = next(fp for fp, d in got1 if d == 1)
-        # duplicate content within the TTL window is suppressed
-        spark.createDataFrame([(3, "dup")], schema).write.mode("append").parquet(src)
-        time.sleep(2.5)  # well under the 5s TTL; id=3 is processed by now
-        assert {d for _, d in rows()} == {1, 2}
-        # idle past the TTL -> the timeout tick evicts the fingerprints;
-        # the same content arrives again and is re-emitted as first-seen
-        time.sleep(8.0)
-        spark.createDataFrame([(9, "dup")], schema).write.mode("append").parquet(src)
-        got3 = wait_for(3)
-        assert (fp_dup, 9) in got3
-    finally:
-        q.stop()
-
-
-def test_streaming_extent_agg(spark, tmp_path):
-    import datetime as dt
-
-    from duckdb_spatial_spark.streaming import streaming_extent_agg
-
-    src = str(tmp_path / "ext_src")
-    schema = "ts timestamp, x double, y double"
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (base + dt.timedelta(seconds=30 * i), float(i % 400), float((i * 7) % 400))
-        for i in range(600)
-    ]
-    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        streaming_extent_agg(stream)
-        .writeStream.format("memory")
-        .queryName("ext_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r.window_start: r for r in spark.sql("SELECT * FROM ext_out").collect()
-    }
-    # batch parity
-    want = {
-        r.window_start: r
-        for r in streaming_extent_agg(spark.read.parquet(src)).collect()
-    }
-    assert set(got) == set(want) and len(got) > 1
-    for k in want:
-        assert (got[k].min_x, got[k].max_y, got[k].n) == (
-            want[k].min_x, want[k].max_y, want[k].n
-        )
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """Streaming session_window aggregation equals the batch
-    session_stats result row-for-row (they are one plan — the streaming
-    run adds only the watermark), on real event data."""
-    from duckdb_spatial_spark.operators.events import session_stats
-    from duckdb_spatial_spark.streaming import streaming_sessionize
-
-    src = str(tmp_path / "sess_src")
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .selectExpr("CAST(ts AS TIMESTAMP) AS ts", "user_id", "value")
-    )
-    ev.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("ts timestamp, user_id bigint, value double").parquet(src)
-    q = (
-        streaming_sessionize(stream, gap="900 seconds", value_col="value")
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r.user_id, r.session_start, r.session_end): (r.n_events, round(r.sum_value, 6))
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-    want = {
-        (r.user_id, r.session_start, r.session_end): (r.n_events, round(r.sum_value, 6))
-        for r in session_stats(
-            spark.read.parquet(src), gap_seconds=900, value_col="value"
-        ).collect()
-    }
-    assert got == want and len(got) > 10
-
-
-def test_streaming_tagged_transform_batch_parity(spark):
-    # unified API: the same plan works on a batch frame; the tag drives
-    # the source CRS (3857 -> CRS84 closed form)
-    import math
-
-    from duckdb_spatial_spark.functions import register_all
-    from duckdb_spatial_spark.streaming import streaming_tagged_transform
-
-    register_all(spark)
-    df = spark.sql(
-        "SELECT timestamp_seconds(1704067200 + id) AS ts,"
-        " CAST(id * 100000 AS DOUBLE) AS x, CAST(500000 AS DOUBLE) AS y"
-        " FROM range(10) AS t(id)"
-    )
-    out = streaming_tagged_transform(df, "OGC:CRS84", crs="EPSG:3857").collect()
-    assert len(out) == 1
-    r = out[0]
-    a = 6378137.0
-    assert abs(r.min_x - 0.0) < 1e-9
-    assert abs(r.max_x - math.degrees(9 * 100000 / a)) < 1e-9
-    assert abs(r.min_y - math.degrees(2 * math.atan(math.exp(500000 / a))
-                                      - math.pi / 2)) < 1e-9
-    assert r.n == 10
-
-
-def test_streaming_ivf_probe_stream(spark, tmp_path):
-    import numpy as np
-
-    from duckdb_spatial_spark.operators.knn import build_ivf_index
-    from duckdb_spatial_spark.streaming import streaming_ivf_probe
-
-    rng = np.random.default_rng(7)
-    vecs = rng.normal(size=(200, 16)).astype(float)
-    base = spark.createDataFrame(
-        [(i, [float(v) for v in vecs[i]]) for i in range(200)],
-        "vec_id long, embedding array<float>",
-    )
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(base, idx, nlist=4)
-    qsrc = str(tmp_path / "queries")
-    base.filter("vec_id < 5").write.parquet(qsrc)
-    stream = spark.readStream.schema(
-        "vec_id bigint, embedding array<float>").parquet(qsrc)
-    out = streaming_ivf_probe(stream, idx, k=3, nprobe=2)
-    q = (out.writeStream.format("memory").queryName("ivfprobe_t")
-         .outputMode("complete").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    rows = spark.table("ivfprobe_t").collect()
-    assert len(rows) == 5
-    for r in rows:
-        # self-hit at rank 1 with cosine ~1
-        assert r.topk[0].b_id == r.q_id
-        assert abs(r.topk[0].cosine - 1.0) < 1e-6
-        assert len(r.topk) == 3
-
-
-def test_streaming_minhash_probe(spark, tmp_path):
-    from duckdb_spatial_spark.operators.dedup import minhash_index_build
-    from duckdb_spatial_spark.streaming import streaming_minhash_probe
-
-    base = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta{i} eta theta iota kappa")
-         for i in range(20)],
-        "doc_id long, text string")
-    idx = str(tmp_path / "mh")
-    minhash_index_build(base, idx, num_hashes=8, bands=4, hash="poly131")
-    # stream: one exact copy of doc 3 plus one unrelated doc
-    probe = spark.createDataFrame(
-        [(1003, "alpha beta gamma delta epsilon zeta3 eta theta iota kappa"),
-         (2000, "completely different words nothing shared here at all")],
-        "doc_id long, text string")
-    qsrc = str(tmp_path / "probe")
-    probe.write.parquet(qsrc)
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(qsrc)
-    out = streaming_minhash_probe(stream, idx, threshold=0.99)
-    q = (out.writeStream.format("memory").queryName("mhprobe_t")
-         .outputMode("complete").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    rows = spark.table("mhprobe_t").collect()
-    assert len(rows) == 1 and rows[0].query_id == 1003
-    assert [m.index_id for m in rows[0].matches] == [3]
-    assert rows[0].matches[0].est_jaccard == 1.0
-    # non-poly131 index refuses loudly
-    import pytest as _pytest
-    minhash_index_build(base, str(tmp_path / "mhx"), num_hashes=8, bands=4)
-    with _pytest.raises(ValueError, match="poly131"):
-        streaming_minhash_probe(stream, str(tmp_path / "mhx"))
-
-
-def test_streaming_tagged_transform_vertical_grid(spark, tmp_path):
-    """z_col path (r16): compound 'EPSG:4326+5703' tag resolves the GTX
-    geoid grid inside the plan (batch parity of the streaming vertical
-    probe) — the synthetic affine undulation N = 2 + 0.5*(lon+100) +
-    0.25*(lat-30) is exact under bilinear interpolation at
-    binary-fraction coordinates."""
-    import os
-    import struct
-
-    from duckdb_spatial_spark.functions import register_all
-    from duckdb_spatial_spark.streaming import streaming_tagged_transform
-
-    register_all(spark)
-    gd = os.path.join("spark-warehouse", "proj_grids")
-    os.makedirs(gd, exist_ok=True)
-    with open(os.path.join(gd, "epsg_5703.gtx"), "wb") as f:
-        f.write(struct.pack(">ddddii", 30.0, -100.0, 1.0, 1.0, 11, 11))
-        for i in range(11):
-            for j in range(11):
-                f.write(struct.pack(">f", 2.0 + 0.5 * j + 0.25 * i))
-    df = spark.sql(
-        "SELECT timestamp_seconds(1704067200 + id) AS ts,"
-        " -95.5D AS x, 35.25D AS y, CAST(id AS DOUBLE) * 0.5 AS h"
-        " FROM range(4) AS t(id)"
-    )
-    out = streaming_tagged_transform(
-        df, "EPSG:4326", crs="EPSG:4326+5703", z_col="h").collect()
-    assert len(out) == 1
-    r = out[0]
-    n_und = 2 + 0.5 * (-95.5 + 100) + 0.25 * (35.25 - 30)  # = 5.5625
-    assert (r.min_x, r.max_x) == (-95.5, -95.5)
-    assert (r.min_y, r.max_y) == (35.25, 35.25)
-    assert r.min_z == n_und and r.max_z == 1.5 + n_und
-    assert r.n == 4
