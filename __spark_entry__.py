@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 Each ``queries()`` entry is a Spark-first implementation of an operator
-from SURVEY.md §2 (or a beyond-reference pipeline operator); the matching
+from SURVEY.md §2 (or a plain Spark SQL relational row); the matching
 ``oracle_sql()`` entry is plain DuckDB SQL over the same parquet views.
 Geometry is derived deterministically from the numeric testdata columns
 (integer arithmetic -> identical in both engines); double outputs are
@@ -23,6 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# the testdata parquet tables every row and oracle reads, one view each
+TABLES = (
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents",
+)
+
+
 def _prep(spark: SparkSession, sf_dir: str):
     import duckdb_spatial_spark
 
@@ -35,9 +42,7 @@ def _prep(spark: SparkSession, sf_dir: str):
     # Pin naive-timestamp interpretation to UTC so unix_micros(cast(ntz as
     # timestamp)) equals DuckDB's epoch(ts) regardless of machine timezone.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings".split()
-    ):
+    for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
     return spark
 
@@ -1409,7 +1414,7 @@ def q_window_running_total(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# pipeline operators over documents / embeddings
+# documents (plain Spark SQL)
 # --------------------------------------------------------------------------
 
 def q_dedup_exact(spark, sf_dir):
@@ -1417,14 +1422,6 @@ def q_dedup_exact(spark, sf_dir):
     return spark.sql(
         "SELECT source, count(*) AS n_docs, count(DISTINCT text) AS n_distinct FROM documents GROUP BY source"
     )
-
-
-def q_text_token_count(spark, sf_dir):
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import token_count
-
-    docs = spark.table("documents")
-    return docs.select("doc_id", token_count("text").alias("n_tok"))
 
 
 def q_text_metrics(spark, sf_dir):
@@ -1436,117 +1433,6 @@ def q_text_metrics(spark, sf_dir):
                round(length(regexp_replace(text, '[^0-9]', '')) / length(text), 6) AS digit_ratio
         FROM documents
         """
-    )
-
-
-def q_text_metrics_full(spark, sf_dir):
-    """The FULL text_metrics projection (operators/textops.py) — pins the
-    r9 whole-token-regex rewrite: token counts, stopword hits and
-    distinct-token counts must equal the tokenize-then-set-membership
-    definition the DuckDB oracle computes."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import text_metrics
-
-    m = text_metrics(spark.table("documents"))
-    return m.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.round("avg_word_len", 6).alias("avg_word_len"),
-        F.round("alpha_ratio", 6).alias("alpha_ratio"),
-        F.round("digit_ratio", 6).alias("digit_ratio"),
-        F.round("punct_ratio", 6).alias("punct_ratio"),
-        F.round("stopword_ratio", 6).alias("stopword_ratio"),
-        F.round("unique_ratio", 6).alias("unique_ratio"),
-    )
-
-
-
-
-def q_mix_sample(spark, sf_dir):
-    """Training-mix construction (operators/pipeline.py mix_sample):
-    per-domain deterministic keep rates over the MINSTD uniform (samples
-    nest across rate changes); domains derived from doc_id. Oracle = the
-    identical LCG arithmetic + CASE rates in plain SQL."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import mix_sample
-
-    docs = spark.table("documents").selectExpr(
-        "doc_id",
-        "CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'web' WHEN 1 THEN 'code'"
-        " WHEN 2 THEN 'books' ELSE 'forums' END AS domain",
-    )
-    out = mix_sample(
-        docs, {"web": 0.25, "code": 1.0, "books": 0.75}, "domain", "doc_id",
-        salt=3, default_rate=0.5,
-    )
-    return out.groupBy("domain").agg(F.count("*").alias("n"),
-                                     F.sum("doc_id").alias("id_sum"))
-
-
-def q_quality_score(spark, sf_dir):
-    """Composite quality heuristic (Gopher/C4-style filters folded into
-    one [0,1] score, operators/textops.py quality_score) — the oracle
-    recomputes every sub-score from tokenize-then-set-membership
-    definitions and mirrors the exact blend expression."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import quality_score
-
-    m = quality_score(spark.table("documents"))
-    return m.select(
-        "doc_id", F.col("n_tokens").cast("long").alias("n_tokens"), "quality"
-    )
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-def q_lang_id(spark, sf_dir):
-    """Stopword-profile language id distribution (heuristic: rows-only)."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import lang_id
-
-    docs = spark.table("documents")
-    return lang_id(docs).groupBy("lang_pred").agg(F.count("*").alias("n"))
-
-
-def q_winnowing(spark, sf_dir):
-    """Winnowing fingerprints per doc (Schleimer et al. SIGMOD'03),
-    value-pinned: the k-gram hash is a B=1000003 polynomial over the
-    joined lowercased token bytes under uint64 wraparound, which the
-    DuckDB oracle replays exactly with HUGEINT arithmetic mod 2^64 —
-    count, min and max of the selected (signed-int64) fingerprints are
-    compared value-for-value."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import winnowing_fingerprints
-
-    docs = spark.table("documents").filter("doc_id < 100")
-    return winnowing_fingerprints(docs, "doc_id", "text").groupBy("id").agg(
-        F.count("*").alias("n_fp"),
-        F.min("fingerprint").alias("min_fp"),
-        F.max("fingerprint").alias("max_fp"),
     )
 
 
@@ -2191,12 +2077,6 @@ def q_osm_read(spark, sf_dir):
     )
 
 
-
-
-
-
-
-
 def q_streaming_upsert(spark, sf_dir):
     """Streaming ingest that MAINTAINS the snapshot layout: readStream
     over parquet batch files -> foreachBatch upsert_geo_snapshot (the
@@ -2289,8 +2169,6 @@ def q_events_percentiles(spark, sf_dir):
     )
 
 
-
-
 def q_spatial_distance_spheroid(spark, sf_dir):
     """Vectorized Vincenty geodesic distance (st_distance_spheroid.cpp);
     oracle = the same fixed-point Vincenty iteration unrolled in plain SQL
@@ -2306,328 +2184,6 @@ def q_spatial_distance_spheroid(spark, sf_dir):
         FROM ({_LONLAT}) WHERE cid < 300
         """
     )
-
-
-# --------------------------------------------------------------------------
-# round-6 training-data pipeline operators (operators/pipeline.py)
-# --------------------------------------------------------------------------
-
-def q_gopher_quality(spark, sf_dir):
-    """Gopher repetition-quality signals (Rae et al. 2021 A1.1) — exact
-    engine-neutral definitions, verified value-for-value by the oracle."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import gopher_repetition
-
-    return gopher_repetition(spark.table("documents"))
-
-
-
-
-def q_hash_split(spark, sf_dir):
-    """Deterministic MINSTD-LCG train/val/test split — plain integer
-    arithmetic, reproduced exactly by the oracle SQL."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import hash_split
-
-    return hash_split(
-        spark.table("documents"), "doc_id", weights=(0.9, 0.05, 0.05)
-    ).select("doc_id", "split")
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Greedy sequence packing (budget 4000 chars, 8 groups); oracle is a
-    recursive-CTE replay of the same greedy scan."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import pack_sequences
-
-    return pack_sequences(
-        spark.table("documents"), "doc_id", "n_chars", budget=4000, num_groups=8
-    )
-
-
-def q_embedding_centroids(spark, sf_dir):
-    """Per-label embedding centroid in long (label, pos, centroid, n) form;
-    shuffle volume O(labels x dim) regardless of row count."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import embedding_centroids
-
-    return embedding_centroids(spark.table("embeddings"))
-
-
-
-
-_PII_DOCS = (
-    "SELECT doc_id, concat(text, ' contact user', doc_id, '@example.com or +1 (555) 010-',"
-    " lpad(CAST(doc_id % 10000 AS STRING), 4, '0'), ' at 10.0.', doc_id % 256, '.7') AS text"
-    " FROM documents"
-)
-
-
-def q_pii_scrub(spark, sf_dir):
-    """C4-style PII redaction (email/IPv4/phone placeholders) over docs
-    salted with deterministic PII built from doc_id — byte-exact replay
-    in the oracle (patterns restricted to the Java-regex/RE2-identical
-    subset)."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import pii_scrub
-
-    docs = spark.sql(_PII_DOCS)
-    return pii_scrub(docs).select("doc_id", "clean_text", "n_redactions")
-
-
-def q_dedup_lines(spark, sf_dir):
-    """Corpus-wide duplicate-line removal (RefinedWeb-style boilerplate
-    strip), first occurrence kept in (doc_id, pos) order; reassembled text
-    compared byte-for-byte against the window-function oracle."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import dedup_lines
-
-    return dedup_lines(spark.table("documents"))
-
-
-def q_sample_stratified(spark, sf_dir):
-    """Deterministic per-language sample (20 docs/stratum, MINSTD hash
-    order) — selection is a pure function of (doc_id, salt), replayed
-    exactly by the oracle window query."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import sample_stratified
-
-    return sample_stratified(
-        spark.table("documents"), "lang", "doc_id", k=20, salt=7
-    ).select("doc_id", "lang")
-
-
-def q_bm25(spark, sf_dir):
-    """Okapi BM25 top-25 for a fixed keyword query — the lexical-search
-    complement to the ANN lanes; oracle replays idf/tf/length
-    normalization in plain SQL (identical float expression shapes)."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import bm25_topk
-
-    return bm25_topk(spark.table("documents"), "hash join filter vector", k=25)
-
-
-def q_ngram_lm(spark, sf_dir):
-    """CCNet-style bigram-LM perplexity scoring, self-trained on the
-    corpus (vocab_size=25 forces an <unk> tail); oracle replays the
-    tokenize -> vocab-cut -> add-k-smoothed scoring in plain SQL with the
-    same expression shapes, deciding lm_ppl from the ROUNDED logprob on
-    both sides."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.lm import ngram_lm_perplexity
-
-    return ngram_lm_perplexity(
-        spark.table("documents"), vocab_size=25, add_k=0.5
-    ).select("doc_id", "lm_bigrams", "lm_logprob", "lm_ppl")
-
-
-def q_chunk_documents(spark, sf_dir):
-    """Overlapping token-window chunking (max_tokens=40, stride=32) — the
-    pre-tokenizer step before pack_sequences; oracle slices the DuckDB
-    token list with range(0, len, stride) and re-joins with single
-    spaces."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import chunk_documents
-
-    return chunk_documents(
-        spark.table("documents"), max_tokens=40, stride=32
-    ).select("doc_id", "chunk_id", "chunk_tokens", "chunk_text")
-
-
-def q_wordlist_filter(spark, sf_dir):
-    """C4-style blocklist filter: block_count / rounded block_ratio /
-    keep_doc over a fixed 3-term blocklist; both engines decide keep_doc
-    from the ROUNDED ratio."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import wordlist_filter
-
-    return wordlist_filter(
-        spark.table("documents"), ["slow", "bad", "error"], max_ratio=0.05
-    ).select("doc_id", "block_count", "block_ratio", "keep_doc")
-
-
-def q_text_normalize(spark, sf_dir):
-    """Unicode NFC + control-strip + whitespace-squish over docs salted
-    with a combining accent (e + U+0301), a BEL control char, and double
-    spaces — byte-exact against DuckDB's nfc_normalize oracle."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import text_normalize
-
-    docs = spark.sql(
-        "SELECT doc_id, concat(text, '  x', decode(unhex('07'), 'UTF-8'), 'y ',"
-        " decode(unhex('63616665CC81'), 'UTF-8'), '  end') AS text FROM documents"
-    )
-    return text_normalize(docs).selectExpr(
-        "doc_id", "norm_text", "length(norm_text) AS n"
-    )
-
-
-
-
-
-
-
-
-_URL_TEMPLATE_SQL = (
-    "SELECT id, CASE CAST(id % 6 AS INTEGER)"
-    " WHEN 0 THEN concat('HTTP://WWW.Site', CAST(id % 50 AS STRING), '.COM:80/a/',"
-    "  CAST(id AS STRING), '/?utm_source=x&b=', CAST(id % 9 AS STRING), '&a=',"
-    "  CAST(id % 7 AS STRING), '#frag')"
-    " WHEN 1 THEN concat('https://Example', CAST(id % 50 AS STRING), '.com:443')"
-    " WHEN 2 THEN concat('https://cdn', CAST(id % 50 AS STRING), '.example.org/path/')"
-    " WHEN 3 THEN concat('ftp://host', CAST(id % 50 AS STRING), '/data')"
-    " WHEN 4 THEN concat('  http://h', CAST(id % 50 AS STRING),"
-    "  '.net/x?z=1&y=2&utm_campaign=c  ')"
-    " ELSE concat('http://plain', CAST(id % 50 AS STRING), '.io') END AS url"
-)
-
-
-def q_url_canonicalize(spark, sf_dir):
-    """URL canonicalization (operators/textops.py url_canonicalize) — the
-    URL-level dedup pass of a web-crawl pipeline. The oracle CONSTRUCTS the
-    expected canonical form per template directly from id (independent
-    derivation, no SQL URL parser), so scheme/host lowering, www/default-
-    port stripping, fragment/tracking-param drops, trailing-slash and
-    param-sort rules are all value-pinned."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import url_canonicalize
-
-    urls = spark.sql(f"{_URL_TEMPLATE_SQL} FROM ({_PTS}) WHERE id < 600")
-    return url_canonicalize(urls, "url").select("id", "canonical_url")
-
-
-_BPE_MERGES = [
-    ("e", "s"), ("es", "t</w>"), ("l", "o"), ("lo", "w</w>"),
-    ("lo", "w"), ("n", "e"), ("ne", "w"), ("new", "est</w>"),
-    ("w", "i"), ("wi", "d"), ("wid", "est</w>"), ("low", "e"),
-    ("lowe", "r</w>"),
-]
-
-
-_SCRIPT_SAMPLES = [
-    (0, "The quick brown fox jumps over the lazy dog"),
-    (1, "Широкая электрификация южных губерний даст толчок"),
-    (2, "Γρήγορη καφετιά αλεπού πηδάει πάνω από σκύλο"),
-    (3, "صف خلق خود كمثل الشمس إذ بزغت"),
-    (4, "דג סקרן שט בים מאוכזב ולפתע מצא חברה"),
-    (5, "एक गाँव में मोहन नाम का लड़का रहता था"),
-    (6, "天地玄黄 宇宙洪荒 日月盈昃 辰宿列张"),
-    (7, "いろはにほへと ちりぬるを わかよたれそ"),
-    (8, "다람쥐 헌 쳇바퀴에 타고파 문장 예시"),
-    (9, "mixed 混合 текст with many scripts לא דומיננטי"),
-]
-
-
-def q_script_profile(spark, sf_dir):
-    """Writing-system detection (operators/textops.script_profile — the
-    pre-language-ID corpus router): per-script codepoint ratios via one
-    codegen'd regexp_count per script over EXPLICIT BMP ranges (spelled
-    as literal ranges because Java and RE2 name \\p{Script=} classes
-    differently, while raw codepoint ranges mean the same thing), plus
-    the arg-max script at a 0.30 floor. Fixture: one pangram-ish sample
-    per script + a no-dominant mixed row; the oracle recomputes every
-    ratio in DuckDB with regexp_extract_all over the SAME ranges
-    (rendered as raw characters — RE2 has no \\uXXXX escape)."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import script_profile
-
-    df = spark.createDataFrame(_SCRIPT_SAMPLES, "id long, text string")
-    return script_profile(df).drop("text")
-
-
-def _script_profile_oracle() -> str:
-    import re as _re
-
-    from duckdb_spatial_spark.operators.textops import _SCRIPT_RANGES
-
-    def raw(cls: str) -> str:
-        return _re.sub(
-            r"\\u([0-9A-Fa-f]{4})",
-            lambda m: chr(int(m.group(1), 16)),
-            cls,
-        )
-
-    names = sorted(_SCRIPT_RANGES)
-    vals = ",\n              ".join(
-        "(" + f"CAST({i} AS BIGINT), '" + s.replace("'", "''") + "')"
-        for i, s in _SCRIPT_SAMPLES
-    )
-    ratio_cols = ",\n                   ".join(
-        f"round(len(regexp_extract_all(text, '{raw(_SCRIPT_RANGES[n])}'))"
-        f" / greatest(length(text), 1), 6) AS {n}_ratio"
-        for n in names
-    )
-    best = "greatest(" + ", ".join(f"{n}_ratio" for n in names) + ")"
-    dom = "CASE " + " ".join(
-        f"WHEN {n}_ratio = {best} AND {best} >= 0.30 THEN '{n}'" for n in names
-    ) + " ELSE 'other' END"
-    cols = ", ".join(f"{n}_ratio" for n in names)
-    return f"""
-            WITH t(id, text) AS (VALUES
-              {vals}
-            ), r AS (
-              SELECT id,
-                   {ratio_cols}
-              FROM t
-            )
-            SELECT id, {cols}, {dom} AS script FROM r
-        """
-
-
-def q_bpe_learn(spark, sf_dir):
-    """BPE merge-table LEARNING (operators/textops.bpe_learn — tokenizer
-    training, Sennrich et al. 2016 / subword-nmt): ONE distributed
-    map-side-combined wordcount, then the classic merge loop over the
-    driver-collected (vocab-sized) frequency table with a deterministic
-    lexicographic tie-break. The corpus is the paper's own worked
-    example (low x5, lower x2, newest x6, widest x3); the oracle pins
-    the merge sequence hand-derived from the algorithm's algebra
-    (tests/test_bpe_learn.py walks the derivation)."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import bpe_learn
-
-    rows = [(i, " ".join([w] * n)) for i, (w, n) in enumerate(
-        [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
-    )]
-    corpus = spark.createDataFrame(rows, "id long, text string")
-    merges = bpe_learn(corpus, num_merges=8)
-    out = [(r + 1, a, b) for r, (a, b) in enumerate(merges)]
-    return spark.createDataFrame(out, "rank int, lhs string, rhs string")
-
-
-def q_bpe_encode(spark, sf_dir):
-    """BPE merge-table application (operators/textops.py bpe_encode):
-    greedy lowest-rank merges over a fixed merges.txt-style table. The
-    oracle pins the known encoding of each template word (independent
-    hand derivation), joined per doc."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import bpe_encode
-
-    docs = spark.sql(
-        f"SELECT id, CASE CAST(id % 5 AS INTEGER)"
-        f" WHEN 0 THEN 'low lower' WHEN 1 THEN 'newest widest'"
-        f" WHEN 2 THEN 'lowest' WHEN 3 THEN 'new news'"
-        f" ELSE 'low low newest' END AS text"
-        f" FROM ({_PTS}) WHERE id < 500"
-    )
-    out = bpe_encode(docs, _BPE_MERGES)
-    return out.selectExpr(
-        "id",
-        "array_join(bpe_tokens, ' ') AS toks",
-        "CAST(size(bpe_tokens) AS INT) AS n",
-    )
-
-
-
-
-def q_ngram_counts(spark, sf_dir):
-    """Corpus bigram frequency table (count + doc_freq, min_count 10) —
-    map-side-combined counts; oracle replays via unnest + group by."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import ngram_counts
-
-    return ngram_counts(spark.table("documents"), n=2, min_count=10)
-
 
 def q_arrow_roundtrip(spark, sf_dir):
     """Arrow IPC (Feather v2) sink -> source roundtrip through st_read."""
@@ -3383,8 +2939,6 @@ def q_netcdf_roundtrip(spark, sf_dir):
     )
 
 
-
-
 def q_zonal_stats(spark, sf_dir):
     """Zonal statistics (operators/join.zonal_stats): point 'cells' with a
     value column aggregated per containing zone polygon — forced through
@@ -3461,22 +3015,6 @@ def q_mvt_roundtrip(spark, sf_dir):
     )
 
 
-
-
-def q_text_entropy(spark, sf_dir):
-    """Character/token Shannon entropy (textops.text_entropy — the
-    low-entropy boilerplate signal). Oracle recomputes both entropies
-    from per-unit group counts in SQL (string_split('') codepoint parity
-    validated against python iteration incl. unicode); entropies rounded
-    to 6 on both sides, empty docs coalesce to zero."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.textops import text_entropy
-
-    return text_entropy(spark.table("documents")).select(
-        "doc_id", "n_chars_e", "char_entropy", "n_tokens_e", "token_entropy"
-    )
-
-
 def q_warc_roundtrip(spark, sf_dir):
     """WARC/1.0 (ISO 28500) sink -> reader round trip (sources/warc.py;
     the CommonCrawl container — per-record gzip members, HTTP response
@@ -3504,100 +3042,6 @@ def q_warc_roundtrip(spark, sf_dir):
         "content_type",
         "CAST(payload AS STRING) AS payload_str",
     )
-
-
-def q_robots(spark, sf_dir):
-    """RFC 9309 robots.txt gate (pipeline.robots_allowed). Template
-    oracle: domains d0-d4 get fixed rule sets (d4 has NO robots row),
-    paths cycle six variants; the oracle CASE-constructs the expected
-    verdict per (domain, variant) — group selection, longest-match
-    precedence, allow-wins-ties, '*' and '$' all exercised."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import robots_allowed
-
-    robots = spark.createDataFrame(
-        [
-            ("d0.com", "User-agent: *\nDisallow: /private/\n"
-                       "Allow: /private/ok\nDisallow: /*.pdf$\n"),
-            ("d1.com", "User-agent: *\nDisallow: /\n"),
-            ("d2.com", "User-agent: *\nDisallow:\n"),
-            ("d3.com", "User-agent: *\nDisallow: /a*z$\n"),
-        ],
-        "domain string, robots_txt string",
-    )
-    urls = spark.sql(
-        f"""SELECT id, concat('d', CAST(id % 5 AS STRING), '.com') AS domain,
-              concat('http://d', CAST(id % 5 AS STRING), '.com',
-                CASE CAST(id % 6 AS INT)
-                  WHEN 0 THEN '/public/p'
-                  WHEN 1 THEN '/private/secret'
-                  WHEN 2 THEN '/private/ok/x'
-                  WHEN 3 THEN '/doc.pdf'
-                  WHEN 4 THEN '/doc.pdf?x=1'
-                  ELSE concat('/a', CAST(id AS STRING), 'z') END) AS url
-            FROM ({_PTS}) WHERE id < 600"""
-    )
-    return robots_allowed(urls, robots).select("id", "domain", "url", "allowed")
-
-
-def q_html_extract(spark, sf_dir):
-    """HTML -> text extraction (pipeline.html_extract_text, the
-    trafilatura-role web-crawl first pass). Template oracle: the query
-    CONSTRUCTS html from doc_id (four variants — plain blocks, entities,
-    script/style/comment junk, nested divs with no title) and the oracle
-    independently constructs the EXPECTED title/text per template, so
-    the whole rule chain is value-pinned without a SQL HTML parser."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.pipeline import html_extract_text
-
-    docs = spark.table("documents").selectExpr(
-        "doc_id",
-        """CASE CAST(doc_id % 4 AS INT)
-           WHEN 0 THEN concat('<html><head><title>Doc ', doc_id,
-             '</title></head><body><h1>Heading ', doc_id % 7,
-             '</h1><p>alpha ', doc_id, ' beta</p></body></html>')
-           WHEN 1 THEN concat('<html><head><title>A &amp; B</title></head>',
-             '<body><p>sum &lt;', doc_id, '&gt; &amp; more</p></body></html>')
-           WHEN 2 THEN concat('<body><script>var x=', doc_id,
-             ';</script><style>p{color:red}</style><p>kept ', doc_id,
-             '</p><!-- gone --></body>')
-           ELSE concat('<div><div>x', doc_id, '</div>y</div>')
-           END AS html""",
-    )
-    return html_extract_text(docs).select("doc_id", "title", "text", "text_chars")
-
-
-def q_events_sessionize(spark, sf_dir):
-    """Event sessionization (operators/events.session_stats) via Spark's
-    built-in session_window — per-session n/min-ts/max-ts/sum over the
-    events stream table with a 1-hour gap. start/end are EVENT
-    timestamps (not padded window bounds), so the oracle is a plain
-    gaps-and-islands window query; the boundary convention (a gap
-    must EXCEED the threshold to split; exactly-gap merges) matches
-    session_window's closed padding bound, verified empirically."""
-    _prep(spark, sf_dir)
-    from duckdb_spatial_spark.operators.events import session_stats
-
-    st = session_stats(
-        spark.table("events"), gap_seconds=3600, value_col="value"
-    )
-    return st.selectExpr(
-        "user_id",
-        "unix_micros(CAST(session_start AS TIMESTAMP)) AS start_us",
-        "unix_micros(CAST(session_end AS TIMESTAMP)) AS end_us",
-        "CAST(n_events AS BIGINT) AS n_events",
-        "round(sum_value, 6) AS sum_value",
-    )
-
-
-
-
-
-
-
-
-
-
 
 
 def q_spatial_transform_tranche5(spark, sf_dir):
@@ -3869,28 +3313,18 @@ def q_dgn_depth(spark, sf_dir):
     )
 
 
-
-
-
-
-
-
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Query registry. ORDER MATTERS: the driver oracle-checks the FIRST 50
-    entries only — every spatial row sits inside that window, and the
-    rows behind it are swept by scripts/check_oracle.py. Long-green
+    entries only — every row sits inside that window, and
+    scripts/check_oracle.py sweeps them all. Long-green
     never-changing rows were retired in r16 to retired_queries(): still
     swept by scripts/check_oracle.py every session and pinned by
     tests/test_retired_driver_rows.py (see docs/RETIRED_QUERIES.md)."""
     return {
-        # --- changed in r17 (optimization round 2): excise_dup_spans
-        # window-text build + rebuild kernels vectorized (dedup.py shared
-        # helpers — dup_spans rides the same module); write_geo_parquet
-        # layout path (pruning.py) — the four layout rows below re-enter
-        # the window per the r16 verdict (its What's-wrong #1: the r16
-        # v2+zstd writer change was never driver-verified) ---
+        # --- changed in r17: write_geo_parquet layout path (pruning.py)
+        # — the four layout rows below re-enter the window per the r16
+        # verdict (its What's-wrong #1: the r16 v2+zstd writer change was
+        # never driver-verified) ---
         "geoparquet_file": q_geoparquet_file,
         "geo_parquet_stats": q_geo_parquet_stats,
         "layout_pruned_polys": q_layout_pruned_polys,
@@ -3902,15 +3336,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vrt_union_sql": q_vrt_union_sql,
         "spatial_transform_tranche3": q_spatial_transform_tranche3,
         "wfs_read": q_wfs_read,
-        "bpe_learn": q_bpe_learn,
-        "script_profile": q_script_profile,
         "spatial_transform_tranche4": q_spatial_transform_tranche4,
         "crs_tagged_transform": q_crs_tagged_transform,
         "gml_roundtrip": q_gml_roundtrip,
         "vrt_read": q_vrt_read,
         "gmt_roundtrip": q_gmt_roundtrip,
         "s57_roundtrip": q_s57_roundtrip,
-        "winnowing": q_winnowing,
         "spatial_join_point_in_rect": q_spatial_join_point_in_rect,
         "spatial_join_rect_overlap": q_spatial_join_rect_overlap,
         "spatial_transform_nad27": q_spatial_transform_nad27,
@@ -3920,15 +3351,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatial_native_casts": q_spatial_native_casts,
         "spatial_zm_flags": q_spatial_zm_flags,
         "spatial_refsys": q_spatial_refsys,
-        # --- r16-checked canaries for the r17 Arrow batch-size cap (the
-        # one cross-cutting execution change this round): batch-global
-        # vectorized text/embedding kernels whose outputs must be
-        # invariant to batch boundaries ---
-        "gopher_quality": q_gopher_quality,
-        "text_metrics_full": q_text_metrics_full,
-        "lang_id": q_lang_id,
-        # --- behind the window from here: checked green at r16,
-        # unchanged since ---
+        # --- checked green at r16, unchanged since ---
         "spatial_transform_vertical": q_spatial_transform_vertical,
         "sosi_roundtrip": q_sosi_roundtrip,
         "dgn_depth": q_dgn_depth,
@@ -3940,26 +3363,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fgb_roundtrip": q_fgb_roundtrip,
         "geojsonseq_roundtrip": q_geojsonseq_roundtrip,
         "streaming_upsert": q_streaming_upsert,
-        "events_sessionize": q_events_sessionize,
-        "bm25": q_bm25,
-        "wordlist_filter": q_wordlist_filter,
         "dedup_exact": q_dedup_exact,
-        "mix_sample": q_mix_sample,
         "zonal_stats": q_zonal_stats,
         "warc_roundtrip": q_warc_roundtrip,
         "netcdf_roundtrip": q_netcdf_roundtrip,
         "mvt_roundtrip": q_mvt_roundtrip,
         "esrijson_roundtrip": q_esrijson_roundtrip,
-        "text_entropy": q_text_entropy,
-        "text_token_count": q_text_token_count,
-        "quality_score": q_quality_score,
-        "html_extract": q_html_extract,
-        "robots": q_robots,
-        "bpe_encode": q_bpe_encode,
-        "pack_sequences": q_pack_sequences,
-        "hash_split": q_hash_split,
         "events_percentiles": q_events_percentiles,
-        "pii_scrub": q_pii_scrub,
         "tpch_q1": q_tpch_q1,
         "tpch_q6": q_tpch_q6,
         "events_hourly": q_events_hourly,
@@ -3980,21 +3390,15 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "arrow_roundtrip": q_arrow_roundtrip,
         "events_top_per_type": q_events_top_per_type,
-        "dedup_lines": q_dedup_lines,
-        "chunk_documents": q_chunk_documents,
         "dxf_read": q_dxf_read,
-        "embedding_centroids": q_embedding_centroids,
         "gdb_roundtrip": q_gdb_roundtrip,
         "georss_roundtrip": q_georss_roundtrip,
         "gpkg_roundtrip": q_gpkg_roundtrip,
         "kml_roundtrip": q_kml_roundtrip,
         "layout_pruned_count": q_layout_pruned_count,
         "mif_roundtrip": q_mif_roundtrip,
-        "ngram_counts": q_ngram_counts,
-        "ngram_lm": q_ngram_lm,
         "osm_read": q_osm_read,
         "pgdump_roundtrip": q_pgdump_roundtrip,
-        "sample_stratified": q_sample_stratified,
         "shp_roundtrip": q_shp_roundtrip,
         "spatial_area_envelope": q_spatial_area_envelope,
         "spatial_area_spheroid": q_spatial_area_spheroid,
@@ -4038,162 +3442,11 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatialite_roundtrip": q_spatialite_roundtrip,
         "tab_roundtrip": q_tab_roundtrip,
         "text_metrics": q_text_metrics,
-        "text_normalize": q_text_normalize,
         "tpch_q3": q_tpch_q3,
         "tpch_q5": q_tpch_q5,
-        "url_canonicalize": q_url_canonicalize,
         "window_running_total": q_window_running_total,
         "xlsx_roundtrip": q_xlsx_roundtrip,
     }
-
-
-
-
-
-
-def _winnowing_oracle() -> str:
-    """Full-value replica of textops.winnowing_fingerprints (k=9, w=20,
-    B=1000003): the kernel's uint64-wraparound polynomial k-gram hash is
-    replayed with HUGEINT arithmetic mod 2^64 (documents at this tier are
-    pure ASCII, so per-character ascii() equals the kernel's utf-8
-    bytes), the window minima with list_slice/list_min, and the signed
-    int64 fingerprint view with an explicit two's-complement CASE."""
-    B, k, w = 1000003, 9, 20
-    two64 = 1 << 64
-    gram = " + ".join(
-        f"cs[j + {t}] * CAST('{pow(B, k - 1 - t, two64)}' AS HUGEINT)"
-        for t in range(k)
-    )
-    return f"""
-        WITH joined AS (
-          SELECT doc_id, array_to_string(list_filter(
-                   string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
-                   x -> x <> ''), ' ') AS s
-          FROM documents WHERE doc_id < 100
-        ), chars AS (
-          SELECT doc_id,
-                 list_transform(string_split(s, ''), c -> CAST(ascii(c) AS HUGEINT)) AS cs
-          FROM joined WHERE length(s) >= {k}
-        ), grams AS (
-          SELECT doc_id, list_transform(generate_series(1, len(cs) - {k - 1}),
-                   j -> ({gram}) % CAST('{two64}' AS HUGEINT)) AS hs
-          FROM chars
-        ), sel AS (
-          SELECT doc_id, list_distinct(
-            CASE WHEN len(hs) <= {w} THEN [list_min(hs)]
-                 ELSE list_transform(generate_series(1, len(hs) - {w - 1}),
-                                     x -> list_min(list_slice(hs, x, x + {w - 1})))
-            END) AS fps
-          FROM grams
-        ), signed AS (
-          SELECT doc_id, list_transform(fps,
-            v -> CAST(CASE WHEN v >= CAST('{1 << 63}' AS HUGEINT)
-                           THEN v - CAST('{two64}' AS HUGEINT) ELSE v
-                      END AS BIGINT)) AS sf
-          FROM sel
-        )
-        SELECT doc_id AS id, CAST(len(sf) AS BIGINT) AS n_fp,
-               list_min(sf) AS min_fp, list_max(sf) AS max_fp
-        FROM signed
-    """
-
-
-
-
-
-
-def _text_metrics_oracle() -> str:
-    """DuckDB replica of textops.text_metrics: tokenize-then-set-membership
-    definitions of the counts the Spark side now computes with whole-token
-    regexes."""
-    from duckdb_spatial_spark.operators.textops import _STOPWORDS
-
-    arr = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS["en"]) + "]"
-    return f"""
-        WITH t AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x != '') AS toks,
-            length(text) AS n_chars,
-            length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-            length(regexp_replace(text, '[^0-9]', '', 'g')) AS digits,
-            length(regexp_replace(text, '[^!-/:-@\\[-`{{-~]', '', 'g')) AS punct,
-            length(regexp_replace(text, '[^ \t\n\x0b\f\r]', '', 'g')) AS spaces
-          FROM documents
-        )
-        SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-          CASE WHEN len(toks) > 0 THEN round((n_chars - spaces) / len(toks), 6) END AS avg_word_len,
-          CASE WHEN n_chars > 0 THEN round(alpha / n_chars, 6) END AS alpha_ratio,
-          CASE WHEN n_chars > 0 THEN round(digits / n_chars, 6) END AS digit_ratio,
-          CASE WHEN n_chars > 0 THEN round(punct / n_chars, 6) END AS punct_ratio,
-          CASE WHEN len(toks) > 0 THEN round(len(list_filter(toks, t -> list_contains({arr}, t))) / len(toks), 6) END AS stopword_ratio,
-          CASE WHEN len(toks) > 0 THEN round(len(list_distinct(toks)) / len(toks), 6) END AS unique_ratio
-        FROM t
-    """
-
-
-def _quality_score_oracle() -> str:
-    """DuckDB replica of textops.quality_score: UNROUNDED ratios feed the
-    blend (rounding happens once at the score), the blend expression
-    mirrors the Spark Column tree term by term, and least/coalesce
-    placement matches (both engines' least() skip NULLs)."""
-    from duckdb_spatial_spark.operators.textops import _STOPWORDS
-
-    arr = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS["en"]) + "]"
-    return f"""
-        WITH t AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x != '') AS toks,
-            length(text) AS n_chars,
-            length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha
-          FROM documents
-        ), m AS (
-          SELECT doc_id, len(toks) AS n_tokens,
-            CASE WHEN n_chars > 0 THEN alpha / n_chars END AS alpha_ratio,
-            CASE WHEN len(toks) > 0 THEN len(list_filter(toks, x -> list_contains({arr}, x))) / len(toks) END AS stopword_ratio,
-            CASE WHEN len(toks) > 0 THEN len(list_distinct(toks)) / len(toks) END AS unique_ratio
-          FROM t
-        )
-        SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-          round(
-            least(n_tokens / 50.0, 1.0)
-              * (CASE WHEN n_tokens > 100000 THEN 0.5 ELSE 1.0 END) * 0.25
-            + least(coalesce(alpha_ratio, 0.0) / 0.7, 1.0) * 0.25
-            + least(coalesce(stopword_ratio, 0.0) / 0.2, 1.0) * 0.25
-            + coalesce(unique_ratio, 0.0) * 0.25, 6) AS quality
-        FROM m
-    """
-
-
-def _lang_id_oracle() -> str:
-    """DuckDB replica of operators/textops.py lang_id: per-language stopword
-    hit rate, argmax with a 0.02 floor. The Spark when-chain lets the LAST
-    tied language win, so the CASE goes in reverse dict order."""
-    from duckdb_spatial_spark.operators.textops import _STOPWORDS
-
-    langs = list(_STOPWORDS)
-    score_cols = []
-    for lang, words in _STOPWORDS.items():
-        arr = "[" + ", ".join(f"'{w}'" for w in words) + "]"
-        score_cols.append(
-            f"len(list_filter(toks, t -> list_contains({arr}, t)))"
-            f" / greatest(len(toks), 1) AS sc_{lang}"
-        )
-    best = "greatest(" + ", ".join(f"sc_{l}" for l in langs) + ")"
-    cases = " ".join(
-        f"WHEN sc_{l} = best AND best > 0.02 THEN '{l}'" for l in reversed(langs)
-    )
-    return f"""
-        WITH tok AS (
-          SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), t -> t != '') AS toks
-          FROM documents
-        ), sc AS (
-          SELECT {', '.join(score_cols)} FROM tok
-        ), p AS (
-          SELECT CASE {cases} ELSE 'und' END AS lang_pred
-          FROM (SELECT *, {best} AS best FROM sc)
-        )
-        SELECT lang_pred, count(*) AS n FROM p GROUP BY lang_pred
-    """
 
 
 _WGS84_A = 6378137.0
@@ -4473,16 +3726,6 @@ def oracle_sql() -> dict[str, str]:
                    round({_PARIS_PM}, 9) AS glon,
                    round(2.3522, 6) AS rt_lon, round(48.8566, 6) AS rt_lat
             FROM (VALUES (1), (2), (3)) AS t(zid)
-        """,
-        "script_profile": _script_profile_oracle(),
-        "bpe_learn": """
-            -- hand-derived Sennrich-corpus merge sequence (see
-            -- tests/test_bpe_learn.py for the step-by-step algebra)
-            SELECT * FROM (VALUES
-              (1, 'e', 's'), (2, 'es', 't</w>'), (3, 'l', 'o'),
-              (4, 'e', 'w'), (5, 'ew', 'est</w>'), (6, 'n', 'ewest</w>'),
-              (7, 'lo', 'w</w>'), (8, 'd', 'est</w>')
-            ) AS t(rank, lhs, rhs)
         """,
         "wfs_read": """
             WITH r AS (
@@ -4973,44 +4216,6 @@ def oracle_sql() -> dict[str, str]:
                    round(x % 4000, 6) AS x, round(y % 4000, 6) AS y
             FROM ({pts}) WHERE id < 300
         """,
-        "text_entropy": r"""
-            WITH ch AS (
-              SELECT doc_id, unnest(list_filter(
-                       string_split(coalesce(text, ''), ''), x -> x <> '')) AS u
-              FROM documents
-            ), cc AS (SELECT doc_id, u, count(*) AS c FROM ch GROUP BY 1, 2),
-            ctot AS (SELECT doc_id, sum(c) AS n FROM cc GROUP BY 1),
-            cent AS (
-              SELECT cc.doc_id,
-                     floor(sum(-(c / CAST(n AS DOUBLE))
-                               * ln(c / CAST(n AS DOUBLE))) * 1e6 + 0.5) / 1e6
-                       AS char_entropy,
-                     CAST(max(n) AS BIGINT) AS n_chars_e
-              FROM cc JOIN ctot USING (doc_id) GROUP BY 1
-            ), tk AS (
-              SELECT doc_id, unnest(list_filter(
-                string_split_regex(coalesce(text, ''), '[ \t\n\x0b\f\r]+'),
-                x -> x <> '')) AS u
-              FROM documents
-            ), tc AS (SELECT doc_id, u, count(*) AS c FROM tk GROUP BY 1, 2),
-            ttot AS (SELECT doc_id, sum(c) AS n FROM tc GROUP BY 1),
-            tent AS (
-              SELECT tc.doc_id,
-                     floor(sum(-(c / CAST(n AS DOUBLE))
-                               * ln(c / CAST(n AS DOUBLE))) * 1e6 + 0.5) / 1e6
-                       AS token_entropy,
-                     CAST(max(n) AS BIGINT) AS n_tokens_e
-              FROM tc JOIN ttot USING (doc_id) GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   coalesce(cent.n_chars_e, 0) AS n_chars_e,
-                   coalesce(cent.char_entropy, 0.0) AS char_entropy,
-                   coalesce(tent.n_tokens_e, 0) AS n_tokens_e,
-                   coalesce(tent.token_entropy, 0.0) AS token_entropy
-            FROM documents d
-            LEFT JOIN cent ON d.doc_id = cent.doc_id
-            LEFT JOIN tent ON d.doc_id = tent.doc_id
-        """,
         "warc_roundtrip": f"""
             SELECT concat('http://w', CAST(id % 9 AS STRING), '.com/page/',
                           CAST(id AS STRING)) AS url,
@@ -5019,88 +4224,6 @@ def oracle_sql() -> dict[str, str]:
                    concat('<html><body>doc ', CAST(id AS STRING),
                           '</body></html>') AS payload_str
             FROM ({pts}) WHERE id < 400
-        """,
-        "robots": f"""
-            SELECT id, concat('d', CAST(id % 5 AS STRING), '.com') AS domain,
-                   concat('http://d', CAST(id % 5 AS STRING), '.com',
-                     CASE CAST(id % 6 AS INT)
-                       WHEN 0 THEN '/public/p'
-                       WHEN 1 THEN '/private/secret'
-                       WHEN 2 THEN '/private/ok/x'
-                       WHEN 3 THEN '/doc.pdf'
-                       WHEN 4 THEN '/doc.pdf?x=1'
-                       ELSE concat('/a', CAST(id AS STRING), 'z') END) AS url,
-                   CASE
-                     WHEN id % 5 = 1 THEN false
-                     WHEN id % 5 = 0 THEN
-                       (CASE CAST(id % 6 AS INT) WHEN 1 THEN false
-                                                 WHEN 3 THEN false
-                                                 ELSE true END)
-                     WHEN id % 5 = 3 THEN id % 6 <> 5
-                     ELSE true END AS allowed
-            FROM ({pts}) WHERE id < 600
-        """,
-        "html_extract": """
-            WITH expect AS (
-              SELECT doc_id,
-                CASE CAST(doc_id % 4 AS INT)
-                  WHEN 0 THEN concat('Doc ', doc_id)
-                  WHEN 1 THEN 'A & B'
-                  ELSE '' END AS title,
-                CASE CAST(doc_id % 4 AS INT)
-                  WHEN 0 THEN concat('Heading ', doc_id % 7, chr(10), chr(10),
-                                     'alpha ', doc_id, ' beta')
-                  WHEN 1 THEN concat('sum <', doc_id, '> & more')
-                  WHEN 2 THEN concat('kept ', doc_id)
-                  ELSE concat('x', doc_id, chr(10), 'y') END AS text
-              FROM documents
-            )
-            SELECT doc_id, title, text, length(text) AS text_chars FROM expect
-        """,
-        "events_sessionize": """
-            WITH o AS (
-              SELECT user_id, ts, value, event_id,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                            OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                               > 3600000000
-                          THEN 1 ELSE 0 END AS brk
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), s AS (
-              SELECT user_id, ts, value,
-                     sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING) AS sid
-              FROM o
-            )
-            SELECT user_id,
-                   min(epoch_us(ts)) AS start_us, max(epoch_us(ts)) AS end_us,
-                   CAST(count(*) AS BIGINT) AS n_events,
-                   round(sum(value), 6) AS sum_value
-            FROM s GROUP BY user_id, sid
-        """,
-        "url_canonicalize": f"""
-            SELECT id, CASE CAST(id % 6 AS INTEGER)
-              WHEN 0 THEN concat('http://site', CAST(id % 50 AS STRING), '.com/a/',
-                CAST(id AS STRING), '?a=', CAST(id % 7 AS STRING), '&b=',
-                CAST(id % 9 AS STRING))
-              WHEN 1 THEN concat('https://example', CAST(id % 50 AS STRING), '.com')
-              WHEN 2 THEN concat('https://cdn', CAST(id % 50 AS STRING), '.example.org/path')
-              WHEN 3 THEN concat('ftp://host', CAST(id % 50 AS STRING), '/data')
-              WHEN 4 THEN concat('http://h', CAST(id % 50 AS STRING), '.net/x?y=2&z=1')
-              ELSE concat('http://plain', CAST(id % 50 AS STRING), '.io') END AS canonical_url
-            FROM ({pts}) WHERE id < 600
-        """,
-        "bpe_encode": f"""
-            SELECT id, CASE CAST(id % 5 AS INTEGER)
-              WHEN 0 THEN 'low</w> lower</w>'
-              WHEN 1 THEN 'newest</w> widest</w>'
-              WHEN 2 THEN 'low est</w>'
-              WHEN 3 THEN 'ne w</w> new s</w>'
-              ELSE 'low</w> low</w> newest</w>' END AS toks,
-            CAST(CASE CAST(id % 5 AS INTEGER)
-              WHEN 0 THEN 2 WHEN 1 THEN 2 WHEN 2 THEN 2 WHEN 3 THEN 4
-              ELSE 3 END AS INTEGER) AS n
-            FROM ({pts}) WHERE id < 500
         """,
         "spatialite_roundtrip": f"""
             SELECT id, concat('n', CAST(id % 7 AS STRING)) AS name,
@@ -5244,10 +4367,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT source, count(*) AS n_docs, count(DISTINCT text) AS n_distinct
             FROM documents GROUP BY source
         """,
-        "text_token_count": r"""
-            SELECT doc_id, len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x != '')) AS n_tok
-            FROM documents
-        """,
         "text_metrics": r"""
             SELECT doc_id,
                    round(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) / length(text), 6) AS alpha_ratio,
@@ -5372,128 +4491,6 @@ def oracle_sql() -> dict[str, str]:
                    round((y % 120 - 60) + 0.2 + (id % 7) * 0.05, 5) AS mxy
             FROM ({pts}) WHERE id < 300
         """,
-        "lang_id": _lang_id_oracle(),
-        "text_metrics_full": _text_metrics_oracle(),
-        "quality_score": _quality_score_oracle(),
-        "winnowing": _winnowing_oracle(),
-        # --- round-6 pipeline operators (operators/pipeline.py) ---
-        # gopher_quality: identical metric definitions replayed in SQL;
-        # fractions are a single division of exact integers (bit-identical
-        # doubles), pass computed from the ROUNDED values on both sides.
-        "gopher_quality": r"""
-            WITH base AS (
-              -- NULL text = empty string (matches the kernel)
-              SELECT doc_id, coalesce(text, '') AS text,
-                     list_filter(list_transform(string_split(coalesce(text, ''), chr(10)),
-                         x -> trim(x, chr(32) || chr(9) || chr(13) || chr(11) || chr(12))),
-                         x -> x <> '') AS lines,
-                     list_filter(string_split_regex(coalesce(text, ''), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS words
-              FROM documents
-            ), lw AS (
-              SELECT doc_id, lines, words, len(lines) AS nl, len(words) AS nw,
-                     CASE WHEN len(words) = 0 THEN 0
-                          ELSE CAST(list_sum(list_transform(words, x -> length(x))) AS BIGINT)
-                               + len(words) - 1 END AS total_chars
-              FROM base
-            ), linem AS (
-              SELECT doc_id, CAST(nl AS INT) AS n_lines,
-                     CASE WHEN nl = 0 THEN 0.0
-                          ELSE 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / nl END AS dlf,
-                     CASE WHEN nl = 0 OR list_sum(list_transform(lines, x -> length(x))) = 0 THEN 0.0
-                          ELSE 1.0 - CAST(list_sum(list_transform(list_distinct(lines), x -> length(x))) AS DOUBLE)
-                                   / list_sum(list_transform(lines, x -> length(x))) END AS dlcf
-              FROM lw
-            ), g AS (
-              SELECT doc_id, k, gram, count(*) AS cnt, length(gram) AS glen,
-                     any_value(total_chars) AS total_chars
-              FROM (
-                SELECT doc_id, total_chars, 2 AS k,
-                       unnest(list_transform(range(1, nw), i -> words[i] || ' ' || words[i+1])) AS gram
-                FROM lw
-                UNION ALL
-                SELECT doc_id, total_chars, 3 AS k,
-                       unnest(list_transform(range(1, nw - 1),
-                           i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS gram
-                FROM lw
-                UNION ALL
-                SELECT doc_id, total_chars, 5 AS k,
-                       unnest(list_transform(range(1, nw - 3),
-                           i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                             || ' ' || words[i+3] || ' ' || words[i+4])) AS gram
-                FROM lw
-              )
-              GROUP BY doc_id, k, gram
-            ), tops AS (
-              -- integer char masses first, ONE division at the end: matches
-              -- the Python lane's sum(int)/total bit-for-bit
-              -- NB: DuckDB least() SKIPS nulls (least(1.0, NULL) = 1.0),
-              -- so the clamp lives in the final SELECT after coalesce
-              SELECT doc_id,
-                     CAST(max(CASE WHEN k = 2 AND cnt >= 2 THEN cnt * glen END) AS DOUBLE)
-                         / max(total_chars) AS top2,
-                     CAST(max(CASE WHEN k = 3 AND cnt >= 2 THEN cnt * glen END) AS DOUBLE)
-                         / max(total_chars) AS top3,
-                     least(1.0, coalesce(
-                         CAST(sum(CASE WHEN k = 5 AND cnt >= 2 THEN cnt * glen END) AS DOUBLE)
-                             / max(total_chars), 0.0)) AS dup5
-              FROM g GROUP BY doc_id
-            )
-            SELECT l.doc_id, l.n_lines,
-                   round(l.dlf, 6) AS dup_line_frac,
-                   round(l.dlcf, 6) AS dup_line_char_frac,
-                   round(least(1.0, coalesce(t.top2, 0.0)), 6) AS top_2gram_char_frac,
-                   round(least(1.0, coalesce(t.top3, 0.0)), 6) AS top_3gram_char_frac,
-                   round(coalesce(t.dup5, 0.0), 6) AS dup_5gram_char_frac,
-                   (round(l.dlf, 6) <= 0.30 AND round(l.dlcf, 6) <= 0.20
-                    AND round(least(1.0, coalesce(t.top2, 0.0)), 6) <= 0.20
-                    AND round(least(1.0, coalesce(t.top3, 0.0)), 6) <= 0.18
-                    AND round(coalesce(t.dup5, 0.0), 6) <= 0.15) AS gopher_pass
-            FROM linem l LEFT JOIN tops t USING (doc_id)
-        """,
-        # hash_split: the MINSTD LCG is plain 64-bit arithmetic; the bound
-        # 0.9 + 0.05 is the same IEEE sum the operator accumulates.
-        "hash_split": """
-            SELECT doc_id,
-                   CASE WHEN u < 0.9 THEN 'train'
-                        WHEN u < 0.9 + 0.05 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (SELECT doc_id,
-                         ((((doc_id % 2147483647) + 2147483647) % 2147483647)
-                          * 48271 % 2147483647) * 48271 % 2147483647
-                         / 2147483647.0 AS u
-                  FROM documents)
-        """,
-        "pack_sequences": """
-            WITH RECURSIVE d AS (
-              SELECT doc_id, ((doc_id % 8) + 8) % 8 AS pack_group,
-                     coalesce(n_chars, 0) AS n_chars,
-                     row_number() OVER (PARTITION BY ((doc_id % 8) + 8) % 8
-                                        ORDER BY doc_id) AS rn
-              FROM documents
-            ), s AS (
-              SELECT doc_id, pack_group, n_chars, rn,
-                     CAST(0 AS BIGINT) AS pack_bin, n_chars AS acc
-              FROM d WHERE rn = 1
-              UNION ALL
-              SELECT d.doc_id, d.pack_group, d.n_chars, d.rn,
-                     CASE WHEN s.acc + d.n_chars > 4000 THEN s.pack_bin + 1
-                          ELSE s.pack_bin END,
-                     CASE WHEN s.acc + d.n_chars > 4000 THEN d.n_chars
-                          ELSE s.acc + d.n_chars END
-              FROM d JOIN s ON d.pack_group = s.pack_group AND d.rn = s.rn + 1
-            )
-            SELECT doc_id, CAST(pack_group AS BIGINT) AS pack_group, pack_bin FROM s
-        """,
-        "embedding_centroids": """
-            SELECT label, CAST(pos - 1 AS INT) AS pos,
-                   round(avg(CAST(val AS DOUBLE)), 6) AS centroid,
-                   count(*) AS n
-            FROM (SELECT label,
-                         unnest(range(1, len(embedding) + 1)) AS pos,
-                         unnest(embedding) AS val
-                  FROM embeddings)
-            GROUP BY 1, 2
-        """,
         "arrow_roundtrip": f"""
             SELECT rid, round(w * h, 6) AS area_geom, round(w * h, 6) AS area
             FROM ({rects}) WHERE rid % 7 = 0
@@ -5506,215 +4503,6 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n
             FROM events GROUP BY event_type
         """,
-        "pii_scrub": r"""
-            SELECT doc_id,
-                   regexp_replace(regexp_replace(regexp_replace(t,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                       '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '<IP>', 'g'),
-                       '\+[0-9][0-9 ()-]{6,}[0-9]', '<PHONE>', 'g') AS clean_text,
-                   CAST(coalesce(
-                        len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-                      + len(regexp_extract_all(t, '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}'))
-                      + len(regexp_extract_all(t, '\+[0-9][0-9 ()-]{6,}[0-9]')), 0) AS INT) AS n_redactions
-            FROM (SELECT doc_id,
-                         text || ' contact user' || doc_id || '@example.com or +1 (555) 010-'
-                              || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                              || ' at 10.0.' || (doc_id % 256) || '.7' AS t
-                  FROM documents)
-        """,
-        "dedup_lines": """
-            WITH l AS (
-              SELECT doc_id,
-                     unnest(range(0, len(string_split(text, chr(10))))) AS pos,
-                     unnest(string_split(text, chr(10))) AS line
-              FROM documents
-            ), r AS (
-              SELECT doc_id, pos, line,
-                     (trim(line) = ''
-                      OR row_number() OVER (PARTITION BY trim(line)
-                                            ORDER BY doc_id, pos) = 1) AS keep
-              FROM l
-            )
-            SELECT doc_id,
-                   coalesce(string_agg(line, chr(10) ORDER BY pos)
-                            FILTER (WHERE keep), '') AS clean_text,
-                   CAST(count(*) FILTER (WHERE keep) AS INT) AS n_kept,
-                   CAST(count(*) FILTER (WHERE NOT keep) AS INT) AS n_removed
-            FROM r GROUP BY doc_id
-        """,
-        "ngram_counts": r"""
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS words
-              FROM documents
-            ), occ AS (
-              SELECT unnest(list_transform(range(1, len(words)),
-                     i -> words[i] || ' ' || words[i+1])) AS gram
-              FROM w
-            ), dd AS (
-              SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(words)),
-                     i -> words[i] || ' ' || words[i+1]))) AS gram
-              FROM w
-            ), c AS (
-              SELECT gram, count(*) AS count FROM occ GROUP BY 1
-            ), d AS (
-              SELECT gram, count(*) AS doc_freq FROM dd GROUP BY 1
-            )
-            SELECT c.gram, c.count, d.doc_freq
-            FROM c JOIN d USING (gram) WHERE c.count >= 10
-        """,
-        "text_normalize": r"""
-            SELECT doc_id,
-                   trim(regexp_replace(regexp_replace(nfc_normalize(t),
-                       '[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g'),
-                       '[ \t]+', ' ', 'g'), ' ') AS norm_text,
-                   length(trim(regexp_replace(regexp_replace(nfc_normalize(t),
-                       '[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g'),
-                       '[ \t]+', ' ', 'g'), ' ')) AS n
-            FROM (SELECT doc_id,
-                         text || '  x' || decode(from_hex('07')) || 'y '
-                              || decode(from_hex('63616665CC81')) || '  end' AS t
-                  FROM documents)
-        """,
-        "bm25": r"""
-            WITH d AS (
-              SELECT doc_id,
-                     len(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS dl,
-                     list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
-                                 t -> t IN ('hash', 'join', 'filter', 'vector')) AS qt
-              FROM documents
-            ), stats AS (
-              SELECT count(*) AS n, avg(dl) AS avgdl FROM d
-            ), tf AS (
-              SELECT doc_id, dl, term, count(*) AS tf
-              FROM (SELECT doc_id, dl, unnest(qt) AS term FROM d)
-              GROUP BY 1, 2, 3
-            ), dfq AS (
-              SELECT term, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1
-            ), sc AS (
-              SELECT tf.doc_id,
-                     round(sum(
-                         ln(1.0 + (s.n - dfq.df + 0.5) / (dfq.df + 0.5))
-                         * ((tf.tf * 2.2)
-                            / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / s.avgdl)))
-                     ), 4) AS score
-              FROM tf JOIN dfq USING (term) CROSS JOIN stats s
-              GROUP BY 1
-            )
-            SELECT doc_id, score, CAST(rk AS INT) AS rank FROM (
-              SELECT doc_id, score,
-                     row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rk
-              FROM sc
-            ) WHERE rk <= 25
-        """,
-        "ngram_lm": r"""
-            WITH toks AS (
-              SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos
-              FROM (SELECT doc_id,
-                           list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'),
-                                       x -> x <> '') AS l
-                    FROM documents)
-            ), pairs AS (
-              SELECT a.doc_id, a.tok AS w1, b.tok AS w2
-              FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-              UNION ALL
-              SELECT doc_id, '<s>' AS w1, tok AS w2 FROM toks WHERE pos = 1
-            ), vocab AS (
-              SELECT w2 AS tok FROM (
-                SELECT w2, count(*) AS c FROM pairs GROUP BY 1
-                ORDER BY c DESC, w2 ASC LIMIT 25)
-            ), vs AS (SELECT count(*) AS v FROM vocab),
-            mapped AS (
-              SELECT doc_id,
-                CASE WHEN w1 = '<s>' OR w1 IN (SELECT tok FROM vocab)
-                     THEN w1 ELSE '<unk>' END AS m1,
-                CASE WHEN w2 IN (SELECT tok FROM vocab)
-                     THEN w2 ELSE '<unk>' END AS m2
-              FROM pairs
-            ), cu AS (SELECT m1, count(*) AS nc FROM mapped GROUP BY 1),
-            cb AS (SELECT m1, m2, count(*) AS nb FROM mapped GROUP BY 1, 2),
-            terms AS (
-              SELECT mapped.doc_id,
-                     ln((coalesce(cb.nb, 0) + 0.5)
-                        / (coalesce(cu.nc, 0) + 0.5 * (vs.v + 1))) AS term
-              FROM mapped
-              LEFT JOIN cu USING (m1)
-              LEFT JOIN cb USING (m1, m2)
-              CROSS JOIN vs
-            ), agg AS (
-              SELECT doc_id, count(*) AS lm_bigrams,
-                     round(sum(term), 6) AS lm_logprob
-              FROM terms GROUP BY 1
-            )
-            SELECT doc_id, lm_bigrams, lm_logprob,
-                   round(exp(-lm_logprob / lm_bigrams), 6) AS lm_ppl
-            FROM agg
-        """,
-        "chunk_documents": r"""
-            WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'),
-                                 x -> x <> '') AS l
-              FROM documents
-            ), starts AS (
-              SELECT doc_id, l, unnest(range(0, len(l), 32)) AS s FROM t
-            )
-            SELECT doc_id,
-                   CAST(s / 32 AS INT) AS chunk_id,
-                   CAST(least(40, len(l) - s) AS INT) AS chunk_tokens,
-                   array_to_string(l[s + 1 : s + 40], ' ') AS chunk_text
-            FROM starts
-        """,
-        "wordlist_filter": r"""
-            WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
-                                 x -> x <> '') AS l
-              FROM documents
-            ), m AS (
-              SELECT doc_id,
-                     len(list_filter(l, x -> x IN ('bad', 'error', 'slow'))) AS block_count,
-                     round(len(list_filter(l, x -> x IN ('bad', 'error', 'slow')))
-                           / greatest(len(l), 1), 6) AS block_ratio
-              FROM t
-            )
-            SELECT doc_id, CAST(block_count AS INT) AS block_count, block_ratio,
-                   block_ratio <= 0.05 AS keep_doc
-            FROM m
-        """,
-        "sample_stratified": """
-            SELECT doc_id, lang FROM (
-              SELECT doc_id, lang,
-                     row_number() OVER (PARTITION BY lang ORDER BY u ASC, doc_id ASC) AS rk
-              FROM (SELECT doc_id, lang,
-                           (((((doc_id + 7) % 2147483647) + 2147483647) % 2147483647)
-                            * 48271 % 2147483647) * 48271 % 2147483647
-                           / 2147483647.0 AS u
-                    FROM documents)
-            ) WHERE rk <= 20
-        """,
-        "mix_sample": """
-            WITH d AS (
-              SELECT doc_id,
-                     CASE CAST(doc_id % 4 AS INTEGER)
-                       WHEN 0 THEN 'web' WHEN 1 THEN 'code'
-                       WHEN 2 THEN 'books' ELSE 'forums' END AS domain,
-                     (((((doc_id + 3) % 2147483647) + 2147483647) % 2147483647)
-                      * 48271 % 2147483647) * 48271 % 2147483647
-                     / 2147483647.0 AS u
-              FROM documents
-            )
-            SELECT domain, CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(doc_id) AS BIGINT) AS id_sum
-            FROM d
-            WHERE u < CASE domain WHEN 'web' THEN 0.25 WHEN 'code' THEN 1.0
-                                  WHEN 'books' THEN 0.75 ELSE 0.5 END
-            GROUP BY domain
-        """,
-        # r13: every queries() row now carries an oracle — the former
-        # rows-only lanes (minhash_lsh_pairs/simhash/ann top-k/ivf builds)
-        # are value-gated via exact-verification or invariant literals,
-        # see their docstrings.
         "spatial_transform_tranche4": """
             SELECT * FROM (VALUES
               (CAST(1 AS BIGINT), 2743195.5, 914398.5),

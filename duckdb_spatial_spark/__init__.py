@@ -9,8 +9,6 @@ Re-expresses the capability surface of the duckdb/duckdb_spatial extension
 * ~110 ST_* functions registered as Spark SQL functions
 * spatial join, Hilbert clustering + bbox pruning (R-tree analog)
 * ST_Read-style format readers and writers
-* text-pipeline operators (operators.pipeline, textops, lm, events), outside
-  the reference's surface
 """
 
 __version__ = "0.1.0"

@@ -112,14 +112,13 @@ def _with_bbox(df: DataFrame, geom_col: str, prefix: str, with_isbox: bool = Fal
 
 def _grid_params(left_b: DataFrame, right_b: DataFrame, lp: str, rp: str, cell_size, pad=0.0):
     """Grid origin + cell size + hot-cell set. With an explicit
-    ``cell_size`` this is free (fixed origin, no job, no skew detection —
-    same contract as the streaming variant). Without one, a bounded
-    ``limit()`` sample per side estimates the average bbox size — no
-    full-table pass (the reference sizes from bind-time stats; at 100 TB a
-    full stats pass per join would be two extra scans). The same left-side
-    sample flags **hot cells** (a dense city = one shuffle key): any cell
-    holding >=2% of the sampled probe rows gets salted R ways in
-    :func:`_grid_join`."""
+    ``cell_size`` this is free (fixed origin, no job, no skew detection).
+    Without one, a bounded ``limit()`` sample per side estimates the
+    average bbox size — no full-table pass (the reference sizes from
+    bind-time stats; at 100 TB a full stats pass per join would be two
+    extra scans). The same left-side sample flags **hot cells** (a dense
+    city = one shuffle key): any cell holding >=2% of the sampled probe
+    rows gets salted R ways in :func:`_grid_join`."""
     if cell_size is not None:
         return 0.0, 0.0, float(cell_size), {}
     parts = []
@@ -405,56 +404,6 @@ def st_join(
             unmatched = unmatched.withColumn(c, F.lit(None).cast(joined.schema[c].dataType))
         return joined.unionByName(unmatched).drop(_SJ_ID)
     raise ValueError(f"unsupported how={how!r}")
-
-
-def st_join_stream_static(
-    stream,
-    static: DataFrame,
-    predicate: str = "within",
-    cell_size: float = 100.0,
-    left_point: tuple = ("x", "y"),
-    right_geom: str = "geom",
-    distance: float | None = None,
-) -> DataFrame:
-    """Stream-static spatial join for Structured Streaming.
-
-    The batch grid join sizes its grid with two aggregate jobs — illegal on
-    a stream — so this variant takes an explicit ``cell_size`` and a fixed
-    origin (0,0). Stream side provides point columns (pure-Column cell
-    assignment, watermark-compatible); the static side is bbox'd/exploded
-    once and broadcast by Spark's stream-static equi-join."""
-    px, py = (F.col(c) for c in left_point)
-    pad = float(distance or 0.0)
-    lc = (
-        stream.filter(px.isNotNull() & py.isNotNull())
-        .withColumn("_cx", F.explode(F.sequence(
-            F.floor((px - pad) / cell_size).cast("long"), F.floor((px + pad) / cell_size).cast("long"))))
-        .withColumn("_cy", F.explode(F.sequence(
-            F.floor((py - pad) / cell_size).cast("long"), F.floor((py + pad) / cell_size).cast("long"))))
-        .withColumn("_cell", F.col("_cx") * _CELL_SHIFT + F.col("_cy"))
-        .drop("_cx", "_cy")
-    )
-    rb = _with_bbox(static, right_geom, "r")
-    rc = _cells(rb, "r", 0.0, 0.0, cell_size, 0.0).drop("r_cx", "r_cy")
-    cond = (
-        (px - pad <= F.col("r_bbox.max_x"))
-        & (px + pad >= F.col("r_bbox.min_x"))
-        & (py - pad <= F.col("r_bbox.max_y"))
-        & (py + pad >= F.col("r_bbox.min_y"))
-    )
-    joined = lc.join(rc, lc["_cell"] == rc["r_cell"], "inner").filter(cond)
-    # reference-point dedup on the stream side
-    ref_cell = (
-        F.floor((F.greatest(px - pad, F.col("r_bbox.min_x"))) / cell_size).cast("long") * _CELL_SHIFT
-        + F.floor((F.greatest(py - pad, F.col("r_bbox.min_y"))) / cell_size).cast("long")
-    )
-    joined = joined.filter(F.col("_cell") == ref_cell)
-    recheck = _make_recheck_udf(predicate, distance)
-    from ..functions import udfs as _udfs
-
-    pt = _udfs.st_point(px, py)
-    joined = joined.filter(recheck(pt, F.col(right_geom)))
-    return joined.drop("_cell", "r_cell", "r_bbox")
 
 
 def _grid_join(lb, rb, predicate, left_geom, right_geom, cell_size, distance, native_exact=None):

@@ -310,6 +310,30 @@ def hilbert_cluster(
     )
 
 
+def _finite(*cols):
+    """True where every column is non-NULL and non-NaN."""
+    cond = F.lit(True)
+    for c in cols:
+        cond = cond & c.isNotNull() & ~F.isnan(c)
+    return cond
+
+
+def _finite_bounds(df: DataFrame, min_x, min_y, max_x, max_y) -> tuple:
+    """Layout bounds — (min(min_x), min(min_y), max(max_x), max(max_y)) —
+    over the rows whose four coordinates are all non-NULL and non-NaN, in
+    one JVM aggregate. Other rows get a NULL hilbert, so they must not
+    reach the bounds: Spark's max() returns NaN if any input is NaN, and a
+    NaN bound has no defined int64 cast in hilbert_scaled. With no such
+    row the bounds degenerate to (0, 0, 0, 0), which keeps the downstream
+    arithmetic well-defined."""
+    r = (
+        df.filter(_finite(min_x, min_y, max_x, max_y))
+        .agg(F.min(min_x), F.min(min_y), F.max(max_x), F.max(max_y))
+        .collect()[0]
+    )
+    return tuple(r) if r[0] is not None else (0.0, 0.0, 0.0, 0.0)
+
+
 def hilbert_cluster_points(
     df: DataFrame,
     x_col: str,
@@ -341,19 +365,15 @@ def hilbert_cluster_points(
 
     spark = df.sparkSession
     n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # NULL/NaN-coordinate rows get a NULL hilbert, so they must not reach
-    # the stats either: Spark's max() returns NaN if any input is NaN, and
-    # a NaN in the sample has no defined int64 cast in hilbert_scaled.
-    finite = df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y")).filter(
-        F.col("x").isNotNull() & F.col("y").isNotNull()
-        & ~F.isnan("x") & ~F.isnan("y")
-    )
+    # NULL/NaN-coordinate rows get a NULL hilbert, so they stay out of the
+    # bounds and the split sample (see _finite_bounds)
+    px, py = F.col(x_col), F.col(y_col)
     if bounds is None:
-        r = finite.agg(F.min("x"), F.min("y"), F.max("x"), F.max("y")).collect()[0]
-        bounds = (r[0], r[1], r[2], r[3])
+        bounds = _finite_bounds(df, px, py, px, py)
     b0, b1, b2, b3 = (float(b) for b in bounds)
     sample = (
-        finite
+        df.filter(_finite(px, py))
+        .select(px.alias("x"), py.alias("y"))
         .sample(fraction=float(sample_fraction), seed=seed)
         .limit(2_000_000)  # driver-memory guard: 1% of a 100 TB table is not collectable
         .collect()
@@ -386,7 +406,6 @@ def hilbert_cluster_points(
             "route": route.astype(np.int32),
         })
 
-    px, py = F.col(x_col), F.col(y_col)
     both = px.isNotNull() & py.isNotNull()
     keep = [c for c in df.columns if c not in (x_col, y_col)]
     routed = df.select("*", hilbert_route(px, py).alias("_s")).select(
@@ -448,16 +467,15 @@ def hilbert_cluster_boxes(
     n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "32"))
     mnx, mny, mxx, mxy = (F.col(c) for c in (min_x_col, min_y_col, max_x_col, max_y_col))
     if bounds is None:
-        r = df.agg(F.min(mnx), F.min(mny), F.max(mxx), F.max(mxy)).collect()[0]
-        bounds = (r[0], r[1], r[2], r[3]) if r[0] is not None else (0.0, 0.0, 0.0, 0.0)
+        bounds = _finite_bounds(df, mnx, mny, mxx, mxy)
     b0, b1, b2, b3 = (float(b) for b in bounds)
     sample = (
-        df.select(((mnx + mxx) / 2).alias("x"), ((mny + mxy) / 2).alias("y"))
+        df.filter(_finite(mnx, mny, mxx, mxy))
+        .select(((mnx + mxx) / 2).alias("x"), ((mny + mxy) / 2).alias("y"))
         .sample(fraction=float(sample_fraction), seed=seed)
         .limit(2_000_000)  # driver-memory guard, same as the points lane
         .collect()
     )
-    sample = [r for r in sample if r.x is not None and r.y is not None]
     if sample:
         sx = np.asarray([r.x for r in sample], dtype=np.float64)
         sy = np.asarray([r.y for r in sample], dtype=np.float64)
@@ -557,22 +575,15 @@ def write_geo_parquet(
         if bounds is None:
             # compute the exact bounds HERE (same JVM agg the cluster lane
             # would run) so the metadata sidecar needs no extra job
-            r = df.agg(
-                F.min(point_xy[0]), F.min(point_xy[1]), F.max(point_xy[0]), F.max(point_xy[1])
-            ).collect()[0]
-            # empty input (or all-null coordinates) aggregates to NULLs —
-            # degenerate bounds keep the downstream arithmetic well-defined
-            bounds = (r[0], r[1], r[2], r[3]) if r[0] is not None else (0.0, 0.0, 0.0, 0.0)
+            px, py = F.col(point_xy[0]), F.col(point_xy[1])
+            bounds = _finite_bounds(df, px, py, px, py)
         clustered = hilbert_cluster_points(
             df, point_xy[0], point_xy[1], geom_col, bounds, num_partitions,
             sample_fraction if sample_fraction else 0.01,
         )
     elif box_xyxy is not None:
         if bounds is None:
-            r = df.agg(
-                F.min(box_xyxy[0]), F.min(box_xyxy[1]), F.max(box_xyxy[2]), F.max(box_xyxy[3])
-            ).collect()[0]
-            bounds = (r[0], r[1], r[2], r[3]) if r[0] is not None else (0.0, 0.0, 0.0, 0.0)
+            bounds = _finite_bounds(df, *(F.col(c) for c in box_xyxy))
         clustered = hilbert_cluster_boxes(
             df, *box_xyxy, geom_col=geom_col, bounds=bounds,
             num_partitions=num_partitions,

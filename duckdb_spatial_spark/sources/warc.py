@@ -1,8 +1,5 @@
 """WARC (ISO 28500 / WARC/1.0) reader + writer — the web-archive
-container CommonCrawl ships, i.e. the true SOURCE format of web-scale
-training data (the crawl-prep operators ``url_canonicalize`` /
-``robots_allowed`` / ``html_extract_text`` consume what this reader
-emits).
+container CommonCrawl ships.
 
 Public wire format: text-framed records —
 

@@ -4,7 +4,8 @@ The driver rows import the package lazily, inside their bodies, so a
 deleted or renamed module only surfaces when that row runs. These checks
 catch it statically: every package module imports, every lazy
 ``from duckdb_spatial_spark... import name`` in ``__spark_entry__.py``
-resolves, and every ``oracle_sql()`` key names a registered row.
+resolves, every ``oracle_sql()`` key names a registered row, and no
+row function or oracle helper is left behind with no caller.
 """
 
 import ast
@@ -68,3 +69,19 @@ def test_every_oracle_names_a_row():
     rows = set(E.queries()) | set(E.retired_queries())
     orphans = sorted(set(E.oracle_sql()) - rows)
     assert not orphans, orphans
+
+
+def test_no_orphan_row_or_oracle_helper():
+    tree = ast.parse(_ENTRY.read_text())
+    defs = [n.name for n in tree.body if isinstance(n, ast.FunctionDef)]
+    rows = set(E.queries().values()) | set(E.retired_queries().values())
+    unregistered = [f for f in defs if f.startswith("q_") and getattr(E, f) not in rows]
+    called = {
+        n.func.id
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    }
+    uncalled = [
+        f for f in defs if f.startswith("_") and f.endswith("_oracle") and f not in called
+    ]
+    assert not unregistered and not uncalled, (unregistered, uncalled)

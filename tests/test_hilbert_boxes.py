@@ -18,6 +18,7 @@ from duckdb_spatial_spark.plans import (
     scan_geo_parquet,
     write_geo_parquet,
 )
+from duckdb_spatial_spark.plans.pruning import read_layout_meta
 
 
 def _src(spark, n=2000, with_nulls=False):
@@ -111,11 +112,30 @@ def test_point_lane_null_semantics(spark):
 
 
 def test_write_geo_parquet_box_lane_pruned_scan(spark, tmp_path):
-    src = _src(spark, n=5000)
+    """Box lane windowed scan; both ingest lanes keep a NaN-coordinate row
+    out of the layout bounds (a NaN bound has no int64 cast)."""
+    import math
+    import warnings
+
+    finite = _src(spark, n=5000)
+    src = finite.unionByName(spark.sql(
+        "SELECT CAST(5000 AS BIGINT) AS id, CAST('NaN' AS DOUBLE) AS mx,"
+        " 10.0D AS my, CAST('NaN' AS DOUBLE) AS mxx, 12.0D AS mxy"
+    ))
     path = str(tmp_path / "boxes")
-    write_geo_parquet(src, path, num_partitions=4, box_xyxy=("mx", "my", "mxx", "mxy"))
+    pts_path = str(tmp_path / "points")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        write_geo_parquet(src, path, num_partitions=4, box_xyxy=("mx", "my", "mxx", "mxy"))
+        write_geo_parquet(src, pts_path, num_partitions=4, point_xy=("mx", "my"))
+    ext = finite.agg(
+        F.min("mx"), F.min("my"), F.max("mx"), F.max("my"), F.max("mxx"), F.max("mxy")
+    ).collect()[0]
+    for p, want in ((path, [ext[0], ext[1], ext[4], ext[5]]), (pts_path, list(ext[:4]))):
+        got = read_layout_meta(p)["bounds"]
+        assert all(math.isfinite(v) for v in got) and got == want, (p, got, want)
     full = spark.read.parquet(path)
-    assert full.count() == 5000
+    assert full.count() == 5001
     # pruned windowed count == exact filter over the raw bounds
     expected = src.filter(
         (F.col("mx") >= 100) & (F.col("my") >= 100)

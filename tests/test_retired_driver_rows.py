@@ -34,8 +34,7 @@ def duck_con():
     import duckdb
 
     con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem"
-              " events documents embeddings").split():
+    for t in E.TABLES:
         con.execute(f"CREATE VIEW {t} AS FROM '{_SF_DIR}/{t}.parquet'")
     yield con
     con.close()

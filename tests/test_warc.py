@@ -1,8 +1,5 @@
 """WARC (ISO 28500) codec: roundtrips plain + per-record-gzip, HTTP
-payload splitting, record-type filtering, the crawl-prep composition
-(WARC -> html_extract_text -> robots gate), header-only metadata."""
-
-from pyspark.sql import functions as F
+payload splitting, record-type filtering, header-only metadata."""
 
 
 def _mk(spark, n=12):
@@ -33,32 +30,6 @@ def test_warc_roundtrip_plain_and_gzip(spark, tmp_path):
                 f"<html><head><title>T{i}</title></head>"
                 f"<body><p>body {i}</p></body></html>"
             )
-
-
-def test_warc_crawl_prep_composition(spark, tmp_path):
-    """The end-to-end crawl story: WARC responses -> HTML text extraction
-    -> robots gate."""
-    from duckdb_spatial_spark.operators.pipeline import html_extract_text, robots_allowed
-    from duckdb_spatial_spark.sources import st_read, st_write
-
-    p = str(tmp_path / "c.warc")
-    st_write(_mk(spark), p)
-    recs = st_read(spark, p).selectExpr(
-        "target_uri AS url",
-        "regexp_extract(target_uri, 'http://([^/]+)/', 1) AS domain",
-        "CAST(payload AS STRING) AS html",
-    )
-    txt = html_extract_text(recs)
-    robots = spark.createDataFrame(
-        [("w0.com", "User-agent: *\nDisallow: /\n")],
-        "domain string, robots_txt string",
-    )
-    out = robots_allowed(txt, robots).collect()
-    assert len(out) == 12
-    for r in out:
-        i = int(r.url.rsplit("p", 1)[1])
-        assert r.title == f"T{i}" and r.text == f"body {i}"
-        assert r.allowed is (not r.domain == "w0.com")
 
 
 def test_warc_meta_and_type_filter(spark, tmp_path):
