@@ -2941,8 +2941,8 @@ def q_netcdf_roundtrip(spark, sf_dir):
 
 def q_zonal_stats(spark, sf_dir):
     """Zonal statistics (operators/join.zonal_stats): point 'cells' with a
-    value column aggregated per containing zone polygon — forced through
-    the PARTITIONED grid lane (strategy='grid') so the driver pins the
+    value column aggregated per containing zone polygon — through st_join's
+    grid plan with a fixed cell size, so the driver pins the
     solid-rectangle short-circuit path end-to-end (rects are boxes: the
     recheck UDF sees only boundary rows with NULL-masked inputs).
     avg intentionally derived from the integer sum / count on both sides."""
@@ -3344,6 +3344,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "s57_roundtrip": q_s57_roundtrip,
         "spatial_join_point_in_rect": q_spatial_join_point_in_rect,
         "spatial_join_rect_overlap": q_spatial_join_rect_overlap,
+        # --- un-retired: st_join's broadcast lane is gone, so both
+        # dwithin rows now run the grid plan ---
+        "spatial_dwithin_grouped": q_spatial_dwithin_grouped,
+        "spatial_dwithin_join_count": q_spatial_dwithin_join_count,
         "spatial_transform_nad27": q_spatial_transform_nad27,
         "spatial_transform_paris": q_spatial_transform_paris,
         "spatial_transform_stateplane": q_spatial_transform_stateplane,
@@ -3412,8 +3416,6 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatial_distance": q_spatial_distance,
         "spatial_distance_sphere": q_spatial_distance_sphere,
         "spatial_distance_spheroid": q_spatial_distance_spheroid,
-        "spatial_dwithin_grouped": q_spatial_dwithin_grouped,
-        "spatial_dwithin_join_count": q_spatial_dwithin_join_count,
         "spatial_envelope_count": q_spatial_envelope_count,
         "spatial_envelope_count_native": q_spatial_envelope_count_native,
         "spatial_extent_agg": q_spatial_extent_agg,

@@ -20,10 +20,10 @@ see PAPERS.md):
      exactness argument as the reference (bbox overlap is implied by all
      supported predicates, ``optimizer_rules.cpp:30-31``)
 
-A **broadcast** strategy covers the small-side case (the reference's
-prepared-geometry probe, ``geos_executor.hpp:28-67``): the small side is
-collected into an in-memory grid index, broadcast, and probed per Arrow
-batch with mapInPandas — zero shuffle.
+This is the only plan, as in the reference. A small right side is
+broadcast by Spark's own ``autoBroadcastJoinThreshold``; a dense cell on a
+shuffled join is split by AQE's skew-join handling
+(``spark.sql.adaptive.skewJoin.enabled``), so the operator does no salting.
 
 All 10 reference predicates are supported; ``ST_Disjoint`` is NOT eligible
 (same exclusion as ``optimizer_rules.cpp:95``).
@@ -31,16 +31,12 @@ All 10 reference predicates are supported; ``ST_Disjoint`` is NOT eligible
 
 from __future__ import annotations
 
-import math
-from collections import defaultdict
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geo import algorithms as A
-from ..geo import wkb as WKB
 from ..functions import udfs
 
 _PREDICATES = {
@@ -111,16 +107,14 @@ def _with_bbox(df: DataFrame, geom_col: str, prefix: str, with_isbox: bool = Fal
 
 
 def _grid_params(left_b: DataFrame, right_b: DataFrame, lp: str, rp: str, cell_size, pad=0.0):
-    """Grid origin + cell size + hot-cell set. With an explicit
-    ``cell_size`` this is free (fixed origin, no job, no skew detection).
-    Without one, a bounded ``limit()`` sample per side estimates the
-    average bbox size — no full-table pass (the reference sizes from
-    bind-time stats; at 100 TB a full stats pass per join would be two
-    extra scans). The same left-side sample flags **hot cells** (a dense
-    city = one shuffle key): any cell holding >=2% of the sampled probe
-    rows gets salted R ways in :func:`_grid_join`."""
+    """Grid origin + cell size. With an explicit ``cell_size`` this is
+    free (fixed origin, no job). Without one, a bounded ``limit()`` sample
+    per side estimates the average bbox size — no full-table pass (the
+    reference sizes from bind-time stats; at 100 TB a full stats pass per
+    join would be two extra scans). Returns None when either side has no
+    non-null geometry."""
     if cell_size is not None:
-        return 0.0, 0.0, float(cell_size), {}
+        return 0.0, 0.0, float(cell_size)
     parts = []
     for side, (df, p) in enumerate(((left_b, lp), (right_b, rp))):
         bb = f"{p}_bbox"
@@ -153,21 +147,7 @@ def _grid_params(left_b: DataFrame, right_b: DataFrame, lp: str, rp: str, cell_s
     if base <= 0:
         base = extent / 1024.0
     cell_size = max(base, extent / float(1 << 20))
-
-    # hot-cell detection from the left (probe) sample: center-cell counts
-    a = stats[0]
-    cx = np.floor(((a[:, 0] + a[:, 2]) / 2.0 - min_x) / cell_size).astype(np.int64)
-    cy = np.floor(((a[:, 1] + a[:, 3]) / 2.0 - min_y) / cell_size).astype(np.int64)
-    packed = cx * _CELL_SHIFT + cy
-    uniq, counts = np.unique(packed, return_counts=True)
-    n = len(a)
-    hot = {}
-    for cell, cnt in zip(uniq, counts):
-        share = cnt / n
-        if share >= 0.02 and cnt >= 8:
-            # R ~ the number of average cells this one is worth, capped
-            hot[int(cell)] = int(min(64, max(2, round(share * n / max(counts.mean(), 1.0)))))
-    return float(min_x), float(min_y), float(cell_size), hot
+    return float(min_x), float(min_y), float(cell_size)
 
 
 def _cells(df: DataFrame, p: str, origin_x, origin_y, cs, pad) -> DataFrame:
@@ -246,7 +226,7 @@ def st_join(
     left_geom: str = "geom",
     right_geom: str = "geom",
     how: str = "inner",
-    strategy: str = "auto",
+    strategy: str = "grid",
     cell_size: float | None = None,
     distance: float | None = None,
     left_point: tuple | None = None,
@@ -268,13 +248,20 @@ def st_join(
     cached-RTree-bbox analog). With ``right_is_box=True`` and a point left
     side, within/intersects/covered_by/dwithin joins skip the
     exact-recheck UDF entirely — the whole join is JVM-side (bbox test IS
-    the exact test for point×box)."""
+    the exact test for point×box).
+
+    ``strategy`` accepts only ``"grid"``, the one plan."""
+    if predicate == "disjoint":
+        raise ValueError("disjoint joins are not accelerable (reference excludes them too)")
     if predicate not in _PREDICATES:
         raise ValueError(f"unsupported predicate {predicate!r}; supported: {sorted(_PREDICATES)}")
     if predicate == "dwithin" and distance is None:
         raise ValueError("dwithin requires distance=")
-    if predicate == "disjoint":
-        raise ValueError("disjoint joins are not accelerable (reference excludes them too)")
+    if strategy != "grid":
+        raise ValueError(
+            f"unsupported strategy {strategy!r}: st_join has one plan, 'grid' "
+            "(the 'broadcast' and 'auto' strategies were removed)"
+        )
 
     # left/semi/anti reconciliation joins back on a surrogate row id, never on
     # the left columns themselves: plain equality drops NULL-bearing rows,
@@ -362,36 +349,9 @@ def st_join(
             )
             native_exact = F.sqrt(dx * dx + dy * dy) <= F.lit(float(distance))
 
-    if strategy == "auto":
-        # broadcast when the build side is small by plan statistics (the
-        # analog of Spark's own autoBroadcastJoinThreshold); native-exact
-        # grid is already UDF-free so prefer it when available
-        strategy = "grid"
-        if native_exact is None and right_geom in rb.columns:
-            try:
-                # broadcast probe is Python-per-row: only worth it for tiny
-                # build sides (measured: 20k-geometry side is faster via grid)
-                size = int(rb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-                if size < 256 * 1024:
-                    strategy = "broadcast"
-            except Exception as e:  # noqa: BLE001 - stats probe is advisory
-                import logging
-
-                logging.getLogger(__name__).debug(
-                    "plan-stats probe failed, staying on grid strategy: %s", e
-                )
-
-    if strategy == "broadcast":
-        if left_geom not in lb.columns or right_geom not in rb.columns:
-            raise ValueError(
-                "broadcast strategy needs geometry columns on both sides; "
-                "native bbox-only inputs are grid-join only"
-            )
-        joined = _broadcast_join(lb, rb, predicate, left_geom, right_geom, distance, left, right)
-    else:
-        joined = _grid_join(
-            lb, rb, predicate, left_geom, right_geom, cell_size, distance, native_exact
-        )
+    joined = _grid_join(
+        lb, rb, predicate, left_geom, right_geom, cell_size, distance, native_exact
+    )
 
     if how == "inner":
         return joined
@@ -413,38 +373,10 @@ def _grid_join(lb, rb, predicate, left_geom, right_geom, cell_size, distance, na
     out_cols = [c for c in lb.columns if c not in aux] + [c for c in rb.columns if c not in aux]
     if params is None:  # one side has no non-null geometry
         return lb.limit(0).crossJoin(rb.limit(0)).select(*out_cols)
-    ox, oy, cs, hot = params
+    ox, oy, cs = params
 
     lc = _cells(lb, "l", ox, oy, cs, pad)
     rc = _cells(rb, "r", ox, oy, cs, 0.0)
-
-    if hot:
-        # sub-split hot cells: the probe side picks one of R salts (hashed
-        # from its bbox corner), the build side replicates into all R — a
-        # dense city stops being a single shuffle key. Pairs still meet
-        # exactly once (one salt per left row, all salts on the right).
-        R = max(hot.values())
-        hot_list = list(hot)
-        salt_l = (
-            F.when(
-                F.col("l_cell").isin(hot_list),
-                F.pmod(F.xxhash64(F.col("l_bbox.min_x"), F.col("l_bbox.min_y")), F.lit(R)),
-            )
-            .otherwise(F.lit(0))
-            .cast("int")
-        )
-        lc = lc.withColumn("l_salt", salt_l)
-        rc = rc.withColumn(
-            "r_salt",
-            F.explode(
-                F.when(
-                    F.col("r_cell").isin(hot_list), F.sequence(F.lit(0), F.lit(R - 1))
-                ).otherwise(F.sequence(F.lit(0), F.lit(0)))
-            ),
-        ).withColumn("r_salt", F.col("r_salt").cast("int"))
-        join_cond = (lc["l_cell"] == rc["r_cell"]) & (lc["l_salt"] == rc["r_salt"])
-    else:
-        join_cond = None
 
     bbox_overlap = (
         (F.col("l_bbox.min_x") - pad <= F.col("r_bbox.max_x"))
@@ -461,7 +393,7 @@ def _grid_join(lb, rb, predicate, left_geom, right_geom, cell_size, distance, na
     )
 
     pairs = (
-        lc.join(rc, on=join_cond if join_cond is not None else lc["l_cell"] == rc["r_cell"], how="inner")
+        lc.join(rc, on=lc["l_cell"] == rc["r_cell"], how="inner")
         .filter(bbox_overlap)
         .filter(F.col("l_cell") == ref_cell)
     )
@@ -522,186 +454,6 @@ def _grid_join(lb, rb, predicate, left_geom, right_geom, cell_size, distance, na
     return pairs.select(*out_cols)
 
 
-def _broadcast_join(lb, rb, predicate, left_geom, right_geom, distance, left, right):
-    """Collect + broadcast the right side as an in-memory grid index; probe
-    the left side per Arrow batch (no shuffle at all)."""
-    aux = {"l_bbox", "r_bbox", "l_is_box", "r_is_box"}
-    out_cols = [c for c in lb.columns if c not in aux] + [c for c in rb.columns if c not in aux]
-    r_cols = [c for c in rb.columns if c not in aux]
-    # Arrow collect of the build side; r_bbox comes from the _with_bbox
-    # barrier — no driver-side WKB parse, raw bytes broadcast as-is
-    # (executors parse lazily, LRU-cached)
-    flat = rb.select(
-        *r_cols,
-        F.col("r_bbox.min_x").alias("__mnx"),
-        F.col("r_bbox.min_y").alias("__mny"),
-        F.col("r_bbox.max_x").alias("__mxx"),
-        F.col("r_bbox.max_y").alias("__mxy"),
-    ).toPandas()
-    flat = flat[flat[right_geom].notna() & flat["__mnx"].notna()]
-    if not len(flat):
-        empty = lb.limit(0)
-        for c in r_cols:
-            empty = empty.withColumn(c, F.lit(None))
-        return empty.select(*out_cols)
-    wkbs = [bytes(b) for b in flat[right_geom]]
-    payload = flat[r_cols].to_numpy(dtype=object).tolist()
-    boxes_np = flat[["__mnx", "__mny", "__mxx", "__mxy"]].to_numpy(dtype=np.float64)
-    boxes = boxes_np
-    # grid sized to ~4 entries per cell
-    span_x = max(boxes_np[:, 2].max() - boxes_np[:, 0].min(), 1e-9)
-    cs = max(span_x / max(int(np.sqrt(len(boxes) / 4)) + 1, 1), 1e-9)
-    ox, oy = float(boxes_np[:, 0].min()), float(boxes_np[:, 1].min())
-    index = defaultdict(list)
-    for i, bb in enumerate(boxes):
-        for cx in range(math.floor((bb[0] - ox) / cs), math.floor((bb[2] - ox) / cs) + 1):
-            for cy in range(math.floor((bb[1] - oy) / cs), math.floor((bb[3] - oy) / cs) + 1):
-                index[(cx, cy)].append(i)
-    # CSR form of the same index for the vectorized point-probe lane:
-    # sorted packed cell ids + per-cell [start, end) into a rect-id array
-    csr_pairs = sorted(
-        ((cx * (1 << 32) + cy, i) for (cx, cy), ids in index.items() for i in ids)
-    )
-    csr_cells = np.fromiter((p[0] for p in csr_pairs), dtype=np.int64, count=len(csr_pairs))
-    csr_rects = np.fromiter((p[1] for p in csr_pairs), dtype=np.int64, count=len(csr_pairs))
-    cell_uniq, cell_starts = np.unique(csr_cells, return_index=True)
-    cell_ends = np.r_[cell_starts[1:], len(csr_cells)]
-    # axis-aligned-box detection (shared fastpath.box_flags): a rect that
-    # IS the rectangle of its own bbox needs no geometry test at all — any
-    # vertex order / winding / starting corner qualifies. (A previous
-    # byte-compare against one canonical vertex order silently disabled
-    # this lane when st_makeenvelope switched to the reference's
-    # CreateFromBox order: every probe fell back to per-geometry
-    # point-in-polygon, ~3x slower.) Degenerate (zero-extent) rects route
-    # to the point-in-polygon fallback instead.
-    from ..functions import fastpath as _fp
-
-    is_box = _fp.box_flags(
-        pd.Series(wkbs, dtype=object),
-        boxes_np[:, 0], boxes_np[:, 1], boxes_np[:, 2], boxes_np[:, 3],
-    )
-
-    spark = lb.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (index, boxes_np, wkbs, payload, ox, oy, cs,
-         cell_uniq, cell_starts, cell_ends, csr_rects, is_box)
-    )
-    pred_name = predicate
-    dist = distance
-    l_schema = lb.drop("l_bbox").schema
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(list(l_schema.fields) + [f for f in rb.schema.fields if f.name not in aux])
-    l_cols = [c for c in lb.columns if c != "l_bbox"]
-    lg_idx = l_cols.index(left_geom)
-
-    def probe(batches):
-        import functools
-
-        from ..functions import fastpath
-
-        (index, boxes_np, wkbs, payload, ox, oy, cs,
-         cell_uniq, cell_starts, cell_ends, csr_rects, is_box) = bc.value
-        parse = functools.lru_cache(maxsize=None)(lambda i: WKB.from_wkb(wkbs[i]))
-        pred = _PREDICATES[pred_name]
-        pad = float(dist or 0.0)
-        names = [f.name for f in out_schema.fields]
-
-        def emit(pdf, jj, ri):
-            if len(jj):
-                left_out = pdf.iloc[jj].reset_index(drop=True)
-                pay = pd.DataFrame([payload[i] for i in ri], columns=names[len(l_cols):])
-                return pd.concat([left_out.set_axis(names[: len(l_cols)], axis=1), pay], axis=1)
-            return pd.DataFrame({n_: pd.Series(dtype="object") for n_ in names})
-
-        for pdf in batches:
-            # vectorized lane: all-point probe side. Each point falls in
-            # exactly ONE grid cell (pad is 0 for these predicates) and the
-            # build index registered every geometry in every cell its bbox
-            # overlaps, so probing the point's own cell is complete. The
-            # (point, rect) pair list is built as one ragged numpy gather —
-            # O(candidate pairs), zero Python loops over rects; axis-aligned
-            # boxes resolve with pure compares, other polygons get a
-            # point-in-polygon test grouped per distinct geometry.
-            if pred_name in ("within", "intersects", "covered_by") and len(pdf):
-                pa = fastpath.points_xy(pdf.iloc[:, lg_idx])
-                if pa is not None:
-                    xs, ys, mask = pa
-                    cxs = np.floor((xs - ox) / cs).astype(np.int64)
-                    cys = np.floor((ys - oy) / cs).astype(np.int64)
-                    packed = cxs * (1 << 32) + cys
-                    pos = np.searchsorted(cell_uniq, packed)
-                    pos_c = np.clip(pos, 0, max(len(cell_uniq) - 1, 0))
-                    valid = mask & (len(cell_uniq) > 0) & (cell_uniq[pos_c] == packed)
-                    s_ = cell_starts[pos_c]
-                    counts = np.where(valid, cell_ends[pos_c] - s_, 0)
-                    total = int(counts.sum())
-                    pt_rep = np.repeat(np.arange(len(xs)), counts)
-                    offs = np.cumsum(counts) - counts
-                    within_off = np.arange(total) - np.repeat(offs, counts)
-                    rid = csr_rects[np.repeat(s_, counts) + within_off]
-                    bbp = boxes_np[rid]
-                    px, py = xs[pt_rep], ys[pt_rep]
-                    if pred_name == "within":
-                        box_ok = (px > bbp[:, 0]) & (px < bbp[:, 2]) & (py > bbp[:, 1]) & (py < bbp[:, 3])
-                    else:
-                        box_ok = (px >= bbp[:, 0]) & (px <= bbp[:, 2]) & (py >= bbp[:, 1]) & (py <= bbp[:, 3])
-                    boxm = is_box[rid]
-                    keep = boxm & box_ok
-                    # non-box rects: exact point-in-polygon per distinct geometry
-                    nb = np.nonzero(~boxm & box_ok)[0]
-                    nonpoly = False
-                    if len(nb):
-                        nb_r = rid[nb]
-                        order = np.argsort(nb_r, kind="stable")
-                        nb_sorted = nb[order]
-                        r_sorted = nb_r[order]
-                        grp_starts = np.r_[0, np.nonzero(np.diff(r_sorted))[0] + 1]
-                        grp_ends = np.r_[grp_starts[1:], len(r_sorted)]
-                        for g0, g1 in zip(grp_starts, grp_ends):
-                            i = int(r_sorted[g0])
-                            sel = nb_sorted[g0:g1]
-                            st_arr = fastpath._poly_state_or_none(
-                                (px[sel], py[sel], None), parse(i)
-                            )
-                            if st_arr is None:
-                                nonpoly = True
-                                break
-                            ok = st_arr == 2 if pred_name == "within" else st_arr >= 1
-                            keep[sel[ok]] = True
-                    if not nonpoly:
-                        hit = np.nonzero(keep)[0]
-                        yield emit(pdf, pt_rep[hit], rid[hit])
-                        continue
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                b = row[lg_idx]
-                if b is None:
-                    continue
-                g = WKB.from_wkb(bytes(b))
-                bb = A.bounds(g)
-                if bb is None:
-                    continue
-                cand = set()
-                for cx in range(math.floor((bb[0] - pad - ox) / cs), math.floor((bb[2] + pad - ox) / cs) + 1):
-                    for cy in range(math.floor((bb[1] - pad - oy) / cs), math.floor((bb[3] + pad - oy) / cs) + 1):
-                        cand.update(index.get((cx, cy), ()))
-                for i in sorted(cand):
-                    obb = boxes_np[i]
-                    if bb[0] - pad > obb[2] or bb[2] + pad < obb[0] or bb[1] - pad > obb[3] or bb[3] + pad < obb[1]:
-                        continue
-                    og = parse(i)
-                    ok = A.dwithin(g, og, pad) if pred_name == "dwithin" else pred(g, og)
-                    if ok:
-                        out_rows.append(list(row) + payload[i])
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=[f.name for f in out_schema.fields])
-            else:
-                yield pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
-
-    return lb.drop("l_bbox").mapInPandas(probe, schema=out_schema)
-
-
 def zonal_stats(
     cells: DataFrame,
     zones: DataFrame,
@@ -717,8 +469,8 @@ def zonal_stats(
     grids) flattened onto the vector engine: grid cells arrive as POINT
     rows (e.g. from ``sources.netcdf3.read_netcdf``), zones as polygons.
 
-    One spatial join (all st_join lanes apply — grid/broadcast/native,
-    box short-circuit included) followed by one map-side-combinable
+    One spatial join (st_join's grid plan with all its input forms —
+    native point/bbox sidecars and the box short-circuit included) followed by one map-side-combinable
     aggregate: n_cells + sum/avg/min/max per value column. No other
     shuffle; at 100 TB the join's grid exchange dominates and the agg
     combines map-side."""

@@ -85,3 +85,9 @@ def test_no_orphan_row_or_oracle_helper():
         f for f in defs if f.startswith("_") and f.endswith("_oracle") and f not in called
     ]
     assert not unregistered and not uncalled, (unregistered, uncalled)
+
+
+def test_queries_fit_the_driver_window():
+    # the external driver oracle-checks only the first 50 queries() rows;
+    # a row past that would go unchecked without any failure
+    assert len(E.queries()) <= 50

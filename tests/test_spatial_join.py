@@ -1,8 +1,8 @@
 """Spatial join + aggregate correctness.
 
-Grid-tessellation and broadcast strategies must both reproduce the naive
-cross-join + exact-predicate result (the equivalence the reference's
-optimizer rewrite guarantees, ``optimizer_rules.cpp:261-264``).
+The grid-tessellation join must reproduce the naive cross-join +
+exact-predicate result (the equivalence the reference's optimizer rewrite
+guarantees, ``optimizer_rules.cpp:261-264``).
 Workload shapes mirror FIXTURES.md T2/T3 (uniform points and rects).
 """
 
@@ -46,7 +46,7 @@ def _naive_pairs(spark, pts, rects, predicate, distance=None):
     return {(r.pid, r.rid) for r in crossed.filter(cond).select("pid", "rid").collect()}
 
 
-@pytest.mark.parametrize("strategy", ["grid", "broadcast"])
+@pytest.mark.parametrize("strategy", ["grid"])
 def test_point_in_rect_join(spark, strategy):
     pts = _mk_points(spark)
     rects = _mk_rects(spark)
@@ -57,7 +57,7 @@ def test_point_in_rect_join(spark, strategy):
     assert len(expected) > 50  # workload is non-trivial
 
 
-@pytest.mark.parametrize("strategy", ["grid", "broadcast"])
+@pytest.mark.parametrize("strategy", ["grid"])
 def test_rect_rect_intersects_join(spark, strategy):
     a = _mk_rects(spark, m=40, seed=1).withColumnRenamed("rid", "pid")
     b = _mk_rects(spark, m=40, seed=2)
@@ -240,9 +240,9 @@ def test_collect_agg_two_level_fold(spark):
     assert g.type_name == "MULTIPOINT" and len(g.data) == 1_000_000
 
 
-def test_grid_join_skewed_hot_cell(spark):
-    """90% of points in one tiny spot (a 'dense city'): hot-cell salting
-    must keep the grid join correct (pairs meet exactly once)."""
+def _skewed_fixture(spark):
+    """90% of 2,000 points in one tiny spot (a 'dense city', one grid
+    cell) against 30 random rects plus 5 rects covering the spot."""
     rng = random.Random(31)
     rows = []
     for i in range(2000):
@@ -258,21 +258,60 @@ def test_grid_join_skewed_hot_cell(spark):
         [(100 + i, f"POLYGON ((49 49, 51 49, 51 51, 49 51, 49 49))") for i in range(5)],
         "rid long, wkt string",
     ).withColumn("geom", udfs.st_geomfromtext("wkt")).drop("wkt")
-    rects = rects.unionByName(hot_rects)
+    return pts, rects.unionByName(hot_rects)
+
+
+def test_grid_join_skewed_hot_cell(spark):
+    """A dense city must keep the grid join correct (pairs meet exactly
+    once)."""
+    pts, rects = _skewed_fixture(spark)
     expected = _naive_pairs(spark, pts, rects, "within")
     got = st_join(pts, rects, predicate="within", strategy="grid")
     pairs = [(r.pid, r.rid) for r in got.select("pid", "rid").collect()]
-    assert len(pairs) == len(set(pairs))  # no duplicate emissions under salting
+    assert len(pairs) == len(set(pairs))  # no duplicate emissions
     assert set(pairs) == expected
     assert len(expected) > 5000  # the hot spot really concentrates pairs
 
-    # the sampler really flags the hot cell on this distribution
-    from duckdb_spatial_spark.operators.join import _grid_params, _with_bbox
 
-    lb = _with_bbox(pts, "geom", "l")
-    rb = _with_bbox(rects, "geom", "r")
-    _ox, _oy, _cs, hot = _grid_params(lb, rb, "l", "r", None, 0.0)
-    assert hot, "expected at least one hot cell for a 90%-clustered probe side"
+def test_grid_join_hot_cell_split_by_aqe(spark):
+    """With broadcast off, the hot cell's shuffle partition is split by
+    AQE's skew-join handling — the operator itself does no salting — and
+    the pairs stay exact."""
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        pts, rects = _skewed_fixture(spark)
+        got = st_join(pts, rects, predicate="within").select("pid", "rid")
+        pairs = [(r.pid, r.rid) for r in got.collect()]
+        # the adaptive plan is final only after the collect above
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin(skew=true)" in plan, plan
+        assert len(pairs) == len(set(pairs))
+        assert set(pairs) == _naive_pairs(spark, pts, rects, "within")
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_rejects_disjoint_and_removed_strategies(spark):
+    pts = _mk_points(spark, n=10)
+    rects = _mk_rects(spark, m=5)
+    with pytest.raises(ValueError, match="not accelerable"):
+        st_join(pts, rects, predicate="disjoint")
+    for strategy in ("broadcast", "auto"):
+        with pytest.raises(ValueError, match="removed"):
+            st_join(pts, rects, predicate="within", strategy=strategy)
 
 
 def test_left_bbox_persisted_sidecars(spark):
