@@ -7,18 +7,28 @@ no IEJoin physical operator, so the bbox phase is re-expressed as a
 **grid-tessellation equi-join** (the published SpatialSpark/Sedona approach,
 see PAPERS.md):
 
-  1. bbox per row (sidecar struct column, the reference's cached-bbox analog)
-  2. explode each side onto the fixed grid cells its bbox overlaps —
-     pure-Column ``explode(sequence(...))``, stays JVM-side
-  3. shuffle equi-join on cell id (hash-partitioned both sides — scales
-     linearly with executors; no broadcast of the big side)
-  4. bbox-overlap conjuncts (cheap, codegen'd)
+  1. bbox per row as four flat double columns — taken from plain columns
+     for the point/bbox sidecar forms, else from ONE mapInPandas WKB pass
+     (the reference's cached-bbox analog)
+  2. grid sizing: a point side is never sampled (its bboxes have zero
+     size); a non-point side costs one ``take`` job of its first 10k
+     bboxes; ``cell_size=`` is job-free. The join is exact on any grid,
+     only its speed depends on the sizing
+  3. a point side keeps its one cell; a non-point side explodes onto the
+     cells its bbox overlaps — one ``explode_outer`` over a linear cell
+     index, pure Column, stays JVM-side
+  4. ONE equi-join on the packed cell id (hash-partitioned both sides —
+     scales linearly with executors; no broadcast of the big side) whose
+     condition also carries the bbox-overlap terms (cheap, codegen'd), the
+     containment terms of the containment predicates and, for a point left
+     against solid boxes, the exact predicate itself
   5. de-duplicate multi-cell pairs with the *reference-point* trick: a pair
-     is emitted only in the cell containing the top-left corner of the two
-     bboxes' intersection — no dropDuplicates shuffle needed
-  6. exact predicate re-check (pandas UDF over WKB) — same two-phase
-     exactness argument as the reference (bbox overlap is implied by all
-     supported predicates, ``optimizer_rules.cpp:30-31``)
+     is emitted only in the cell containing the lower-left corner of the
+     two bboxes' intersection — no dropDuplicates shuffle needed (a point
+     left meets each right row in one cell, so it needs no such term)
+  6. exact predicate re-check (pandas UDF over WKB) as one filter — same
+     two-phase exactness argument as the reference (bbox overlap is implied
+     by all supported predicates, ``optimizer_rules.cpp:30-31``)
 
 This is the only plan, as in the reference. A small right side is
 broadcast by Spark's own ``autoBroadcastJoinThreshold``; a dense cell on a
@@ -55,19 +65,21 @@ _PREDICATES = {
 
 _CELL_SHIFT = 1 << 22  # pack (cx, cy) into one bigint cell id
 _SJ_ID = "__sj_left_id"  # surrogate key for left/semi/anti reconciliation
+_BOX = ("mnx", "mny", "mxx", "mxy")  # a side's flat bbox columns: {side}_mnx ...
 
 
-def _with_bbox(df: DataFrame, geom_col: str, prefix: str, with_isbox: bool = False) -> DataFrame:
-    """Attach a bbox struct computed in ONE Python pass per row.
+def _with_bbox(df: DataFrame, geom_col: str, p: str, with_isbox: bool = False) -> DataFrame:
+    """Attach the bbox as four flat double columns ``{p}_mnx .. {p}_mxy``,
+    computed in ONE Python pass per row; NULL/EMPTY geometries are dropped.
 
-    A plain ``withColumn(bb, st_extent(geom))`` gets re-expanded by Catalyst
-    into every downstream operator that references the struct (audited: 6
-    Python evals per grid join in round 1). mapInPandas is a hard barrier —
-    the bbox fields come out as materialized attributes, so the decode runs
-    exactly once however many times the plan references them. Point WKB
-    decodes vectorized (fastpath.bbox_arrays).
+    A plain ``st_extent(geom)`` column gets re-expanded by Catalyst into
+    every downstream operator that references it (audited: 6 Python evals
+    per grid join in round 1). mapInPandas is a hard barrier — the bbox
+    fields come out as materialized attributes, so the decode runs exactly
+    once however many times the plan references them. Point WKB decodes
+    vectorized (fastpath.bbox_arrays).
 
-    ``with_isbox=True`` additionally emits ``{prefix}_is_box`` (the row's
+    ``with_isbox=True`` additionally emits ``{p}_is_box`` (the row's
     geometry IS the solid rectangle of its bbox — detected in the same
     pass, ``fastpath.box_flags``) so downstream predicates can decide
     within/intersects from bboxes alone for rectangle rows."""
@@ -75,10 +87,10 @@ def _with_bbox(df: DataFrame, geom_col: str, prefix: str, with_isbox: bool = Fal
 
     from ..functions import fastpath
 
-    flat = [f"{prefix}_bb_mnx", f"{prefix}_bb_mny", f"{prefix}_bb_mxx", f"{prefix}_bb_mxy"]
+    flat = [f"{p}_{f}" for f in _BOX]
     extra = [T.StructField(c, T.DoubleType()) for c in flat]
     if with_isbox:
-        extra.append(T.StructField(f"{prefix}_is_box", T.BooleanType()))
+        extra.append(T.StructField(f"{p}_is_box", T.BooleanType()))
     schema = T.StructType(list(df.schema.fields) + extra)
     gi = df.columns.index(geom_col)
 
@@ -90,50 +102,64 @@ def _with_bbox(df: DataFrame, geom_col: str, prefix: str, with_isbox: bool = Fal
             cols = dict(zip(flat, (mnx[keep], mny[keep], mxx[keep], mxy[keep])))
             if with_isbox:
                 ib = fastpath.box_flags(pdf.iloc[:, gi], mnx, mny, mxx, mxy)
-                cols[f"{prefix}_is_box"] = ib[keep]
+                cols[f"{p}_is_box"] = ib[keep]
             yield out.assign(**cols)
 
-    bb = f"{prefix}_bbox"
-    out = df.mapInPandas(gen, schema=schema)
-    return out.withColumn(
-        bb,
-        F.struct(
-            F.col(flat[0]).alias("min_x"),
-            F.col(flat[1]).alias("min_y"),
-            F.col(flat[2]).alias("max_x"),
-            F.col(flat[3]).alias("max_y"),
-        ),
-    ).drop(*flat)
+    return df.mapInPandas(gen, schema=schema)
 
 
-def _grid_params(left_b: DataFrame, right_b: DataFrame, lp: str, rp: str, cell_size, pad=0.0):
-    """Grid origin + cell size. With an explicit ``cell_size`` this is
-    free (fixed origin, no job). Without one, a bounded ``limit()`` sample
-    per side estimates the average bbox size — no full-table pass (the
-    reference sizes from bind-time stats; at 100 TB a full stats pass per
-    join would be two extra scans). Returns None when either side has no
-    non-null geometry."""
+def _sql(v) -> str:
+    """SQL text for a column name, read as ``F.col`` reads it (dots nest,
+    backticks quote), or for a float as an exact double literal."""
+    if isinstance(v, str):
+        return v if "`" in v else ".".join(f"`{part}`" for part in v.split("."))
+    return f"{float(v)!r}D"
+
+
+def _sidecar(df: DataFrame, cols, p: str, extra=()) -> DataFrame:
+    """The bbox from plain columns — ``cols`` is ``(x, y)`` for a point
+    side, else ``(mnx, mny, mxx, mxy)`` — in one select and one filter.
+    A row with a NULL, NaN or infinite coordinate matches nothing and has
+    no grid cell, so it is dropped before the sizing sample and the cell
+    arithmetic (``abs(NaN) < inf`` is false in Spark)."""
+    names = [f"{p}_{f}" for f in _BOX[: len(cols)]]
+    return df.selectExpr(
+        "*", *(f"{_sql(c)} AS {n}" for c, n in zip(cols, names)), *extra
+    ).filter(" AND ".join(f"abs({n}) < double('inf')" for n in names))
+
+
+def _grid_params(sized, cell_size, pad=0.0):
+    """Grid origin + cell size, from the ``(frame, prefix)`` sides in
+    ``sized``.
+
+    Sizing rule: an explicit ``cell_size`` is free (fixed origin, no job).
+    Otherwise only the non-point sides are sampled — a point side's bboxes
+    have zero size, so it is never read — and each costs one ``take`` of
+    its first 10k bboxes: one job, one task (``coalesce(1)``), no shuffle,
+    reading only the first partitions. No full-table pass (the reference
+    sizes from bind-time stats; at 100 TB a stats pass per join would be a
+    full scan). Rows with a NULL, NaN or infinite field are dropped from
+    the sample. The job runs under the description "st_join: grid sizing
+    sample"; the caller's own description is restored afterwards.
+
+    Only performance depends on the sizing: the join is exact on any grid.
+    Returns None when a sampled side has no finite bbox."""
     if cell_size is not None:
         return 0.0, 0.0, float(cell_size)
-    parts = []
-    for side, (df, p) in enumerate(((left_b, lp), (right_b, rp))):
-        bb = f"{p}_bbox"
-        parts.append(
-            df.select(
-                F.lit(side).alias("side"),
-                F.col(f"{bb}.min_x").alias("mnx"),
-                F.col(f"{bb}.min_y").alias("mny"),
-                F.col(f"{bb}.max_x").alias("mxx"),
-                F.col(f"{bb}.max_y").alias("mxy"),
-            ).limit(10_000)
-        )
-    rows = parts[0].unionAll(parts[1]).collect()  # one job for both samples
+    sc = sized[0][0].sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("st_join: grid sizing sample")
     stats = []
-    for side in (0, 1):
-        a = np.asarray([[r.mnx, r.mny, r.mxx, r.mxy] for r in rows if r.side == side])
-        if len(a) == 0:
-            return None
-        stats.append(a)
+    try:
+        for df, p in sized:
+            rows = df.select(*(f"{p}_{f}" for f in _BOX)).coalesce(1).take(10_000)
+            a = np.array([tuple(r) for r in rows], dtype=np.float64).reshape(-1, 4)
+            a = a[np.isfinite(a).all(axis=1)]
+            if len(a) == 0:
+                return None
+            stats.append(a)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
     min_x = min(float(a[:, 0].min()) for a in stats)
     min_y = min(float(a[:, 1].min()) for a in stats)
     max_x = max(float(a[:, 2].max()) for a in stats)
@@ -142,7 +168,7 @@ def _grid_params(left_b: DataFrame, right_b: DataFrame, lp: str, rp: str, cell_s
     extent = max(max_x - min_x, max_y - min_y, 1e-9)
     # ~2 cells per avg (pad-expanded) geometry; degenerate (point) data
     # falls back to a 1024^2 grid; never more than 2^20 cells per axis
-    # (keeps packed cell ids collision-free)
+    # over the sampled extent
     base = avg_dim * 2.0 + pad * 2.0
     if base <= 0:
         base = extent / 1024.0
@@ -150,18 +176,92 @@ def _grid_params(left_b: DataFrame, right_b: DataFrame, lp: str, rp: str, cell_s
     return float(min_x), float(min_y), float(cell_size)
 
 
-def _cells(df: DataFrame, p: str, origin_x, origin_y, cs, pad) -> DataFrame:
-    """Explode rows onto overlapped grid cells — sequence() keeps it JVM-side."""
-    bb = f"{p}_bbox"
-    cx0 = F.floor((F.col(f"{bb}.min_x") - pad - origin_x) / cs).cast("long")
-    cx1 = F.floor((F.col(f"{bb}.max_x") + pad - origin_x) / cs).cast("long")
-    cy0 = F.floor((F.col(f"{bb}.min_y") - pad - origin_y) / cs).cast("long")
-    cy1 = F.floor((F.col(f"{bb}.max_y") + pad - origin_y) / cs).cast("long")
-    return (
-        df.withColumn(f"{p}_cx", F.explode(F.sequence(cx0, cx1)))
-        .withColumn(f"{p}_cy", F.explode(F.sequence(cy0, cy1)))
-        .withColumn(f"{p}_cell", F.col(f"{p}_cx") * _CELL_SHIFT + F.col(f"{p}_cy"))
-    )
+def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_size, distance):
+    """The whole bbox phase as ONE equi-join on the packed cell id: its
+    condition carries the bbox-overlap, reference-cell, containment and
+    native-exact terms. The exact recheck follows as one filter. The
+    dwithin pad goes on the right side, so a point left keeps its one cell.
+
+    Expressions are SQL text, parsed once on the JVM: each PySpark Column
+    operator costs several py4j round trips (about 1,700 per join when
+    this plan was built from Columns)."""
+    pad = float(distance or 0.0)
+    params = _grid_params([(rb, "r")] if point else [(lb, "l"), (rb, "r")], cell_size, pad)
+    if params is None:  # a sampled side has no finite bbox
+        return lb.limit(0).crossJoin(rb.limit(0))
+    ox, oy, cs = (_sql(v) for v in params)
+    L = ("l_mnx", "l_mny") * 2 if point else tuple(f"l_{f}" for f in _BOX)
+    R = tuple(f"r_{f}" for f in _BOX)
+    Rp = tuple(f"({c} {s} {_sql(pad)})" for c, s in zip(R, "--++")) if pad else R
+
+    def cx(e):
+        return f"floor(({e} - {ox}) / {cs})"
+
+    def cy(e):
+        return f"floor(({e} - {oy}) / {cs})"
+
+    def grid(df, p, b):
+        # one row per overlapped cell: a linear index k over the nx*ny
+        # range, cell k = (cx0 + k div ny, cy0 + k % ny). explode_outer,
+        # because a plain explode makes Catalyst infer a filter that
+        # evaluates the sequence a second time
+        k, ny = f"{p}_k", f"({cy(b[3])} - {cy(b[1])} + 1)"
+        n = f"({cx(b[2])} - {cx(b[0])} + 1) * {ny}"
+        cells = df.selectExpr("*", f"explode_outer(sequence(0, {n} - 1)) AS {k}")
+        return cells, f"({cx(b[0])} + {k} div {ny}) * {_CELL_SHIFT} + {cy(b[1])} + {k} % {ny}"
+
+    def inside(a, b, strict):  # bbox a inside bbox b
+        lo, hi = (">", "<") if strict else (">=", "<=")
+        return f"({a[0]} {lo} {b[0]} AND {a[2]} {hi} {b[2]} AND {a[1]} {lo} {b[1]} AND {a[3]} {hi} {b[3]})"
+
+    rc, rcell = grid(rb, "r", Rp)
+    lc, lcell = (lb, f"{cx(L[0])} * {_CELL_SHIFT} + {cy(L[1])}") if point else grid(lb, "l", L)
+    terms = [f"{lcell} = {rcell}", f"{L[0]} <= {Rp[2]}", f"{L[2]} >= {Rp[0]}",
+             f"{L[1]} <= {Rp[3]}", f"{L[3]} >= {Rp[1]}"]
+    if not point:
+        # reference-point dedup: a pair that meets in several cells is kept
+        # only in the cell holding the lower-left corner of the bboxes'
+        # intersection (a point left has one cell, so its pairs meet once)
+        ref_x, ref_y = f"greatest({L[0]}, {Rp[0]})", f"greatest({L[1]}, {Rp[1]})"
+        terms.append(f"{lcell} = {cx(ref_x)} * {_CELL_SHIFT} + {cy(ref_y)}")
+    # point x box: the bbox comparison IS the exact predicate -> no UDF
+    exact = native and predicate in ("within", "intersects", "covered_by", "dwithin")
+    if exact:  # intersects / covered_by: the overlap terms are already exact
+        if predicate == "within":
+            terms.append(inside(L, R, strict=True))
+        elif predicate == "dwithin":
+            dx = f"greatest({R[0]} - {L[0]}, {L[0]} - {R[2]}, 0D)"
+            dy = f"greatest({R[1]} - {L[1]}, {L[1]} - {R[3]}, 0D)"
+            terms.append(f"sqrt({dx} * {dx} + {dy} * {dy}) <= {_sql(pad)}")
+    elif predicate in ("within", "covered_by"):
+        # JVM-side sure-false: containment predicates REQUIRE bbox
+        # containment whatever the geometries are
+        terms.append(inside(L, R, strict=False))
+    elif predicate in ("contains", "contains_properly", "covers"):
+        terms.append(inside(R, L, strict=False))
+    pairs = lc.join(rc, F.expr(" AND ".join(terms)), "inner")
+    if exact:
+        return pairs  # pure SQL expressions — the whole join is JVM-side
+    recheck = _make_recheck_udf(predicate, distance)
+    lg, rg = _sql(left_geom), _sql(right_geom)
+    sure = None
+    if "r_is_box" in rb.columns and predicate in ("within", "intersects", "covered_by"):
+        # sure-true against a solid-rectangle right: geom ⊆ bbox(geom),
+        # so bbox(l) inside the box decides. within needs the OPEN box
+        # (l entirely on the boundary is not within); intersects /
+        # covered_by are decided by the closed box. Only boundary-band
+        # and non-box pairs cross into Python — their inputs are masked
+        # to NULL for sure rows, so no WKB even transfers.
+        sure = f"coalesce(r_is_box AND {inside(L, R, strict=predicate == 'within')}, false)"
+    elif "l_is_box" in lb.columns and predicate in ("contains", "covers"):
+        # symmetric: a solid-rectangle LEFT containing bbox(r) decides
+        # contains (open box) / covers (closed box)
+        sure = f"coalesce(l_is_box AND {inside(R, L, strict=predicate == 'contains')}, false)"
+    if sure is None:
+        return pairs.filter(recheck(F.expr(lg), F.expr(rg)))
+    masked = recheck(F.expr(f"CASE WHEN NOT {sure} THEN {lg} END"),
+                     F.expr(f"CASE WHEN NOT {sure} THEN {rg} END"))
+    return pairs.filter(F.expr(sure) | F.coalesce(masked, F.lit(False)))
 
 
 def _make_recheck_udf(predicate: str, distance):
@@ -250,6 +350,9 @@ def st_join(
     exact-recheck UDF entirely — the whole join is JVM-side (bbox test IS
     the exact test for point×box).
 
+    Building the plan runs at most one Spark job per non-point side (the
+    grid sizing sample, see ``_grid_params``); with ``cell_size=`` none.
+
     ``strategy`` accepts only ``"grid"``, the one plan."""
     if predicate == "disjoint":
         raise ValueError("disjoint joins are not accelerable (reference excludes them too)")
@@ -262,6 +365,8 @@ def st_join(
             f"unsupported strategy {strategy!r}: st_join has one plan, 'grid' "
             "(the 'broadcast' and 'auto' strategies were removed)"
         )
+    if how not in ("inner", "left", "left_semi", "left_anti"):
+        raise ValueError(f"unsupported how={how!r}")
 
     # left/semi/anti reconciliation joins back on a surrogate row id, never on
     # the left columns themselves: plain equality drops NULL-bearing rows,
@@ -273,48 +378,25 @@ def st_join(
 
     # disambiguate clashing column names (right gets _right suffix)
     clash = set(left.columns) & set(right.columns)
-    renames = {c: f"{c}_right" for c in clash}
-    for old, new in renames.items():
-        right = right.withColumnRenamed(old, new)
-    if right_geom in renames:
-        right_geom = renames[right_geom]
-    if right_bbox is not None:
-        right_bbox = tuple(renames.get(c, c) for c in right_bbox)
+    if clash:
+        renames = {c: f"{c}_right" for c in clash}
+        right = right.toDF(*(renames.get(c, c) for c in right.columns))
+        right_geom = renames.get(right_geom, right_geom)
+        if right_bbox is not None:
+            right_bbox = tuple(renames.get(c, c) for c in right_bbox)
 
-    if left_point is not None:
-        px, py = (F.col(c) for c in left_point)
-        lb = left.withColumn(
-            "l_bbox",
-            F.struct(px.alias("min_x"), py.alias("min_y"), px.alias("max_x"), py.alias("max_y")),
-        ).filter(px.isNotNull() & py.isNotNull())
-    elif left_bbox is not None:
-        b0, b1, b2, b3 = (F.col(c) for c in left_bbox)
-        lb = left.withColumn(
-            "l_bbox",
-            F.struct(b0.alias("min_x"), b1.alias("min_y"), b2.alias("max_x"), b3.alias("max_y")),
-        ).filter(
-            b0.isNotNull() & b1.isNotNull() & b2.isNotNull() & b3.isNotNull()
-        )
+    point = left_point is not None
+    if point or left_bbox is not None:
+        lb = _sidecar(left, left_point if point else left_bbox, "l")
     else:
         # symmetric box detection for contains/covers: a solid-rectangle
         # LEFT decides those predicates from bboxes alone in _grid_join
-        lb = _with_bbox(
-            left, left_geom, "l",
-            with_isbox=predicate in ("contains", "covers"),
-        )
+        lb = _with_bbox(left, left_geom, "l", with_isbox=predicate in ("contains", "covers"))
     if right_bbox is not None:
-        c0, c1, c2, c3 = (F.col(c) for c in right_bbox)
-        rb = right.withColumn(
-            "r_bbox",
-            F.struct(c0.alias("min_x"), c1.alias("min_y"), c2.alias("max_x"), c3.alias("max_y")),
-        ).filter(
-            c0.isNotNull() & c1.isNotNull() & c2.isNotNull() & c3.isNotNull()
-        )
-        if right_is_box:
-            # the caller vouches every right row is the solid rectangle of
-            # its bbox — the grid recheck can then decide rows JVM-side
-            # even when the LEFT side is general WKB (no left_point)
-            rb = rb.withColumn("r_is_box", F.lit(True))
+        # right_is_box: the caller vouches every right row is the solid
+        # rectangle of its bbox — the grid recheck can then decide rows
+        # JVM-side even when the LEFT side is general WKB (no left_point)
+        rb = _sidecar(right, right_bbox, "r", ["true AS r_is_box"] if right_is_box else ())
     else:
         # detect rectangle rights in the same decode pass that builds the
         # bbox: for predicates where a box right decides from bboxes alone,
@@ -324,134 +406,17 @@ def st_join(
             with_isbox=predicate in ("within", "intersects", "covered_by"),
         )
 
-    # point x box: the bbox comparison IS the exact predicate -> no UDF
-    native_exact = None
-    if left_point is not None and right_is_box:
-        if predicate == "within":
-            native_exact = (
-                (F.col("l_bbox.min_x") > F.col("r_bbox.min_x"))
-                & (F.col("l_bbox.min_x") < F.col("r_bbox.max_x"))
-                & (F.col("l_bbox.min_y") > F.col("r_bbox.min_y"))
-                & (F.col("l_bbox.min_y") < F.col("r_bbox.max_y"))
-            )
-        elif predicate in ("intersects", "covered_by"):
-            native_exact = F.lit(True)  # bbox-overlap prefilter already exact
-        elif predicate == "dwithin":
-            dx = F.greatest(
-                F.col("r_bbox.min_x") - F.col("l_bbox.min_x"),
-                F.col("l_bbox.min_x") - F.col("r_bbox.max_x"),
-                F.lit(0.0),
-            )
-            dy = F.greatest(
-                F.col("r_bbox.min_y") - F.col("l_bbox.min_y"),
-                F.col("l_bbox.min_y") - F.col("r_bbox.max_y"),
-                F.lit(0.0),
-            )
-            native_exact = F.sqrt(dx * dx + dy * dy) <= F.lit(float(distance))
-
     joined = _grid_join(
-        lb, rb, predicate, left_geom, right_geom, cell_size, distance, native_exact
-    )
-
+        lb, rb, point, point and right_is_box, predicate, left_geom, right_geom, cell_size, distance
+    ).select(*left.columns, *right.columns)
     if how == "inner":
         return joined
     matched_ids = joined.select(_SJ_ID).distinct()
     if how in ("left_semi", "left_anti"):
         return left.join(matched_ids, on=_SJ_ID, how=how).drop(_SJ_ID)
-    if how == "left":
-        unmatched = left.join(matched_ids, on=_SJ_ID, how="left_anti")
-        for c in [c for c in joined.columns if c not in left.columns]:
-            unmatched = unmatched.withColumn(c, F.lit(None).cast(joined.schema[c].dataType))
-        return joined.unionByName(unmatched).drop(_SJ_ID)
-    raise ValueError(f"unsupported how={how!r}")
-
-
-def _grid_join(lb, rb, predicate, left_geom, right_geom, cell_size, distance, native_exact=None):
-    pad = float(distance or 0.0)
-    params = _grid_params(lb, rb, "l", "r", cell_size, pad)
-    aux = {"l_bbox", "r_bbox", "l_is_box", "r_is_box"}
-    out_cols = [c for c in lb.columns if c not in aux] + [c for c in rb.columns if c not in aux]
-    if params is None:  # one side has no non-null geometry
-        return lb.limit(0).crossJoin(rb.limit(0)).select(*out_cols)
-    ox, oy, cs = params
-
-    lc = _cells(lb, "l", ox, oy, cs, pad)
-    rc = _cells(rb, "r", ox, oy, cs, 0.0)
-
-    bbox_overlap = (
-        (F.col("l_bbox.min_x") - pad <= F.col("r_bbox.max_x"))
-        & (F.col("l_bbox.max_x") + pad >= F.col("r_bbox.min_x"))
-        & (F.col("l_bbox.min_y") - pad <= F.col("r_bbox.max_y"))
-        & (F.col("l_bbox.max_y") + pad >= F.col("r_bbox.min_y"))
-    )
-    # reference-point dedup: count the pair only in the cell that contains the
-    # lower-left corner of the bbox intersection
-    ref_x = F.greatest(F.col("l_bbox.min_x") - pad, F.col("r_bbox.min_x"))
-    ref_y = F.greatest(F.col("l_bbox.min_y") - pad, F.col("r_bbox.min_y"))
-    ref_cell = (
-        F.floor((ref_x - ox) / cs).cast("long") * _CELL_SHIFT + F.floor((ref_y - oy) / cs).cast("long")
-    )
-
-    pairs = (
-        lc.join(rc, on=lc["l_cell"] == rc["r_cell"], how="inner")
-        .filter(bbox_overlap)
-        .filter(F.col("l_cell") == ref_cell)
-    )
-    if native_exact is not None:
-        pairs = pairs.filter(native_exact)  # pure Column — whole join JVM-side
-    else:
-        # JVM-side sure-false: containment predicates REQUIRE bbox
-        # containment whatever the geometries are — cut those pairs
-        # before any Python
-        def _bbox_inside(a, b, strict):  # bbox(a) inside bbox(b)
-            if strict:
-                return (
-                    (F.col(f"{a}_bbox.min_x") > F.col(f"{b}_bbox.min_x"))
-                    & (F.col(f"{a}_bbox.max_x") < F.col(f"{b}_bbox.max_x"))
-                    & (F.col(f"{a}_bbox.min_y") > F.col(f"{b}_bbox.min_y"))
-                    & (F.col(f"{a}_bbox.max_y") < F.col(f"{b}_bbox.max_y"))
-                )
-            return (
-                (F.col(f"{a}_bbox.min_x") >= F.col(f"{b}_bbox.min_x"))
-                & (F.col(f"{a}_bbox.max_x") <= F.col(f"{b}_bbox.max_x"))
-                & (F.col(f"{a}_bbox.min_y") >= F.col(f"{b}_bbox.min_y"))
-                & (F.col(f"{a}_bbox.max_y") <= F.col(f"{b}_bbox.max_y"))
-            )
-
-        if predicate in ("within", "covered_by"):
-            pairs = pairs.filter(_bbox_inside("l", "r", strict=False))
-        elif predicate in ("contains", "contains_properly", "covers"):
-            pairs = pairs.filter(_bbox_inside("r", "l", strict=False))
-        recheck = _make_recheck_udf(predicate, distance)
-        sure = None
-        if "r_is_box" in pairs.columns and predicate in ("within", "intersects", "covered_by"):
-            # sure-true against a solid-rectangle right: geom ⊆ bbox(geom),
-            # so bbox(l) inside the box decides. within needs the OPEN box
-            # (l entirely on the boundary is not within); intersects /
-            # covered_by are decided by the closed box. Only boundary-band
-            # and non-box pairs cross into Python — their inputs are masked
-            # to NULL for sure rows, so no WKB even transfers.
-            inside = _bbox_inside("l", "r", strict=predicate == "within")
-            sure = F.coalesce(F.col("r_is_box") & inside, F.lit(False))
-        elif "l_is_box" in pairs.columns and predicate in ("contains", "covers"):
-            # symmetric: a solid-rectangle LEFT containing bbox(r) decides
-            # contains (open box) / covers (closed box)
-            inside = _bbox_inside("r", "l", strict=predicate == "contains")
-            sure = F.coalesce(F.col("l_is_box") & inside, F.lit(False))
-        if sure is not None:
-            pairs = pairs.filter(
-                sure
-                | F.coalesce(
-                    recheck(
-                        F.when(~sure, F.col(left_geom)),
-                        F.when(~sure, F.col(right_geom)),
-                    ),
-                    F.lit(False),
-                )
-            )
-        else:
-            pairs = pairs.filter(recheck(F.col(left_geom), F.col(right_geom)))
-    return pairs.select(*out_cols)
+    nulls = (F.lit(None).cast(f.dataType).alias(f.name) for f in right.schema.fields)
+    unmatched = left.join(matched_ids, on=_SJ_ID, how="left_anti").select("*", *nulls)
+    return joined.unionByName(unmatched).drop(_SJ_ID)
 
 
 def zonal_stats(

@@ -6,6 +6,7 @@ guarantees, ``optimizer_rules.cpp:261-264``).
 Workload shapes mirror FIXTURES.md T2/T3 (uniform points and rects).
 """
 
+import math
 import random
 
 import pytest
@@ -505,3 +506,131 @@ def test_grid_box_shortcircuit_plan_shape(spark):
     assert "recheck(CASE WHEN NOT coalesce((r_is_box" in plan
     assert "OR coalesce(pythonUDF" in plan  # sure-true disjunct bypasses the UDF verdict
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+_BBOX = ("mnx", "mny", "mxx", "mxy")
+
+
+def _rect_rows(rng, m):
+    rows = []
+    for i in range(m):
+        x1, y1 = rng.uniform(0, 90), rng.uniform(0, 90)
+        rows.append((i, x1, y1, x1 + rng.uniform(1, 10), y1 + rng.uniform(1, 10)))
+    return rows
+
+
+def _point_box_frames(spark, pts_rows, rect_rows):
+    """Points as x/y columns plus WKB, boxes as bbox sidecars plus WKB."""
+    pts = spark.createDataFrame(pts_rows, "pid long, x double, y double").withColumn(
+        "geom", udfs.st_point("x", "y")
+    )
+    rects = spark.createDataFrame(rect_rows, "rid long, mnx double, mny double, mxx double, mxy double")
+    return pts, rects.withColumn("geom", udfs.st_makeenvelope(*_BBOX))
+
+
+def test_grid_sizing_ignores_non_finite_rows(spark):
+    """One NaN or infinite coordinate must not poison the grid sizing: the
+    parameters stay finite and equal those of the clean input (a NaN left
+    point used to give a NaN cell size, a NaN right mnx a cell ~700x too
+    small), and the pairs stay exact."""
+    from duckdb_spatial_spark.operators.join import _grid_params, _sidecar
+
+    rng = random.Random(17)
+    pts_rows = [(i, rng.uniform(0, 100), rng.uniform(0, 100)) for i in range(300)]
+    rect_rows = _rect_rows(rng, 50)
+    nan, inf = float("nan"), float("inf")
+    bad_pts = pts_rows + [(300, nan, 5.0), (301, 5.0, -inf)]
+    bad_rects = rect_rows + [(50, nan, 1.0, 2.0, 3.0), (51, 1.0, 1.0, inf, 3.0)]
+    clean_p, clean_r = _point_box_frames(spark, pts_rows, rect_rows)
+    bad_p, bad_r = _point_box_frames(spark, bad_pts, bad_rects)
+
+    def params(p, r):
+        sides = [(_sidecar(p, ("x", "y", "x", "y"), "l"), "l"), (_sidecar(r, _BBOX, "r"), "r")]
+        return _grid_params(sides, None), _grid_params(sides[1:], None)
+
+    got, want = params(bad_p, bad_r), params(clean_p, clean_r)
+    assert got == want
+    assert all(math.isfinite(v) for v in got[0] + got[1])
+
+    expected = _naive_pairs(spark, clean_p.select("pid", "geom"), clean_r.select("rid", "geom"), "within")
+    assert len(expected) > 30
+    for form in ({"left_point": ("x", "y")}, {"left_bbox": ("x", "y", "x", "y")}):
+        j = st_join(bad_p, bad_r, predicate="within", right_bbox=_BBOX, **form)
+        assert {(r.pid, r.rid) for r in j.select("pid", "rid").collect()} == expected, form
+
+
+def test_point_left_is_not_sampled_and_cells_do_not_alias(spark):
+    """A point left is never sampled: the grid comes from the first 10k
+    right rows alone. Points about 1e6 away from that extent (negative
+    and positive), and right boxes placed there after the first 10k rows,
+    must still give exact pairs, each once."""
+    rng = random.Random(23)
+    rect_rows = _rect_rows(rng, 10_000)
+    far = [(-1.0e6, -1.0e6), (1.0e6, -1.0e6), (1.0e6, 1.0e6)]
+    pts_rows = [(i, rng.uniform(0, 100), rng.uniform(0, 100)) for i in range(10)]
+    for j, (fx, fy) in enumerate(far):  # outliers after the sampled rows
+        rect_rows.append((10_100 + j, fx - 50.0, fy - 50.0, fx + 50.0, fy + 50.0))
+        for k in range(4):
+            x1, y1 = fx + rng.uniform(0, 20), fy + rng.uniform(0, 20)
+            rect_rows.append((10_000 + 4 * j + k, x1, y1, x1 + rng.uniform(1, 10), y1 + rng.uniform(1, 10)))
+        for _ in range(5):
+            pts_rows.append((len(pts_rows), fx + rng.uniform(0, 30), fy + rng.uniform(0, 30)))
+    pts, rects = _point_box_frames(spark, pts_rows, rect_rows)
+
+    expected = _naive_pairs(spark, pts.select("pid", "geom"), rects.select("rid", "geom"), "within")
+    got = st_join(pts, rects, predicate="within", left_point=("x", "y"), right_bbox=_BBOX)
+    pairs = [(r.pid, r.rid) for r in got.select("pid", "rid").collect()]
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == expected
+    assert {rid for _, rid in expected} & {10_100, 10_101, 10_102} == {10_100, 10_101, 10_102}
+
+
+def _jobs_in(spark, group, fn):
+    """Number of Spark jobs ``fn()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_st_join_plan_launches_at_most_one_job(spark):
+    """Building a point x bbox join (no action) runs only the one grid
+    sizing sample of the right side; with ``cell_size=`` it runs none."""
+    rng = random.Random(29)
+    pts, rects = _point_box_frames(
+        spark, [(i, rng.uniform(0, 100), rng.uniform(0, 100)) for i in range(200)], _rect_rows(rng, 40)
+    )
+
+    def build(**kw):
+        return lambda: st_join(
+            pts, rects, predicate="within", left_point=("x", "y"), right_bbox=_BBOX, **kw
+        )
+
+    assert _jobs_in(spark, "st_join-plan-sized", build()) <= 1
+    assert _jobs_in(spark, "st_join-plan-cell-size", build(cell_size=5.0)) == 0
+
+
+def test_st_join_restores_caller_job_description(spark):
+    """The sizing job runs under its own description; the caller's
+    description (or its absence) is back in place after st_join."""
+    rng = random.Random(31)
+    pts, rects = _point_box_frames(
+        spark, [(i, rng.uniform(0, 100), rng.uniform(0, 100)) for i in range(50)], _rect_rows(rng, 20)
+    )
+    sc = spark.sparkContext
+    sc.setJobDescription("caller: nightly report")
+    try:
+        st_join(pts, rects, predicate="within", left_point=("x", "y"), right_bbox=_BBOX)
+        assert sc.getLocalProperty("spark.job.description") == "caller: nightly report"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    st_join(pts, rects, predicate="within", left_point=("x", "y"), right_bbox=_BBOX)
+    assert sc.getLocalProperty("spark.job.description") is None
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    descs = {jobs.apply(i).description() for i in range(jobs.size())}
+    descs = {d.get() for d in descs if d.isDefined()}
+    assert "st_join: grid sizing sample" in descs
