@@ -41,6 +41,8 @@ All 10 reference predicates are supported; ``ST_Disjoint`` is NOT eligible
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -48,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..geo import algorithms as A
 from ..functions import udfs
+from ..plans.pruning import _finite, _ident
 
 _PREDICATES = {
     "intersects": A.intersects,
@@ -111,9 +114,7 @@ def _with_bbox(df: DataFrame, geom_col: str, p: str, with_isbox: bool = False) -
 def _sql(v) -> str:
     """SQL text for a column name, read as ``F.col`` reads it (dots nest,
     backticks quote), or for a float as an exact double literal."""
-    if isinstance(v, str):
-        return v if "`" in v else ".".join(f"`{part}`" for part in v.split("."))
-    return f"{float(v)!r}D"
+    return _ident(v) if isinstance(v, str) else f"{float(v)!r}D"
 
 
 def _sidecar(df: DataFrame, cols, p: str, extra=()) -> DataFrame:
@@ -125,7 +126,7 @@ def _sidecar(df: DataFrame, cols, p: str, extra=()) -> DataFrame:
     names = [f"{p}_{f}" for f in _BOX[: len(cols)]]
     return df.selectExpr(
         "*", *(f"{_sql(c)} AS {n}" for c, n in zip(cols, names)), *extra
-    ).filter(" AND ".join(f"abs({n}) < double('inf')" for n in names))
+    ).filter(_finite(*names))
 
 
 def _grid_params(sized, cell_size, pad=0.0):
@@ -264,7 +265,12 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
     return pairs.filter(F.expr(sure) | F.coalesce(masked, F.lit(False)))
 
 
+@functools.lru_cache(maxsize=64)
 def _make_recheck_udf(predicate: str, distance):
+    """The exact-recheck pandas UDF for one ``(predicate, distance)``,
+    built once per process like the ``udfs.*`` UDFs, so an ``st_join``
+    does not create, pickle and register a new one (about 33 py4j round
+    trips)."""
     from pyspark.sql import types as T
 
     pred_fn = _PREDICATES[predicate]

@@ -4,7 +4,6 @@ from .pruning import (  # noqa: F401
     filter_bbox,
     geo_parquet_stats,
     hilbert_cluster,
-    hilbert_cluster_boxes,
     hilbert_cluster_points,
     read_geo_parquet,
     scan_geo_parquet,

@@ -34,39 +34,18 @@ from ..functions import udfs
 BBOX_COLS = ("bbox_min_x", "bbox_min_y", "bbox_max_x", "bbox_max_y")
 
 
-def _fixed_record_binary(recs, width, nan):
-    """Zero-boxing WKB column: ``recs`` is the flat uint8 record buffer
-    (``width`` bytes per row), ``nan`` the null mask. One
-    ``Array.from_buffers`` replaces the per-row ``rows[i*w:(i+1)*w]``
-    bytes-slice list the pandas_udf shape needs (r16 opt note 6b; the
-    r17 kernel A/B measured 12-16x on the
-    21-byte point record and 3-11x on the 93-byte envelope, both
-    boundary conversions included). Null rows keep their record bytes
-    in the data buffer (offsets stay uniform); the validity bitmap
-    carries the nulls."""
-    import pyarrow as pa
-
-    m = len(recs) // width
-    offsets = np.arange(m + 1, dtype=np.int32) * width
-    if nan.any():
-        validity = pa.py_buffer(np.packbits(~nan, bitorder="little"))
-        nulls = int(nan.sum())
-    else:
-        validity, nulls = None, 0
-    return pa.Array.from_buffers(
-        pa.binary(), m,
-        [validity, pa.py_buffer(offsets), pa.py_buffer(recs)],
-        null_count=nulls,
-    )
-
-
 @F.arrow_udf(T.BinaryType())
 def _point_wkb_arrow(x, y):
     """21-byte little-endian point WKB, arrow-native (pa.Array in/out).
-    Byte-identical to udfs.st_point / the r16 lane-local point_wkb on
-    every valid row, same null semantics (NULL or NaN coordinate ->
-    NULL geometry); used by the layout write stage where the per-row
-    boxing of the pandas_udf shape was the remaining Python cost."""
+    Byte-identical to udfs.st_point on every valid row, same null
+    semantics (NULL or NaN coordinate -> NULL geometry). One
+    ``Array.from_buffers`` over the flat record buffer replaces the
+    per-row bytes-slice list a pandas_udf would box (12-16x faster on the
+    point record, boundary conversions included). Null rows keep their
+    record bytes in the data buffer (offsets stay uniform); the validity
+    bitmap carries the nulls."""
+    import pyarrow as pa
+
     xs = np.asarray(x.to_numpy(zero_copy_only=False), dtype=np.float64)
     ys = np.asarray(y.to_numpy(zero_copy_only=False), dtype=np.float64)
     m = len(xs)
@@ -75,36 +54,14 @@ def _point_wkb_arrow(x, y):
     buf[:, 1] = 1  # type = POINT
     buf[:, 5:13] = xs.astype("<f8").view(np.uint8).reshape(m, 8)
     buf[:, 13:21] = ys.astype("<f8").view(np.uint8).reshape(m, 8)
-    return _fixed_record_binary(
-        buf.reshape(-1), 21, np.isnan(xs) | np.isnan(ys)
+    nan = np.isnan(xs) | np.isnan(ys)
+    validity = pa.py_buffer(np.packbits(~nan, bitorder="little")) if nan.any() else None
+    offsets = np.arange(m + 1, dtype=np.int32) * 21
+    return pa.Array.from_buffers(
+        pa.binary(), m,
+        [validity, pa.py_buffer(offsets), pa.py_buffer(buf.reshape(-1))],
+        null_count=int(nan.sum()),
     )
-
-
-@F.arrow_udf(T.BinaryType())
-def _envelope_wkb_arrow(min_x, min_y, max_x, max_y):
-    """93-byte single-ring box polygon WKB, arrow-native. Byte-identical
-    to udfs.st_makeenvelope (same Polygon::CreateFromBox vertex order),
-    same null semantics (any NULL/NaN bound -> NULL geometry)."""
-    cols = [
-        np.asarray(s.to_numpy(zero_copy_only=False), dtype=np.float64)
-        for s in (min_x, min_y, max_x, max_y)
-    ]
-    a, b, c, d = cols
-    m = len(a)
-    buf = np.zeros((m, 93), dtype=np.uint8)
-    buf[:, 0] = 1  # little endian
-    buf[:, 1] = 3  # type = POLYGON
-    buf[:, 5] = 1  # one ring
-    buf[:, 9] = 5  # five points (closed)
-    ring = np.empty((m, 10), dtype=np.float64)
-    ring[:, 0], ring[:, 1] = a, b
-    ring[:, 2], ring[:, 3] = a, d
-    ring[:, 4], ring[:, 5] = c, d
-    ring[:, 6], ring[:, 7] = c, b
-    ring[:, 8], ring[:, 9] = a, b
-    buf[:, 13:93] = ring.astype("<f8").view(np.uint8).reshape(m, 80)
-    nan = np.isnan(a) | np.isnan(b) | np.isnan(c) | np.isnan(d)
-    return _fixed_record_binary(buf.reshape(-1), 93, nan)
 
 # Layout writer options (see write_geo_parquet docstring for the measured
 # rationale): dictionary off (near-unique WKB), v2 data pages (delta
@@ -175,163 +132,65 @@ def _hash_preimages(spark: SparkSession, n: int) -> list[int]:
     return out
 
 
+def _ident(name: str) -> str:
+    """SQL text for a column name, read as ``F.col`` reads it (dots nest,
+    backticks quote)."""
+    return name if "`" in name else ".".join(f"`{part}`" for part in name.split("."))
+
+
+def _finite(*exprs: str) -> str:
+    """SQL text, true where every expression is finite: ``abs(c) < inf``
+    is false for NULL, NaN and ±inf alike. One predicate parsed on the JVM;
+    built from Column operators it cost several py4j round trips each."""
+    return " AND ".join(f"abs({e}) < double('inf')" for e in exprs)
+
+
+def _finite_bounds(df: DataFrame, min_x: str, min_y: str, max_x: str, max_y: str) -> tuple:
+    """Layout bounds — (min(min_x), min(min_y), max(max_x), max(max_y)) —
+    over the rows whose four coordinates are all finite, in one JVM
+    aggregate. Other rows must not reach the bounds: a NaN bound has no
+    defined int64 cast in hilbert_scaled, and an infinite one maps every
+    finite coordinate to the same curve edge. With no finite row the
+    bounds degenerate to (0, 0, 0, 0), which keeps the downstream
+    arithmetic well-defined."""
+    q = [_ident(c) for c in (min_x, min_y, max_x, max_y)]
+    r = (
+        df.filter(_finite(*dict.fromkeys(q)))
+        .selectExpr(f"min({q[0]})", f"min({q[1]})", f"max({q[2]})", f"max({q[3]})")
+        .collect()[0]
+    )
+    return tuple(r) if r[0] is not None else (0.0, 0.0, 0.0, 0.0)
+
+
 def hilbert_cluster(
     df: DataFrame,
     geom_col: str = "geom",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
-    """Add bbox columns + hilbert index and range-partition by it.
+    """Add bbox columns + the Hilbert index of the bbox center, and
+    range-partition by it (``repartitionByRange`` + ``sortWithinPartitions``).
 
-    ``bounds`` (min_x, min_y, max_x, max_y) defaults to the data extent
-    (one aggregate job, like the reference's index build scan).
-
-    ``sample_fraction`` switches to **sampled split points**: Spark's
-    ``repartitionByRange`` runs a reservoir-sampling job that re-evaluates
-    the whole child plan — including the geometry decode — before the
-    shuffle pass evaluates it again. With a fraction set, a single bounded
-    stats job per-batch-samples bbox centers (and the data bounds, when not
-    given); split points come from exact quantiles of the sampled Hilbert
-    values driver-side; then ONE barrier pass computes bbox + hilbert +
-    route together and one hash shuffle places bucket b in partition b via
-    :func:`_hash_preimages`. Exactly two decodes of the data (stats +
-    shuffle) regardless of how many plan operators reference the columns —
-    the difference matters at 100 TB (and measurably at 10M rows)."""
-    from ..functions import fastpath
-
+    ``bounds`` (min_x, min_y, max_x, max_y) defaults to the extent of the
+    rows with finite bboxes (one aggregate job, like the reference's index
+    build scan; see :func:`_finite_bounds`). A NULL or EMPTY geometry gets
+    NULL bbox columns and a NULL hilbert."""
     n = int(num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    gi = df.columns.index(geom_col)
-
-    if not sample_fraction:
-        df = with_bbox_columns(df, geom_col)
-        if bounds is None:
-            r = df.agg(
-                F.min(BBOX_COLS[0]), F.min(BBOX_COLS[1]), F.max(BBOX_COLS[2]), F.max(BBOX_COLS[3])
-            ).collect()[0]
-            bounds = (r[0], r[1], r[2], r[3])
-        cx = (F.col(BBOX_COLS[0]) + F.col(BBOX_COLS[2])) / 2
-        cy = (F.col(BBOX_COLS[1]) + F.col(BBOX_COLS[3])) / 2
-        df = df.withColumn(
-            "hilbert",
-            udfs.st_hilbert(
-                cx, cy, F.lit(float(bounds[0])), F.lit(float(bounds[1])), F.lit(float(bounds[2])), F.lit(float(bounds[3]))
-            ),
-        )
-        return df.repartitionByRange(n, "hilbert").sortWithinPartitions("hilbert")
-
-    # --- sampled path: one geom-only stats job, then ONE fused projection ---
-    # The fused pandas UDF emits struct<bbox, hilbert, route> in a single
-    # Project; Spark chains it with any upstream geometry-constructor UDF
-    # into ONE ArrowEvalPython crossing (verified: one node, rows evaluated
-    # exactly once), and the only downstream consumers are the shuffle and
-    # the sort — no operator that could re-expand the projection.
-    frac = float(sample_fraction)
-    step = max(int(round(1.0 / max(frac, 1e-9))), 1)
-    stats_schema = T.StructType([
-        T.StructField("mnx", T.DoubleType()), T.StructField("mny", T.DoubleType()),
-        T.StructField("mxx", T.DoubleType()), T.StructField("mxy", T.DoubleType()),
-        T.StructField("sx", T.ArrayType(T.DoubleType())),
-        T.StructField("sy", T.ArrayType(T.DoubleType())),
-    ])
-
-    def stats_gen(batches):
-        # decode only every step-th row: bounds come from the sample too,
-        # which can undershoot the true extent — hilbert_scaled clips
-        # out-of-range centers to the curve edge, so clustering quality at
-        # the fringe degrades slightly but correctness never does
-        for pdf in batches:
-            mnx, mny, mxx, mxy = fastpath.bbox_arrays(pdf.iloc[::step, 0])
-            ok = ~np.isnan(mnx)
-            if not ok.any():
-                continue
-            cx = (mnx[ok] + mxx[ok]) / 2.0
-            cy = (mny[ok] + mxy[ok]) / 2.0
-            yield pd.DataFrame({
-                "mnx": [float(np.min(mnx[ok]))], "mny": [float(np.min(mny[ok]))],
-                "mxx": [float(np.max(mxx[ok]))], "mxy": [float(np.max(mxy[ok]))],
-                "sx": [cx.tolist()], "sy": [cy.tolist()],
-            })
-
-    stats = df.select(geom_col).mapInPandas(stats_gen, stats_schema).collect()
-    if not stats:
-        return with_bbox_columns(df, geom_col).withColumn("hilbert", F.lit(None).cast("long"))
+    df = with_bbox_columns(df, geom_col)
     if bounds is None:
-        bounds = (
-            min(r.mnx for r in stats), min(r.mny for r in stats),
-            max(r.mxx for r in stats), max(r.mxy for r in stats),
-        )
-    sx = np.concatenate([np.asarray(r.sx) for r in stats if r.sx])
-    sy = np.concatenate([np.asarray(r.sy) for r in stats if r.sy])
-    hs = udfs.hilbert_scaled(sx, sy, *[float(b) for b in bounds])
-    probs = np.arange(1, n) / n
-    splits = np.unique(np.quantile(hs, probs).astype(np.int64)) if len(hs) else np.array([], dtype=np.int64)
-    nb = len(splits) + 1
-    jmap = np.asarray(_hash_preimages(df.sparkSession, nb), dtype=np.int32) if nb > 1 else None
-    b0, b1, b2, b3 = (float(b) for b in bounds)
-
-    stype = T.StructType(
-        [T.StructField(c, T.DoubleType()) for c in BBOX_COLS]
-        + [T.StructField("hilbert", T.LongType()), T.StructField("route", T.IntegerType())]
+        bounds = _finite_bounds(df, *BBOX_COLS)
+    cx = (F.col(BBOX_COLS[0]) + F.col(BBOX_COLS[2])) / 2
+    cy = (F.col(BBOX_COLS[1]) + F.col(BBOX_COLS[3])) / 2
+    df = df.withColumn(
+        "hilbert",
+        udfs.st_hilbert(cx, cy, *(F.lit(float(b)) for b in bounds)),
     )
-
-    @F.pandas_udf(stype)
-    def fused(g: pd.Series) -> pd.DataFrame:
-        arrs = fastpath.bbox_arrays(g)
-        mnx, mny, mxx, mxy = arrs
-        nan = np.isnan(mnx)
-        h = udfs.hilbert_scaled(
-            np.nan_to_num((mnx + mxx) / 2.0), np.nan_to_num((mny + mxy) / 2.0), b0, b1, b2, b3
-        )
-        bucket = np.searchsorted(splits, h, side="right") if len(splits) else np.zeros(len(h), dtype=np.int64)
-        route = jmap[bucket] if jmap is not None else np.zeros(len(h), dtype=np.int32)
-        out = dict(zip(BBOX_COLS, arrs))
-        if nan.any():
-            out = {k: pd.arrays.FloatingArray(v, nan) for k, v in out.items()}
-            out["hilbert"] = pd.arrays.IntegerArray(h, nan)
-        else:
-            out["hilbert"] = h
-        out["route"] = route.astype(np.int32)
-        return pd.DataFrame(out)
-
-    s = fused(F.col(geom_col))
-    out = df.select("*", s.alias("_s")).select(
-        "*",
-        *[F.col(f"_s.{c}").alias(c) for c in BBOX_COLS],
-        F.col("_s.hilbert").alias("hilbert"),
-        F.col("_s.route").alias("_route"),
-    ).drop("_s")
-    if nb == 1:
-        return out.coalesce(1).sortWithinPartitions("hilbert").drop("_route")
-    return (
-        out.repartition(nb, F.col("_route"))
-        .sortWithinPartitions("hilbert")
-        .drop("_route")
-    )
+    return df.repartitionByRange(n, "hilbert").sortWithinPartitions("hilbert")
 
 
-def _finite(*cols):
-    """True where every column is non-NULL and non-NaN."""
-    cond = F.lit(True)
-    for c in cols:
-        cond = cond & c.isNotNull() & ~F.isnan(c)
-    return cond
-
-
-def _finite_bounds(df: DataFrame, min_x, min_y, max_x, max_y) -> tuple:
-    """Layout bounds — (min(min_x), min(min_y), max(max_x), max(max_y)) —
-    over the rows whose four coordinates are all non-NULL and non-NaN, in
-    one JVM aggregate. Other rows get a NULL hilbert, so they must not
-    reach the bounds: Spark's max() returns NaN if any input is NaN, and a
-    NaN bound has no defined int64 cast in hilbert_scaled. With no such
-    row the bounds degenerate to (0, 0, 0, 0), which keeps the downstream
-    arithmetic well-defined."""
-    r = (
-        df.filter(_finite(min_x, min_y, max_x, max_y))
-        .agg(F.min(min_x), F.min(min_y), F.max(max_x), F.max(max_y))
-        .collect()[0]
-    )
-    return tuple(r) if r[0] is not None else (0.0, 0.0, 0.0, 0.0)
+# hilbert_cluster_points' split-point sample: fraction and seed
+_SPLIT_SAMPLE_FRACTION = 0.01
+_SPLIT_SAMPLE_SEED = 7
 
 
 def hilbert_cluster_points(
@@ -341,40 +200,33 @@ def hilbert_cluster_points(
     geom_col: str = "geom",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
-    sample_fraction: float = 0.01,
-    seed: int = 7,
 ) -> DataFrame:
     """Point-ingest clustering: the source rows carry plain ``x``/``y``
     doubles (raw telemetry, the 100 TB shape), so the bounds aggregate and
-    the split-point sample run entirely JVM-side against the numeric
-    columns — the generic path must push every row through the geometry
-    UDF chain even for its stats job.
+    the split-point sample (1% of the finite rows, at most 2M) run
+    entirely JVM-side against the numeric columns.
 
-    r16 optimization (guide §2.3/§8 — shuffle fewer bytes, build heavy
-    bytes once, late): the pre-exchange crossing now computes ONLY
+    ``bounds`` defaults to the extent of the finite points (see
+    :func:`_finite_bounds`). The pre-exchange crossing computes ONLY
     (hilbert, route) from (x, y) — 16 B/row up, 12 B/row down — so the
-    exchange and sort carry plain numerics (~36 B/row instead of ~61 with
-    the 21-byte WKB and duplicated bbox doubles). The point WKB is
+    exchange and sort carry plain numerics; one hash shuffle places split
+    bucket b in partition b via :func:`_hash_preimages`. The point WKB is
     assembled AFTER the sort, in the write stage, and the bbox sidecars
-    are JVM conditional projections of x/y. Per-row output values are
-    bit-identical to the pre-r16 fused lane (same WKB construction, same
-    null semantics: bbox/hilbert/geom NULL when either coordinate is
-    NULL), pinned by tests/test_storage_sources.py and
-    tests/test_hilbert_boxes.py."""
-    from ..functions import fastpath  # noqa: F401  (parity with generic path)
-
+    are JVM conditional projections of x/y. bbox, hilbert and geom are
+    NULL when either coordinate is NULL; a NaN coordinate nulls hilbert
+    and geom. An infinite coordinate is clipped to the curve edge."""
     spark = df.sparkSession
     n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # NULL/NaN-coordinate rows get a NULL hilbert, so they stay out of the
-    # bounds and the split sample (see _finite_bounds)
-    px, py = F.col(x_col), F.col(y_col)
+    # rows with a non-finite coordinate stay out of the bounds and the
+    # split sample (see _finite_bounds)
     if bounds is None:
-        bounds = _finite_bounds(df, px, py, px, py)
+        bounds = _finite_bounds(df, x_col, y_col, x_col, y_col)
     b0, b1, b2, b3 = (float(b) for b in bounds)
+    px, py = F.col(x_col), F.col(y_col)
     sample = (
-        df.filter(_finite(px, py))
+        df.filter(_finite(_ident(x_col), _ident(y_col)))
         .select(px.alias("x"), py.alias("y"))
-        .sample(fraction=float(sample_fraction), seed=seed)
+        .sample(fraction=_SPLIT_SAMPLE_FRACTION, seed=_SPLIT_SAMPLE_SEED)
         .limit(2_000_000)  # driver-memory guard: 1% of a 100 TB table is not collectable
         .collect()
     )
@@ -416,8 +268,7 @@ def hilbert_cluster_points(
     else:
         placed = routed.repartition(nb, F.col("_route")).sortWithinPartitions("hilbert")
     # WKB + bbox sidecars materialize HERE, post-sort, in the write stage;
-    # bbox NULL iff either coordinate is NULL (the fused lane's semantics).
-    # r17: zero-boxing arrow_udf kernel
+    # bbox NULL iff either coordinate is NULL
     return placed.select(
         *keep,
         _point_wkb_arrow(px, py).alias(geom_col),
@@ -429,109 +280,6 @@ def hilbert_cluster_points(
     )
 
 
-def hilbert_cluster_boxes(
-    df: DataFrame,
-    min_x_col: str,
-    min_y_col: str,
-    max_x_col: str,
-    max_y_col: str,
-    geom_col: str = "geom",
-    bounds: tuple | None = None,
-    num_partitions: int | None = None,
-    sample_fraction: float = 0.01,
-    seed: int = 7,
-) -> DataFrame:
-    """Box-ingest clustering: source rows carry the rectangle bounds as 4
-    plain double columns (any ingested-extent layout — building footprints,
-    tiles, envelopes), so, like :func:`hilbert_cluster_points`, the bounds
-    aggregate and split-point sample run entirely JVM-side. The generic
-    path must instead evaluate the geometry-constructor UDF chain + WKB
-    bbox decode once for the bounds job, AGAIN for repartitionByRange's
-    reservoir sample, and AGAIN for the shuffle pass (3 full Python
-    evaluations, audited r16).
-
-    Plan shape (optimization-guide §2.3/§8: decide with small rows, build
-    heavy bytes once, late):
-
-    * ONE narrow Python crossing BEFORE the exchange: (cx, cy) in,
-      (hilbert, route) out — 16 B/row up, 12 B/row down;
-    * the exchange + sort carry only the numeric bounds + hilbert
-      (~56 B/row), never WKB;
-    * the 93-byte envelope WKB is assembled AFTER the sort, in the write
-      stage, by the vectorized :func:`udfs.st_makeenvelope` kernel —
-      built exactly once and never shuffled.
-
-    Output schema matches the generic lane: (*other cols, geom, bbox_*,
-    hilbert); bbox sidecars are plain renames of the input bounds."""
-    spark = df.sparkSession
-    n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    mnx, mny, mxx, mxy = (F.col(c) for c in (min_x_col, min_y_col, max_x_col, max_y_col))
-    if bounds is None:
-        bounds = _finite_bounds(df, mnx, mny, mxx, mxy)
-    b0, b1, b2, b3 = (float(b) for b in bounds)
-    sample = (
-        df.filter(_finite(mnx, mny, mxx, mxy))
-        .select(((mnx + mxx) / 2).alias("x"), ((mny + mxy) / 2).alias("y"))
-        .sample(fraction=float(sample_fraction), seed=seed)
-        .limit(2_000_000)  # driver-memory guard, same as the points lane
-        .collect()
-    )
-    if sample:
-        sx = np.asarray([r.x for r in sample], dtype=np.float64)
-        sy = np.asarray([r.y for r in sample], dtype=np.float64)
-        hs = udfs.hilbert_scaled(sx, sy, b0, b1, b2, b3)
-        probs = np.arange(1, n) / n
-        splits = np.unique(np.quantile(hs, probs).astype(np.int64))
-    else:
-        splits = np.array([], dtype=np.int64)
-    nb = len(splits) + 1
-    jmap = np.asarray(_hash_preimages(spark, nb), dtype=np.int32) if nb > 1 else None
-
-    stype = T.StructType(
-        [T.StructField("hilbert", T.LongType()), T.StructField("route", T.IntegerType())]
-    )
-
-    @F.pandas_udf(stype)
-    def hilbert_route(cx: pd.Series, cy: pd.Series) -> pd.DataFrame:
-        xs = cx.to_numpy(dtype=np.float64, na_value=np.nan)
-        ys = cy.to_numpy(dtype=np.float64, na_value=np.nan)
-        nan = np.isnan(xs) | np.isnan(ys)
-        h = udfs.hilbert_scaled(np.nan_to_num(xs), np.nan_to_num(ys), b0, b1, b2, b3)
-        bucket = (
-            np.searchsorted(splits, h, side="right")
-            if len(splits)
-            else np.zeros(len(h), dtype=np.int64)
-        )
-        route = jmap[bucket] if jmap is not None else np.zeros(len(h), dtype=np.int32)
-        out = {
-            "hilbert": pd.arrays.IntegerArray(h, nan) if nan.any() else h,
-            "route": route.astype(np.int32),
-        }
-        return pd.DataFrame(out)
-
-    keep = [c for c in df.columns if c not in (min_x_col, min_y_col, max_x_col, max_y_col)]
-    routed = df.select(
-        "*", hilbert_route((mnx + mxx) / 2, (mny + mxy) / 2).alias("_s")
-    ).select("*", F.col("_s.hilbert").alias("hilbert"), F.col("_s.route").alias("_route")).drop("_s")
-    if nb == 1:
-        placed = routed.coalesce(1).sortWithinPartitions("hilbert")
-    else:
-        placed = routed.repartition(nb, F.col("_route")).sortWithinPartitions("hilbert")
-    # WKB assembled HERE — after the exchange and sort, once, in the write
-    # stage; bbox sidecars are zero-cost renames of the bound columns.
-    # r17: zero-boxing arrow_udf kernel, byte-identical to
-    # udfs.st_makeenvelope
-    return placed.select(
-        *keep,
-        _envelope_wkb_arrow(mnx, mny, mxx, mxy).alias(geom_col),
-        mnx.alias(BBOX_COLS[0]),
-        mny.alias(BBOX_COLS[1]),
-        mxx.alias(BBOX_COLS[2]),
-        mxy.alias(BBOX_COLS[3]),
-        "hilbert",
-    )
-
-
 def write_geo_parquet(
     df: DataFrame,
     path: str,
@@ -539,28 +287,30 @@ def write_geo_parquet(
     mode: str = "overwrite",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
-    sample_fraction: float | None = None,
     point_xy: tuple | None = None,
-    box_xyxy: tuple | None = None,
 ) -> None:
     """Hilbert-clustered GeoParquet-style write (geometry stays WKB binary,
-    which IS GeoParquet's encoding).
+    which IS GeoParquet's encoding). Two lanes:
 
-    ``point_xy=(x_col, y_col)``: point-ingest fast lane — geometry is
-    ASSEMBLED here from numeric columns (stats jobs stay JVM-side, one
-    Python crossing total; see :func:`hilbert_cluster_points`).
+    * ``point_xy=(x_col, y_col)``: the rows carry plain x/y columns and the
+      point geometry is ASSEMBLED here (see :func:`hilbert_cluster_points`);
+    * otherwise the generic lane: bbox columns from the WKB in
+      ``geom_col``, then ``repartitionByRange(hilbert)`` (see
+      :func:`hilbert_cluster`).
 
-    ``box_xyxy=(min_x, min_y, max_x, max_y)``: box-ingest fast lane —
-    same idea for rectangle extents (stats JVM-side, one narrow Python
-    crossing for hilbert/route, envelope WKB built post-sort; see
-    :func:`hilbert_cluster_boxes`).
+    Bounds rule, the same for both lanes: the caller's ``bounds``, else the
+    extent of the rows whose lane coordinates (x/y, or the bbox columns)
+    are all finite (:func:`_finite_bounds`, one JVM aggregate). A row with a
+    NULL or NaN coordinate gets a NULL hilbert; an infinite one is clipped
+    to the curve edge. Neither reaches the bounds. The layout manifest
+    records the bounds the data was clustered with.
 
     Parquet dictionary encoding is disabled: WKB geometries are near-unique,
     so dictionary pages only add CPU + a failed-dictionary fallback per row
     group (measured 2.3s of a 6s write at 10M points).
 
-    Writer encodings (r16, optimization-guide §6 — the cluster-build lanes
-    are write-wall-bound, so bytes written are the wall): v2 data pages
+    Writer encodings (the cluster-build lanes are write-wall-bound, so
+    bytes written are the wall): v2 data pages
     (DELTA_BINARY_PACKED for the SORTED hilbert int64 + id, DELTA_BYTE_ARRAY
     prefix-delta for WKB whose consecutive rows share header + high
     coordinate bytes after the hilbert sort) + zstd. Measured on the bench
@@ -571,64 +321,42 @@ def write_geo_parquet(
     signatures equal on the same staged rows) and no read-side regression
     (Spark's vectorized reader decodes v2 pages natively; probe read guard
     0.2-0.7 s across variants)."""
+    if bounds is None:
+        coords = df if point_xy else with_bbox_columns(df, geom_col)
+        bounds = _finite_bounds(coords, *(tuple(point_xy) * 2 if point_xy else BBOX_COLS))
     if point_xy is not None:
-        if bounds is None:
-            # compute the exact bounds HERE (same JVM agg the cluster lane
-            # would run) so the metadata sidecar needs no extra job
-            px, py = F.col(point_xy[0]), F.col(point_xy[1])
-            bounds = _finite_bounds(df, px, py, px, py)
         clustered = hilbert_cluster_points(
-            df, point_xy[0], point_xy[1], geom_col, bounds, num_partitions,
-            sample_fraction if sample_fraction else 0.01,
-        )
-    elif box_xyxy is not None:
-        if bounds is None:
-            bounds = _finite_bounds(df, *(F.col(c) for c in box_xyxy))
-        clustered = hilbert_cluster_boxes(
-            df, *box_xyxy, geom_col=geom_col, bounds=bounds,
-            num_partitions=num_partitions,
-            sample_fraction=sample_fraction if sample_fraction else 0.01,
+            df, point_xy[0], point_xy[1], geom_col, bounds, num_partitions
         )
     else:
-        clustered = hilbert_cluster(df, geom_col, bounds, num_partitions, sample_fraction)
+        clustered = hilbert_cluster(df, geom_col, bounds, num_partitions)
     clustered.write.mode(mode).options(**GEO_PARQUET_WRITE_OPTIONS).parquet(path)
     if mode == "overwrite" and not path.startswith(("s3://", "s3a://", "hdfs://")):
-        # metadata sidecar for append_geo_parquet: the clustering bounds
-        # (explicit or just computed; the generic sampled lane reconstructs
-        # from the written footer stats — its own bounds are sampled)
-        # one footer-stats job at WRITE time records per-file bboxes in
-        # the manifest, so a windowed read can drop whole files from the
-        # driver-side manifest BEFORE Spark lists them or tasks open
-        # their footers (the reference's R-tree answers the same
-        # question from its root node; see scan_geo_parquet)
+        # metadata sidecar for append_geo_parquet: the clustering bounds,
+        # plus per-file bboxes from one footer-stats job at WRITE time, so a
+        # windowed read can drop whole files from the driver-side manifest
+        # BEFORE Spark lists them or tasks open their footers (the
+        # reference's R-tree answers the same question from its root node;
+        # see scan_geo_parquet)
         frows = geo_parquet_stats(df.sparkSession, path, level="file").collect()
         fmap = {
             r["file"]: [r["min_x"], r["min_y"], r["max_x"], r["max_y"]]
             for r in frows
             if r["min_x"] is not None
         }
-        eff = bounds
-        if eff is None and frows:
-            xs = [r for r in frows if r["min_x"] is not None]
-            if xs:
-                eff = (
-                    min(r["min_x"] for r in xs), min(r["min_y"] for r in xs),
-                    max(r["max_x"] for r in xs), max(r["max_y"] for r in xs),
-                )
-        if eff is not None and eff[0] is not None:
-            _write_layout_meta(
-                path,
-                {
-                    "bounds": [float(v) for v in eff],
-                    "geom_col": geom_col,
-                    "generation": 1,
-                    "files": fmap,
-                    # written schema, so scan_geo_parquet can bind the
-                    # pruned file set without a per-query schema-inference
-                    # footer read (measured ~0.1 s per bind)
-                    "schema": clustered.schema.jsonValue(),
-                },
-            )
+        _write_layout_meta(
+            path,
+            {
+                "bounds": [float(v) for v in bounds],
+                "geom_col": geom_col,
+                "generation": 1,
+                "files": fmap,
+                # written schema, so scan_geo_parquet can bind the
+                # pruned file set without a per-query schema-inference
+                # footer read (measured ~0.1 s per bind)
+                "schema": clustered.schema.jsonValue(),
+            },
+        )
 
 
 def read_geo_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -961,7 +689,6 @@ def append_geo_parquet(
     path: str,
     geom_col: str = "geom",
     num_partitions: int | None = None,
-    sample_fraction: float | None = None,
     point_xy: tuple | None = None,
 ) -> None:
     """Append a batch to an existing clustered layout (rtree.cpp:Insert
@@ -984,8 +711,7 @@ def append_geo_parquet(
         bounds = (st[0], st[1], st[2], st[3])
     write_geo_parquet(
         df, path, geom_col=geom_col, mode="append", bounds=bounds,
-        num_partitions=num_partitions, sample_fraction=sample_fraction,
-        point_xy=point_xy,
+        num_partitions=num_partitions, point_xy=point_xy,
     )
     gen = (meta or {}).get("generation", 1) + 1
     # refresh the per-file bounds so scan_geo_parquet's manifest pruning

@@ -97,7 +97,6 @@ def write_geo_snapshot(
     geom_col: str = "geom",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
-    sample_fraction: float | None = None,
     point_xy: tuple | None = None,
 ) -> int:
     """Create snapshot v1 of a clustered layout (or start over on an empty
@@ -112,8 +111,7 @@ def write_geo_snapshot(
     data_dir = os.path.join(path, f"data-{version:08d}")
     write_geo_parquet(
         df, data_dir, geom_col=geom_col, mode="overwrite", bounds=bounds,
-        num_partitions=num_partitions, sample_fraction=sample_fraction,
-        point_xy=point_xy,
+        num_partitions=num_partitions, point_xy=point_xy,
     )
     from .pruning import read_layout_meta
 
@@ -150,7 +148,6 @@ def append_geo_snapshot(
     df: DataFrame,
     path: str,
     num_partitions: int | None = None,
-    sample_fraction: float | None = None,
     point_xy: tuple | None = None,
 ) -> int:
     """Commit an appended batch as a new snapshot. The batch is clustered
@@ -167,8 +164,7 @@ def append_geo_snapshot(
     data_dir = os.path.join(path, f"data-{version:08d}")
     write_geo_parquet(
         df, data_dir, geom_col=geom_col, mode="overwrite", bounds=bounds,
-        num_partitions=num_partitions, sample_fraction=sample_fraction,
-        point_xy=point_xy,
+        num_partitions=num_partitions, point_xy=point_xy,
     )
     _commit(
         path,

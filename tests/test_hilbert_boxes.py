@@ -1,20 +1,14 @@
-"""Row-level equivalence of the r16 box-ingest cluster lane.
-
-hilbert_cluster_boxes is a pure plan optimization of
-``st_makeenvelope -> hilbert_cluster`` (bounds/sample JVM-side, one narrow
-hilbert/route crossing, WKB built post-sort): per-row geom bytes, bbox
-sidecars and hilbert index must be IDENTICAL to the generic lane — only
-partition placement may differ.
+"""NULL, NaN and infinite coordinates through both layout-write lanes:
+the generic lane (envelope WKB -> bbox columns -> repartitionByRange) and
+the ``point_xy=`` lane. Such rows are kept, and never reach the layout
+bounds.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from duckdb_spatial_spark.functions import udfs
 from duckdb_spatial_spark.plans import (
     filter_bbox,
-    hilbert_cluster,
-    hilbert_cluster_boxes,
     scan_geo_parquet,
     write_geo_parquet,
 )
@@ -38,36 +32,24 @@ def _src(spark, n=2000, with_nulls=False):
     return df.selectExpr("id", "mx", "my", "mx + w AS mxx", "my + h AS mxy")
 
 
-def test_box_lane_rows_match_generic_lane(spark):
-    src = _src(spark)
-    generic = hilbert_cluster(
-        src.select("id", udfs.st_makeenvelope("mx", "my", "mxx", "mxy").alias("geom")),
-        num_partitions=4,
-    )
-    fast = hilbert_cluster_boxes(src, "mx", "my", "mxx", "mxy", num_partitions=4)
-    assert [f.name for f in fast.schema.fields] == [
-        "id", "geom", "bbox_min_x", "bbox_min_y", "bbox_max_x", "bbox_max_y", "hilbert",
-    ]
-    a = {r.id: r for r in generic.collect()}
-    b = {r.id: r for r in fast.collect()}
-    assert set(a) == set(b)
-    for i in a:
-        ra, rb = a[i], b[i]
-        assert bytes(ra.geom) == bytes(rb.geom)
-        assert (ra.bbox_min_x, ra.bbox_min_y, ra.bbox_max_x, ra.bbox_max_y) == (
-            rb.bbox_min_x, rb.bbox_min_y, rb.bbox_max_x, rb.bbox_max_y,
-        )
-        assert ra.hilbert == rb.hilbert
+def _envelopes(src):
+    return src.select("id", udfs.st_makeenvelope("mx", "my", "mxx", "mxy").alias("geom"))
 
 
-def test_box_lane_null_bounds_row(spark):
-    fast = hilbert_cluster_boxes(
-        _src(spark, n=300, with_nulls=True), "mx", "my", "mxx", "mxy", num_partitions=2
-    )
-    rows = {r.id: r for r in fast.collect()}
+def test_box_lane_null_bounds_row(spark, tmp_path):
+    """Envelopes through the generic lane: a row with a NULL bound keeps
+    its place in the layout, with NULL geom, bbox and hilbert."""
+    path = str(tmp_path / "boxes")
+    write_geo_parquet(_envelopes(_src(spark, n=300, with_nulls=True)), path, num_partitions=2)
+    rows = {r.id: r for r in spark.read.parquet(path).collect()}
     assert len(rows) == 300  # null-bound rows are kept, not dropped
     nulls = [r for r in rows.values() if r.bbox_min_x is None]
-    assert nulls and all(r.geom is None and r.hilbert is None for r in nulls)
+    assert len(nulls) == 4  # ids 0, 97, 194, 291
+    assert all(
+        r.geom is None and r.hilbert is None
+        and r.bbox_min_y is None and r.bbox_max_x is None and r.bbox_max_y is None
+        for r in nulls
+    )
 
 
 def test_point_lane_null_semantics(spark):
@@ -112,30 +94,43 @@ def test_point_lane_null_semantics(spark):
 
 
 def test_write_geo_parquet_box_lane_pruned_scan(spark, tmp_path):
-    """Box lane windowed scan; both ingest lanes keep a NaN-coordinate row
-    out of the layout bounds (a NaN bound has no int64 cast)."""
+    """Envelopes through the generic lane give an exact pruned windowed
+    scan. Both lanes keep a NaN-coordinate row and a +inf one out of the
+    layout bounds: a NaN bound has no int64 cast, and an infinite one maps
+    every finite coordinate to the curve edge. So every finite row gets
+    the hilbert value it gets without the two rows."""
     import math
     import warnings
 
     finite = _src(spark, n=5000)
-    src = finite.unionByName(spark.sql(
+    bad = spark.sql(
         "SELECT CAST(5000 AS BIGINT) AS id, CAST('NaN' AS DOUBLE) AS mx,"
         " 10.0D AS my, CAST('NaN' AS DOUBLE) AS mxx, 12.0D AS mxy"
-    ))
-    path = str(tmp_path / "boxes")
-    pts_path = str(tmp_path / "points")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        write_geo_parquet(src, path, num_partitions=4, box_xyxy=("mx", "my", "mxx", "mxy"))
-        write_geo_parquet(src, pts_path, num_partitions=4, point_xy=("mx", "my"))
+        " UNION ALL SELECT CAST(5001 AS BIGINT), CAST('Infinity' AS DOUBLE),"
+        " 20.0D, CAST('Infinity' AS DOUBLE), 22.0D"
+    )
+    src = finite.unionByName(bad)
     ext = finite.agg(
         F.min("mx"), F.min("my"), F.max("mx"), F.max("my"), F.max("mxx"), F.max("mxy")
     ).collect()[0]
-    for p, want in ((path, [ext[0], ext[1], ext[4], ext[5]]), (pts_path, list(ext[:4]))):
-        got = read_layout_meta(p)["bounds"]
-        assert all(math.isfinite(v) for v in got) and got == want, (p, got, want)
-    full = spark.read.parquet(path)
-    assert full.count() == 5001
+    lanes = {
+        "boxes": (_envelopes, {}, [ext[0], ext[1], ext[4], ext[5]]),
+        "points": (lambda d: d, {"point_xy": ("mx", "my")}, list(ext[:4])),
+    }
+    for name, (prep, kw, want) in lanes.items():
+        path, clean = str(tmp_path / name), str(tmp_path / f"{name}_finite")
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            write_geo_parquet(prep(src), path, num_partitions=4, **kw)
+            write_geo_parquet(prep(finite), clean, num_partitions=4, **kw)
+        got = read_layout_meta(path)["bounds"]
+        assert all(math.isfinite(v) for v in got) and got == want, (name, got, want)
+        h = {r.id: r.hilbert for r in spark.read.parquet(path).collect()}
+        h0 = {r.id: r.hilbert for r in spark.read.parquet(clean).collect()}
+        assert len(h) == 5002 and h[5000] is None
+        assert len({h[i] for i in h0}) == len(set(h0.values())) >= 990, name
+        assert {i: h[i] for i in h0} == h0, name
+    path = str(tmp_path / "boxes")
     # pruned windowed count == exact filter over the raw bounds
     expected = src.filter(
         (F.col("mx") >= 100) & (F.col("my") >= 100)

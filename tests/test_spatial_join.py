@@ -634,3 +634,13 @@ def test_st_join_restores_caller_job_description(spark):
     descs = {jobs.apply(i).description() for i in range(jobs.size())}
     descs = {d.get() for d in descs if d.isDefined()}
     assert "st_join: grid sizing sample" in descs
+
+
+def test_recheck_udf_built_once_per_key():
+    """The exact-recheck UDF is built once per (predicate, distance) and
+    reused by every later st_join with that key."""
+    from duckdb_spatial_spark.operators.join import _make_recheck_udf
+
+    assert _make_recheck_udf("within", None) is _make_recheck_udf("within", None)
+    assert _make_recheck_udf("dwithin", 2.5) is _make_recheck_udf("dwithin", 2.5)
+    assert _make_recheck_udf("dwithin", 2.5) is not _make_recheck_udf("dwithin", 3.0)

@@ -62,10 +62,10 @@ def test_hilbert_cluster_and_prune(spark, tmp_path):
 
 
 def test_hilbert_cluster_sampled_splits(spark, tmp_path):
-    """sample_fraction path: one-pass shuffle must preserve rows, produce
-    partition-disjoint hilbert ranges, and prune files like the exact path."""
+    """Range partitioning by the sampled hilbert split points must preserve
+    rows, produce partition-disjoint hilbert ranges, and prune files."""
     pts = st_generatepoints(spark, 0, 0, 10000, 10000, 20000, seed=7)
-    clustered = hilbert_cluster(pts.repartition(8), num_partitions=8, sample_fraction=0.2)
+    clustered = hilbert_cluster(pts.repartition(8), num_partitions=8)
     assert clustered.count() == 20000
 
     # partitions hold disjoint hilbert ranges (the locality contract)
@@ -82,7 +82,7 @@ def test_hilbert_cluster_sampled_splits(spark, tmp_path):
     assert max(r.n for r in rng) < 10000
 
     out = str(tmp_path / "pts_sampled")
-    write_geo_parquet(pts.repartition(8), out, num_partitions=8, sample_fraction=0.2)
+    write_geo_parquet(pts.repartition(8), out, num_partitions=8)
     back = spark.read.parquet(out)
     assert back.count() == 20000
     files_all = {r.f for r in back.select(F.input_file_name().alias("f")).distinct().collect()}
@@ -150,7 +150,7 @@ def test_geo_parquet_stats_view(spark, tmp_path):
         .select("id", "geom")
     )
     out = str(tmp_path / "statsds")
-    write_geo_parquet(pts, out, num_partitions=4, sample_fraction=0.2)
+    write_geo_parquet(pts, out, num_partitions=4)
 
     st = geo_parquet_stats(spark, out).collect()
     assert len(st) >= 4  # at least one row group per partition file
@@ -240,13 +240,13 @@ def test_geojson_pushdown(spark, tmp_path):
 
 
 def test_point_ingest_cluster_matches_generic(spark, tmp_path):
-    """point_xy= ingest lane: JVM-side stats + fused WKB/bbox/hilbert UDF
-    produces the same queryable layout as the generic geometry path."""
+    """point_xy= ingest lane: JVM-side stats and a post-sort point WKB
+    produce the same queryable layout as the generic geometry lane."""
     pts = st_generatepoints(spark, 0, 0, 10000, 10000, 20000, seed=99)
     a, b = str(tmp_path / "generic"), str(tmp_path / "points")
     write_geo_parquet(
         pts.withColumn("geom", udfs.st_point("x", "y")).select("id", "geom"),
-        a, num_partitions=8, sample_fraction=0.05,
+        a, num_partitions=8,
     )
     write_geo_parquet(pts.select("id", "x", "y"), b, num_partitions=8, point_xy=("x", "y"))
     da, db = spark.read.parquet(a), spark.read.parquet(b)
