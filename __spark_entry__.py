@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 Each ``queries()`` entry is a Spark-first implementation of an operator
-from SURVEY.md §2 (or a plain Spark SQL relational row); the matching
-``oracle_sql()`` entry is plain DuckDB SQL over the same parquet views.
+from SURVEY.md §2; the matching ``oracle_sql()`` entry is plain DuckDB
+SQL over the same parquet views.
 Geometry is derived deterministically from the numeric testdata columns
 (integer arithmetic -> identical in both engines); double outputs are
 rounded identically on both sides.
@@ -24,20 +24,16 @@ from pyspark.sql import functions as F
 
 
 # the testdata parquet tables every row and oracle reads, one view each
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents",
-)
+TABLES = ("customer", "part", "orders", "lineitem")
 
 
 def _prep(spark: SparkSession, sf_dir: str):
     import duckdb_spatial_spark
 
     duckdb_spatial_spark.register_all(spark)
-    # Some testdata generations carry events.ts as TIMESTAMP(NANOS), which
-    # Spark's reader rejects by default; read nanos as bigint in that case.
-    # Other generations use timestamp[us] (TIMESTAMP_NTZ) — events queries
-    # branch on the actual dtype via _events_epoch_us().
+    # Some testdata generations may carry timestamp columns (orders and
+    # lineitem dates) as TIMESTAMP(NANOS), which Spark's reader rejects by
+    # default; read nanos as bigint in that case.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Pin naive-timestamp interpretation to UTC so unix_micros(cast(ntz as
     # timestamp)) equals DuckDB's epoch(ts) regardless of machine timezone.
@@ -1248,194 +1244,6 @@ def q_gml_roundtrip(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# relational (host-engine capability = Spark SQL; trivial oracles)
-# --------------------------------------------------------------------------
-
-def q_tpch_q1(spark, sf_dir):
-    _prep(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               sum(CAST(l_quantity AS BIGINT)) AS sum_qty,
-               sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS sum_base_price_cents,
-               sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS sum_disc_price_e4,
-               sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(round(l_discount * 100) AS BIGINT))
-                   * (100 + CAST(round(l_tax * 100) AS BIGINT))) AS sum_charge_e6,
-               round(sum(CAST(l_quantity AS BIGINT)) / count(*), 6) AS avg_qty,
-               round(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0e0 / count(*), 6) AS avg_price,
-               round(sum(CAST(round(l_discount * 100) AS BIGINT)) / 100.0e0 / count(*), 6) AS avg_disc,
-               count(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-        """
-    )
-
-
-def q_tpch_q3(spark, sf_dir):
-    _prep(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT l_orderkey,
-               sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS revenue_e4
-        FROM customer JOIN orders ON c_custkey = o_custkey
-                      JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-          AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        GROUP BY l_orderkey
-        HAVING sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(round(l_discount * 100) AS BIGINT))) > 1000000000
-        """
-    )
-
-
-def q_tpch_q5(spark, sf_dir):
-    _prep(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT n_name,
-               sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS revenue_e4
-        FROM customer
-          JOIN orders ON c_custkey = o_custkey
-          JOIN lineitem ON l_orderkey = o_orderkey
-          JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-          JOIN nation ON c_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'EUROPE'
-          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        GROUP BY n_name
-        """
-    )
-
-
-def q_tpch_q6(spark, sf_dir):
-    _prep(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                   * CAST(round(l_discount * 100) AS BIGINT)) AS revenue_e4
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-          AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-          AND CAST(round(l_discount * 100) AS BIGINT) BETWEEN 2 AND 6
-          AND l_quantity < 24
-        """
-    )
-
-
-def _events_epoch_us(spark) -> str:
-    """SQL expression: events.ts as epoch microseconds (BIGINT), schema-robust.
-
-    The driver's events.parquet has shipped ts as TIMESTAMP(NANOS) (surfaced
-    as bigint nanos under nanosAsLong), as timestamp[us] (TIMESTAMP_NTZ), and
-    could plausibly be plain TIMESTAMP; normalize all three to epoch micros
-    (session tz is pinned to UTC in _prep, so NTZ == DuckDB naive epoch).
-    """
-    dtype = dict(spark.table("events").dtypes)["ts"]
-    if dtype in ("bigint", "long"):
-        return "(ts div 1000)"
-    return "unix_micros(CAST(ts AS TIMESTAMP))"
-
-
-def q_events_hourly(spark, sf_dir):
-    """Hourly rollup. For timestamp schemas, group on date_trunc and convert
-    only the GROUP KEYS to epoch seconds — the per-row NTZ cast measured 2x
-    the whole query at 10M rows."""
-    _prep(spark, sf_dir)
-    dtype = dict(spark.table("events").dtypes)["ts"]
-    if dtype in ("bigint", "long"):
-        return spark.sql(
-            """
-            SELECT CAST((ts div 1000) div 3600000000 * 3600 AS BIGINT) AS hour_ts,
-                   event_type, count(*) AS n, sum(CAST(round(value * 100) AS BIGINT)) AS sv_cents
-            FROM events GROUP BY 1, 2
-            """
-        )
-    return spark.sql(
-        """
-        SELECT CAST(unix_micros(CAST(h AS TIMESTAMP)) div 1000000 AS BIGINT) AS hour_ts,
-               event_type, n, sv_cents
-        FROM (
-          SELECT date_trunc('HOUR', ts) AS h, event_type, count(*) AS n,
-                 sum(CAST(round(value * 100) AS BIGINT)) AS sv_cents
-          FROM events GROUP BY 1, 2
-        )
-        """
-    )
-
-
-def q_events_sessionization(spark, sf_dir):
-    """Sessionization: gap > 1800s starts a new session (OLAP pattern).
-    The epoch conversion happens once per row in the inner projection, not
-    twice inside the window frame."""
-    _prep(spark, sf_dir)
-    us = _events_epoch_us(spark)
-    return spark.sql(
-        f"""
-        SELECT user_id, CAST(1 + sum(CASE WHEN gap > 1800000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
-        FROM (
-          SELECT user_id, us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS gap
-          FROM (SELECT user_id, event_id, {us} AS us FROM events)
-        ) GROUP BY user_id
-        """
-    )
-
-
-def q_events_top_per_type(spark, sf_dir):
-    _prep(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT event_type, event_id, value FROM (
-          SELECT event_type, event_id, value,
-                 row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rn
-          FROM events
-        ) WHERE rn <= 3
-        """
-    )
-
-
-def q_window_running_total(spark, sf_dir):
-    _prep(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT o_orderkey, sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER (
-                 PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_cents
-        FROM orders WHERE o_custkey < 50
-        """
-    )
-
-
-# --------------------------------------------------------------------------
-# documents (plain Spark SQL)
-# --------------------------------------------------------------------------
-
-def q_dedup_exact(spark, sf_dir):
-    _prep(spark, sf_dir)
-    return spark.sql(
-        "SELECT source, count(*) AS n_docs, count(DISTINCT text) AS n_distinct FROM documents GROUP BY source"
-    )
-
-
-def q_text_metrics(spark, sf_dir):
-    _prep(spark, sf_dir)
-    return spark.sql(
-        r"""
-        SELECT doc_id,
-               round(length(regexp_replace(text, '[^A-Za-z]', '')) / length(text), 6) AS alpha_ratio,
-               round(length(regexp_replace(text, '[^0-9]', '')) / length(text), 6) AS digit_ratio
-        FROM documents
-        """
-    )
-
-
 def q_spatial_collect_dump(spark, sf_dir):
     """ST_Collect -> ST_Dump round trip: collect points per group into a
     MULTIPOINT, dump back out, verify count and coordinate sum survive."""
@@ -2149,23 +1957,6 @@ def q_streaming_upsert(spark, sf_dir):
         F.col("_s").cast("long").alias("id_sum"),
         F.round("_x0", 6).alias("xmin"),
         F.round("_y1", 6).alias("ymax"),
-    )
-
-
-def q_events_percentiles(spark, sf_dir):
-    """Exact linear-interpolation percentiles per event type (host-engine
-    ordered-aggregate capability; Spark percentile == DuckDB
-    quantile_cont)."""
-    _prep(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT event_type,
-               round(percentile(value, 0.5), 6) AS p50,
-               round(percentile(value, 0.9), 6) AS p90,
-               round(percentile(value, 0.99), 6) AS p99,
-               count(*) AS n
-        FROM events GROUP BY event_type
-        """
     )
 
 
@@ -3015,35 +2806,6 @@ def q_mvt_roundtrip(spark, sf_dir):
     )
 
 
-def q_warc_roundtrip(spark, sf_dir):
-    """WARC/1.0 (ISO 28500) sink -> reader round trip (sources/warc.py;
-    the CommonCrawl container — per-record gzip members, HTTP response
-    framing split into status/content-type/payload). The .warc.gz lane
-    exercises the multi-member gunzip loop."""
-    _prep(spark, sf_dir)
-    import os
-
-    from duckdb_spatial_spark.sources import st_read, st_write
-
-    df = spark.sql(
-        f"""SELECT id,
-              concat('http://w', CAST(id % 9 AS STRING), '.com/page/',
-                     CAST(id AS STRING)) AS url,
-              concat('<html><body>doc ', CAST(id AS STRING), '</body></html>')
-                AS payload
-            FROM ({_PTS}) WHERE id < 400"""
-    )
-    path = os.path.join(_fresh_tmp("warc_q"), "crawl.warc.gz")
-    st_write(df, path)
-    back = st_read(spark, path)
-    return back.selectExpr(
-        "target_uri AS url",
-        "CAST(http_status AS INT) AS http_status",
-        "content_type",
-        "CAST(payload AS STRING) AS payload_str",
-    )
-
-
 def q_spatial_transform_tranche5(spark, sf_dir):
     """EPSG registry tranche 5 (r14): the Krovak (EPSG 9819, S-JTSK /
     5514) and New Zealand Map Grid (EPSG 9811, NZGD49 / 27200) projection
@@ -3367,17 +3129,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fgb_roundtrip": q_fgb_roundtrip,
         "geojsonseq_roundtrip": q_geojsonseq_roundtrip,
         "streaming_upsert": q_streaming_upsert,
-        "dedup_exact": q_dedup_exact,
         "zonal_stats": q_zonal_stats,
-        "warc_roundtrip": q_warc_roundtrip,
         "netcdf_roundtrip": q_netcdf_roundtrip,
         "mvt_roundtrip": q_mvt_roundtrip,
         "esrijson_roundtrip": q_esrijson_roundtrip,
-        "events_percentiles": q_events_percentiles,
-        "tpch_q1": q_tpch_q1,
-        "tpch_q6": q_tpch_q6,
-        "events_hourly": q_events_hourly,
-        "events_sessionization": q_events_sessionization,
     }
 
 
@@ -3393,7 +3148,6 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     the repo at 160 rows). oracle_sql() keeps every retired entry."""
     return {
         "arrow_roundtrip": q_arrow_roundtrip,
-        "events_top_per_type": q_events_top_per_type,
         "dxf_read": q_dxf_read,
         "gdb_roundtrip": q_gdb_roundtrip,
         "georss_roundtrip": q_georss_roundtrip,
@@ -3443,10 +3197,6 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatial_wkt_triangle_area": q_spatial_wkt_triangle_area,
         "spatialite_roundtrip": q_spatialite_roundtrip,
         "tab_roundtrip": q_tab_roundtrip,
-        "text_metrics": q_text_metrics,
-        "tpch_q3": q_tpch_q3,
-        "tpch_q5": q_tpch_q5,
-        "window_running_total": q_window_running_total,
         "xlsx_roundtrip": q_xlsx_roundtrip,
     }
 
@@ -4218,15 +3968,6 @@ def oracle_sql() -> dict[str, str]:
                    round(x % 4000, 6) AS x, round(y % 4000, 6) AS y
             FROM ({pts}) WHERE id < 300
         """,
-        "warc_roundtrip": f"""
-            SELECT concat('http://w', CAST(id % 9 AS STRING), '.com/page/',
-                          CAST(id AS STRING)) AS url,
-                   CAST(200 AS INT) AS http_status,
-                   'text/html' AS content_type,
-                   concat('<html><body>doc ', CAST(id AS STRING),
-                          '</body></html>') AS payload_str
-            FROM ({pts}) WHERE id < 400
-        """,
         "spatialite_roundtrip": f"""
             SELECT id, concat('n', CAST(id % 7 AS STRING)) AS name,
                    x / 4 AS score, round(x, 6) AS x, round(y, 6) AS y
@@ -4268,7 +4009,7 @@ def oracle_sql() -> dict[str, str]:
               ('GeoRSS', 'true', 'true'), ('PGDump', 'true', 'true'),
               ('SQLite', 'true', 'true'), ('ESRIJSON', 'true', 'true'),
               ('netCDF', 'true', 'true'), ('MVT', 'true', 'true'),
-              ('WARC', 'true', 'true'), ('GeoJSONSeq', 'true', 'true'),
+              ('GeoJSONSeq', 'true', 'true'),
               ('PostgreSQL', 'true', 'true'), ('MSSQLSpatial', 'true', 'false'),
               ('OCI', 'true', 'false'), ('WFS', 'true', 'false'),
               ('ODS', 'true', 'true'), ('OGR_VRT', 'true', 'false'),
@@ -4280,100 +4021,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT 'GeoJSON/Point/EPSG:4326' AS name,
                    CAST(count(*) AS STRING) AS a, 'meta' AS b
             FROM ({pts}) WHERE id < 250
-        """,
-        "tpch_q1": """
-            -- DuckDB widens sum(BIGINT) to HUGEINT (Arrow decimal128); the
-            -- driver hash-compares Arrow values, so every aggregate-level sum
-            -- must be CAST back to BIGINT to match Spark's int64.
-            SELECT l_returnflag, l_linestatus,
-                   CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-                   CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_price_cents,
-                   CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                       * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS sum_disc_price_e4,
-                   CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                       * (100 - CAST(round(l_discount * 100) AS BIGINT))
-                       * (100 + CAST(round(l_tax * 100) AS BIGINT))) AS BIGINT) AS sum_charge_e6,
-                   round(CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) / count(*), 6) AS avg_qty,
-                   round(CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) / 100.0e0 / count(*), 6) AS avg_price,
-                   round(CAST(sum(CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) / 100.0e0 / count(*), 6) AS avg_disc,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "tpch_q3": """
-            SELECT l_orderkey,
-                   CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                       * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS revenue_e4
-            FROM customer JOIN orders ON c_custkey = o_custkey
-                          JOIN lineitem ON l_orderkey = o_orderkey
-            WHERE c_mktsegment = 'BUILDING'
-              AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-              AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-            GROUP BY l_orderkey
-            HAVING sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                       * (100 - CAST(round(l_discount * 100) AS BIGINT))) > 1000000000
-        """,
-        "tpch_q5": """
-            SELECT n_name,
-                   CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                       * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS revenue_e4
-            FROM customer
-              JOIN orders ON c_custkey = o_custkey
-              JOIN lineitem ON l_orderkey = o_orderkey
-              JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-              JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'EUROPE'
-              AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-              AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-            GROUP BY n_name
-        """,
-        "tpch_q6": """
-            SELECT CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                       * CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) AS revenue_e4
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-              AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-              AND CAST(round(l_discount * 100) AS BIGINT) BETWEEN 2 AND 6
-              AND l_quantity < 24
-        """,
-        "events_hourly": """
-            SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS hour_ts,
-                   event_type, count(*) AS n, CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sv_cents
-            FROM events GROUP BY 1, 2
-        """,
-        "events_sessionization": """
-            SELECT user_id, CAST(1 + sum(CASE WHEN gap > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
-            FROM (
-              SELECT user_id,
-                     epoch(ts) - lag(epoch(ts))
-                       OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-              FROM events
-            ) GROUP BY user_id
-        """,
-        "events_top_per_type": """
-            SELECT event_type, event_id, value FROM (
-              SELECT event_type, event_id, value,
-                     row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rn
-              FROM events
-            ) WHERE rn <= 3
-        """,
-        "window_running_total": """
-            SELECT o_orderkey, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER (
-                     PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_cents
-            FROM orders WHERE o_custkey < 50
-        """,
-        "dedup_exact": """
-            SELECT source, count(*) AS n_docs, count(DISTINCT text) AS n_distinct
-            FROM documents GROUP BY source
-        """,
-        "text_metrics": r"""
-            SELECT doc_id,
-                   round(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) / length(text), 6) AS alpha_ratio,
-                   round(length(regexp_replace(text, '[^0-9]', '', 'g')) / length(text), 6) AS digit_ratio
-            FROM documents
         """,
         "spatial_hilbert": """
             -- independent re-implementation of the standard Hilbert xy->d
@@ -4496,14 +4143,6 @@ def oracle_sql() -> dict[str, str]:
         "arrow_roundtrip": f"""
             SELECT rid, round(w * h, 6) AS area_geom, round(w * h, 6) AS area
             FROM ({rects}) WHERE rid % 7 = 0
-        """,
-        "events_percentiles": """
-            SELECT event_type,
-                   round(quantile_cont(value, 0.5), 6) AS p50,
-                   round(quantile_cont(value, 0.9), 6) AS p90,
-                   round(quantile_cont(value, 0.99), 6) AS p99,
-                   count(*) AS n
-            FROM events GROUP BY event_type
         """,
         "spatial_transform_tranche4": """
             SELECT * FROM (VALUES

@@ -1179,12 +1179,15 @@ def hilbert_xy_to_d(xs: np.ndarray, ys: np.ndarray, order: int = HILBERT_ORDER) 
 
 def hilbert_scaled(xs, ys, min_x, min_y, max_x, max_y, order=HILBERT_ORDER):
     """Map doubles in a box to the Hilbert index (reference overloads take an
-    explicit bounds box, st_hilbert.cpp:241-250)."""
+    explicit bounds box, st_hilbert.cpp:241-250). A NaN grid value maps to
+    0 (NaN has no int64 cast), ±inf to the curve edge; callers mask the
+    NULL rows themselves."""
     side = (1 << order) - 1
     wx = max(max_x - min_x, 1e-300)
     wy = max(max_y - min_y, 1e-300)
-    gx = np.clip(((np.asarray(xs, dtype=np.float64) - min_x) / wx) * side, 0, side).astype(np.int64)
-    gy = np.clip(((np.asarray(ys, dtype=np.float64) - min_y) / wy) * side, 0, side).astype(np.int64)
+    # fmax/fmin drop a NaN operand, so they clip like np.clip and send NaN to 0
+    gx = np.fmin(np.fmax(((np.asarray(xs, dtype=np.float64) - min_x) / wx) * side, 0), side).astype(np.int64)
+    gy = np.fmin(np.fmax(((np.asarray(ys, dtype=np.float64) - min_y) / wy) * side, 0), side).astype(np.int64)
     return hilbert_xy_to_d(gx, gy, order)
 
 

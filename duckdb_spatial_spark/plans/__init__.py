@@ -5,7 +5,6 @@ from .pruning import (  # noqa: F401
     geo_parquet_stats,
     hilbert_cluster,
     hilbert_cluster_points,
-    read_geo_parquet,
     scan_geo_parquet,
     write_geo_parquet,
 )

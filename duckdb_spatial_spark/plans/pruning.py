@@ -148,8 +148,8 @@ def _finite(*exprs: str) -> str:
 def _finite_bounds(df: DataFrame, min_x: str, min_y: str, max_x: str, max_y: str) -> tuple:
     """Layout bounds — (min(min_x), min(min_y), max(max_x), max(max_y)) —
     over the rows whose four coordinates are all finite, in one JVM
-    aggregate. Other rows must not reach the bounds: a NaN bound has no
-    defined int64 cast in hilbert_scaled, and an infinite one maps every
+    aggregate. Other rows must not reach the bounds: a NaN bound maps every
+    coordinate to grid 0 in hilbert_scaled, and an infinite one maps every
     finite coordinate to the same curve edge. With no finite row the
     bounds degenerate to (0, 0, 0, 0), which keeps the downstream
     arithmetic well-defined."""
@@ -250,7 +250,7 @@ def hilbert_cluster_points(
         xs = x.to_numpy(dtype=np.float64, na_value=np.nan)
         ys = y.to_numpy(dtype=np.float64, na_value=np.nan)
         nan = np.isnan(xs) | np.isnan(ys)
-        h = udfs.hilbert_scaled(np.nan_to_num(xs), np.nan_to_num(ys), b0, b1, b2, b3)
+        h = udfs.hilbert_scaled(xs, ys, b0, b1, b2, b3)
         bucket = np.searchsorted(splits, h, side="right") if len(splits) else np.zeros(len(h), dtype=np.int64)
         route = jmap[bucket] if jmap is not None else np.zeros(len(h), dtype=np.int32)
         return pd.DataFrame({
@@ -284,7 +284,6 @@ def write_geo_parquet(
     df: DataFrame,
     path: str,
     geom_col: str = "geom",
-    mode: str = "overwrite",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
     point_xy: tuple | None = None,
@@ -330,14 +329,13 @@ def write_geo_parquet(
         )
     else:
         clustered = hilbert_cluster(df, geom_col, bounds, num_partitions)
-    clustered.write.mode(mode).options(**GEO_PARQUET_WRITE_OPTIONS).parquet(path)
-    if mode == "overwrite" and not path.startswith(("s3://", "s3a://", "hdfs://")):
-        # metadata sidecar for append_geo_parquet: the clustering bounds,
-        # plus per-file bboxes from one footer-stats job at WRITE time, so a
-        # windowed read can drop whole files from the driver-side manifest
-        # BEFORE Spark lists them or tasks open their footers (the
-        # reference's R-tree answers the same question from its root node;
-        # see scan_geo_parquet)
+    clustered.write.mode("overwrite").options(**GEO_PARQUET_WRITE_OPTIONS).parquet(path)
+    if not path.startswith(("s3://", "s3a://", "hdfs://")):
+        # layout manifest: the clustering bounds, plus per-file bboxes from
+        # one footer-stats job at WRITE time, so a windowed read can drop
+        # whole files from the driver-side manifest BEFORE Spark lists them
+        # or tasks open their footers (the reference's R-tree answers the
+        # same question from its root node; see scan_geo_parquet)
         frows = geo_parquet_stats(df.sparkSession, path, level="file").collect()
         fmap = {
             r["file"]: [r["min_x"], r["min_y"], r["max_x"], r["max_y"]]
@@ -349,7 +347,6 @@ def write_geo_parquet(
             {
                 "bounds": [float(v) for v in bounds],
                 "geom_col": geom_col,
-                "generation": 1,
                 "files": fmap,
                 # written schema, so scan_geo_parquet can bind the
                 # pruned file set without a per-query schema-inference
@@ -357,10 +354,6 @@ def write_geo_parquet(
                 "schema": clustered.schema.jsonValue(),
             },
         )
-
-
-def read_geo_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def scan_geo_parquet(
@@ -383,9 +376,9 @@ def scan_geo_parquet(
     manifest (legacy layout, foreign writer) is always read, and a
     manifest entry for a since-deleted file is ignored, so the result
     equals ``spark.read.parquet(path)`` plus the caller's own bbox
-    filter in every case. Layouts maintained through
-    :func:`append_geo_parquet` / :func:`compact_geo_parquet` keep the
-    manifest fresh."""
+    filter in every case. The manifest describes the files of one write;
+    a layout maintained after its first write is a snapshot layout
+    (:mod:`~duckdb_spatial_spark.plans.snapshot`)."""
     if bbox is None:
         return spark.read.parquet(path)
     meta = read_layout_meta(path)
@@ -653,10 +646,10 @@ def filter_bbox(
 
 
 # ---------------------------------------------------------------------------
-# incremental maintenance (reference core/index/rtree/rtree.cpp keeps the
-# R-tree current under insert/delete with a WAL; the lakehouse-shaped analog
-# for a clustered-parquet layout is append-batch + fragmentation metric +
-# offline compaction, like OPTIMIZE in the public Delta/Iceberg designs)
+# layout manifest + fragmentation metric (reference core/index/rtree/rtree.cpp
+# keeps the R-tree current under insert/delete with a WAL; the snapshot
+# protocol in plans/snapshot.py is the clustered-parquet analog, and
+# compact_geo_snapshot reads layout_fragmentation to decide when to re-cluster)
 # ---------------------------------------------------------------------------
 _LAYOUT_META = "_geo_layout.json"
 
@@ -670,10 +663,10 @@ def _write_layout_meta(path: str, meta: dict) -> None:
 
 
 def read_layout_meta(path: str) -> dict | None:
-    """Layout metadata written by :func:`write_geo_parquet` (None for
-    layouts written before this existed — callers fall back to footer
-    stats). Spark ignores underscore-prefixed files, so the sidecar never
-    pollutes reads."""
+    """Layout manifest written by :func:`write_geo_parquet`, or None when
+    the directory has none (a foreign writer, or an object-store path);
+    :func:`scan_geo_parquet` then reads every file. Spark ignores
+    underscore-prefixed files, so the sidecar never pollutes reads."""
     import json as _json
     import os as _os
 
@@ -682,48 +675,6 @@ def read_layout_meta(path: str) -> dict | None:
         return None
     with open(p, encoding="utf-8") as f:
         return _json.load(f)
-
-
-def append_geo_parquet(
-    df: DataFrame,
-    path: str,
-    geom_col: str = "geom",
-    num_partitions: int | None = None,
-    point_xy: tuple | None = None,
-) -> None:
-    """Append a batch to an existing clustered layout (rtree.cpp:Insert
-    analog). The batch is Hilbert-clustered against the layout's ORIGINAL
-    bounds — hilbert values stay comparable across generations, so bbox
-    pruning and the hilbert sort order remain valid; the new files simply
-    overlap old ones in hilbert range until :func:`compact_geo_parquet`
-    folds them in. Bounds come from the metadata sidecar, else from the
-    bbox footer stats of the existing files (legacy layouts)."""
-    meta = read_layout_meta(path)
-    if meta is not None:
-        bounds = tuple(meta["bounds"])
-    else:
-        spark = df.sparkSession
-        st = geo_parquet_stats(spark, path, level="file").agg(
-            F.min("min_x"), F.min("min_y"), F.max("max_x"), F.max("max_y")
-        ).collect()[0]
-        if st[0] is None:
-            raise ValueError(f"{path}: not an existing clustered layout (no bbox stats)")
-        bounds = (st[0], st[1], st[2], st[3])
-    write_geo_parquet(
-        df, path, geom_col=geom_col, mode="append", bounds=bounds,
-        num_partitions=num_partitions, point_xy=point_xy,
-    )
-    gen = (meta or {}).get("generation", 1) + 1
-    # refresh the per-file bounds so scan_geo_parquet's manifest pruning
-    # stays exact across generations (one footer-stats job, append-time)
-    frows = geo_parquet_stats(df.sparkSession, path, level="file").collect()
-    fmap = {
-        r["file"]: [r["min_x"], r["min_y"], r["max_x"], r["max_y"]]
-        for r in frows
-        if r["min_x"] is not None
-    }
-    _write_layout_meta(path, {**(meta or {"bounds": list(bounds), "geom_col": geom_col}),
-                              "generation": gen, "files": fmap})
 
 
 def layout_fragmentation(
@@ -755,45 +706,3 @@ def layout_fragmentation(
         overlaps += 2 * len(active)
         heapq.heappush(active, hi)
     return overlaps / (k * (k - 1))
-
-
-def compact_geo_parquet(
-    spark: SparkSession,
-    path: str,
-    geom_col: str = "geom",
-    num_partitions: int | None = None,
-    min_fragmentation: float = 0.0,
-) -> bool:
-    """Re-cluster the whole layout in place (OPTIMIZE analog; the reference
-    instead maintains the R-tree online via its WAL — rtree.cpp:63-118 —
-    which parquet files can't do). Skips when fragmentation <=
-    ``min_fragmentation``. Rewrites into a sibling temp dir then swaps via
-    two renames — readers already BOUND to the old files keep working, but
-    the swap is NOT atomic: between the two renames the dataset path
-    briefly does not exist, so a reader binding at that instant fails.
-    Single-writer / no-concurrent-bind semantics; a truly atomic swap
-    needs a symlink flip or a table-format commit protocol (Iceberg/Delta),
-    which is the recommended wrapper at production scale."""
-    import os as _os
-    import shutil as _shutil
-
-    if layout_fragmentation(spark, path) <= min_fragmentation:
-        return False
-    meta = read_layout_meta(path)
-    bounds = tuple(meta["bounds"]) if meta else None
-    df = spark.read.parquet(path).drop(*BBOX_COLS, "hilbert")
-    tmp = path.rstrip("/") + "__compact"
-    write_geo_parquet(df, tmp, geom_col=geom_col, mode="overwrite", bounds=bounds,
-                      num_partitions=num_partitions)
-    if meta:
-        # keep the FRESH per-file bounds write_geo_parquet just recorded
-        # for the compacted files; carry identity fields + generation
-        fresh = read_layout_meta(tmp) or {}
-        _write_layout_meta(
-            tmp, {**meta, **fresh, "generation": meta.get("generation", 1) + 1}
-        )
-    old = path.rstrip("/") + "__old"
-    _os.rename(path, old)
-    _os.rename(tmp, path)
-    _shutil.rmtree(old)
-    return True

@@ -1,10 +1,7 @@
-"""Snapshot (manifest) commit protocol for clustered geo-parquet layouts.
-
-``compact_geo_parquet`` swaps directories with two renames, which is not
-atomic: a reader binding between them fails, and appended files become
-visible mid-write. This module adds the table-format-style fix the
-compact docstring defers to — an Iceberg-lite, single-writer /
-many-reader protocol:
+"""Snapshot (manifest) commit protocol: the one way a clustered
+geo-parquet layout is maintained after its first write (append, compact,
+delete, upsert, vacuum). It is an Iceberg-lite, single-writer /
+many-reader protocol, so a reader never sees a torn layout:
 
   * data files are immutable and live in per-commit subdirectories
     ``data-{version:08d}/`` — a file, once published, is never rewritten
@@ -41,7 +38,12 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .pruning import BBOX_COLS, _hadoop_list_parquet, write_geo_parquet
+from .pruning import (
+    BBOX_COLS,
+    GEO_PARQUET_WRITE_OPTIONS,
+    _hadoop_list_parquet,
+    write_geo_parquet,
+)
 
 _MANIFEST_RE = re.compile(r"_manifest-v(\d{8})\.json$")
 
@@ -110,7 +112,7 @@ def write_geo_snapshot(
     version = 1
     data_dir = os.path.join(path, f"data-{version:08d}")
     write_geo_parquet(
-        df, data_dir, geom_col=geom_col, mode="overwrite", bounds=bounds,
+        df, data_dir, geom_col=geom_col, bounds=bounds,
         num_partitions=num_partitions, point_xy=point_xy,
     )
     from .pruning import read_layout_meta
@@ -163,7 +165,7 @@ def append_geo_snapshot(
     version = cur + 1
     data_dir = os.path.join(path, f"data-{version:08d}")
     write_geo_parquet(
-        df, data_dir, geom_col=geom_col, mode="overwrite", bounds=bounds,
+        df, data_dir, geom_col=geom_col, bounds=bounds,
         num_partitions=num_partitions, point_xy=point_xy,
     )
     _commit(
@@ -181,12 +183,12 @@ def compact_geo_snapshot(
     num_partitions: int | None = None,
     min_fragmentation: float = 0.0,
 ) -> int | None:
-    """Re-cluster the current snapshot into a single fresh generation and
-    commit it atomically (OPTIMIZE analog). Unlike
-    :func:`~duckdb_spatial_spark.plans.pruning.compact_geo_parquet`, a
-    concurrently-binding reader always succeeds: it sees either the
-    fragmented snapshot or the compacted one. Returns the new version, or
-    None when fragmentation is at or below the threshold."""
+    """Re-cluster the current snapshot into one fresh data directory and
+    commit it atomically (OPTIMIZE analog). A concurrently-binding reader
+    always succeeds: it sees either the fragmented snapshot or the
+    compacted one. Returns the new version, or None when
+    :func:`~duckdb_spatial_spark.plans.pruning.layout_fragmentation` is
+    at or below ``min_fragmentation``."""
     from .pruning import layout_fragmentation
 
     cur = snapshot_version(path)
@@ -201,8 +203,8 @@ def compact_geo_snapshot(
     version = cur + 1
     data_dir = os.path.join(path, f"data-{version:08d}")
     write_geo_parquet(
-        df, data_dir, geom_col=man.get("geom_col", "geom"), mode="overwrite",
-        bounds=bounds, num_partitions=num_partitions,
+        df, data_dir, geom_col=man.get("geom_col", "geom"), bounds=bounds,
+        num_partitions=num_partitions,
     )
     _commit(
         path,
@@ -337,11 +339,7 @@ def delete_geo_snapshot(
         survivors = survivors.repartition(num_partitions)
     if "hilbert" in survivors.columns:
         survivors = survivors.sortWithinPartitions("hilbert")
-    (
-        survivors.write.mode("overwrite")
-        .option("parquet.enable.dictionary", "false")
-        .parquet(data_dir)
-    )
+    survivors.write.mode("overwrite").options(**GEO_PARQUET_WRITE_OPTIONS).parquet(data_dir)
     _commit(
         path,
         version,
@@ -442,7 +440,7 @@ def upsert_geo_snapshot(
     else:
         batch = source
     write_geo_parquet(
-        batch, data_dir, geom_col=geom_col, mode="overwrite", bounds=bounds,
+        batch, data_dir, geom_col=geom_col, bounds=bounds,
         num_partitions=num_partitions, point_xy=point_xy,
     )
     _commit(

@@ -77,7 +77,7 @@ _DRIVER_ALIASES = {
     "georss": {"georss"}, "pgdump": {"pgdump", "pgdump (sql)"},
     "spatialite": {"spatialite", "sqlite"},
     "esrijson": {"esrijson"}, "netcdf": {"netcdf", "nc"},
-    "mvt": {"mvt", "mvt (mapbox vector tile)"}, "warc": {"warc"},
+    "mvt": {"mvt", "mvt (mapbox vector tile)"},
     "vrt": {"vrt", "ogr_vrt"}, "gmt": {"gmt", "ogr_gmt"},
     "sosi": {"sosi"},
     "interlis": {"interlis", "interlis 1", "ili", "itf"},
@@ -263,7 +263,7 @@ def _st_read_sniff(p: str):
             (".rss", "georss"), (".georss", "georss"), (".atom", "georss"),
             (".sql", "pgdump"), (".sqlite", "spatialite"), (".splite", "spatialite"),
             (".esrijson", "esrijson"), (".nc", "netcdf"), (".cdf", "netcdf"),
-            (".mvt", "mvt"), (".warc.gz", "warc"), (".warc", "warc"),
+            (".mvt", "mvt"),
             (".vrt", "vrt"), (".gmt", "gmt"), (".dgn", "dgn"), (".000", "s57"),
             (".031", "s57"),  # exchange-set CATALOG.031 (r16)
             (".sos", "sosi"), (".itf", "interlis"), (".ddf", "sdts"),
@@ -419,10 +419,6 @@ def _st_read_dispatch(spark, path: str, format: str | None, bbox, **options):
         # tile georeference (world bounds) is `tile_bounds=`; the uniform
         # `bbox=` option stays a FILTER like every other format
         return read_mvt(spark, path, bbox=options.pop("tile_bounds", None), **options)
-    if fmt == "warc":
-        from .warc import read_warc
-
-        return read_warc(spark, path, **options)
     raise ValueError(f"unsupported format {format!r}")
 
 
@@ -701,16 +697,6 @@ def st_read_meta(spark, path: str, format: str | None = None):
             ",".join(colm.get("geometry_types", [])),
             str(colm.get("crs", "")),
         ))
-    elif format == "warc" or p.endswith((".warc", ".warc.gz")):
-        # one local parse, no Spark job: record count by WARC-Type
-        from collections import Counter as _Counter
-
-        from .warc import parse_warc
-
-        with open(path, "rb") as f:
-            counts = _Counter(r["warc_type"] for r in parse_warc(f.read()))
-        for wt, nrec in sorted(counts.items()):
-            rows.append((f"{path}:{wt}", "WARC", int(nrec), "", ""))
     elif format == "mvt" or p.endswith(".mvt"):
         # header-only: one protobuf parse, feature count per layer without
         # decoding any geometry
@@ -788,7 +774,7 @@ def st_write(df, path: str, format: str | None = None, **options):
         ".georss": "georss", ".sql": "pgdump", ".sqlite": "spatialite",
         ".splite": "spatialite", ".parquet": "geoparquet",
         ".esrijson": "esrijson", ".nc": "netcdf", ".cdf": "netcdf",
-        ".mvt": "mvt", ".warc.gz": "warc", ".warc": "warc",
+        ".mvt": "mvt",
         ".gmt": "gmt", ".dgn": "dgn", ".000": "s57", ".sos": "sosi",
         ".itf": "interlis", ".ddf": "sdts",
     }
@@ -828,12 +814,6 @@ def st_write(df, path: str, format: str | None = None, **options):
         from .mvt import write_mvt
 
         return write_mvt(df, path, bbox=options.pop("tile_bounds", None), **options)
-    if fmt == "warc":
-        from .warc import write_warc
-
-        if path.lower().endswith(".warc.gz"):
-            options.setdefault("gzip_members", True)
-        return write_warc(df, path, **options)
     if fmt in ("geoparquet", "parquet"):
         if options.pop("file", False):
             # one spec-1.0 GeoParquet FILE with the 'geo' footer key

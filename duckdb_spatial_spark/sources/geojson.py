@@ -547,7 +547,6 @@ def st_drivers(spark: SparkSession) -> DataFrame:
         ("ESRIJSON", "ArcGIS REST FeatureSet JSON, Esri ring winding (read/write)", True, True, True, ""),
         ("netCDF", "netCDF classic CDF-1/CDF-2, CF point series + grids (read/write)", True, True, True, ""),
         ("MVT", "Mapbox Vector Tiles, protobuf wire format per spec 2.1 (read/write)", True, True, True, ""),
-        ("WARC", "ISO 28500 web archives (CommonCrawl), per-file parallel responses (read/write)", True, True, True, ""),
         ("GeoJSONSeq", "newline-delimited GeoJSON on the splittable text source (read/write)", True, True, True, ""),
         ("PostgreSQL", "live PostGIS over Spark JDBC: GiST-served bbox pushdown, staged write-back (read/write)", True, True, True, ""),
         ("MSSQLSpatial", "live SQL Server spatial over Spark JDBC: Filter() index pushdown (read-only)", False, False, True, ""),

@@ -5,13 +5,15 @@ deleted or renamed module only surfaces when that row runs. These checks
 catch it statically: every package module imports, every lazy
 ``from duckdb_spatial_spark... import name`` in ``__spark_entry__.py``
 resolves, every ``oracle_sql()`` key names a registered row, and no
-row function or oracle helper is left behind with no caller.
+row function, oracle helper or testdata view is left behind with no
+caller.
 """
 
 import ast
 import importlib
 import pathlib
 import pkgutil
+import re
 
 import duckdb_spatial_spark
 import __spark_entry__ as E
@@ -84,7 +86,9 @@ def test_no_orphan_row_or_oracle_helper():
     uncalled = [
         f for f in defs if f.startswith("_") and f.endswith("_oracle") and f not in called
     ]
-    assert not unregistered and not uncalled, (unregistered, uncalled)
+    text = _ENTRY.read_text()
+    unread = [t for t in E.TABLES if not re.search(rf"\b(?:FROM|JOIN)\s+{t}\b", text)]
+    assert not unregistered and not uncalled and not unread, (unregistered, uncalled, unread)
 
 
 def test_queries_fit_the_driver_window():

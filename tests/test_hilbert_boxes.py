@@ -4,6 +4,9 @@ the ``point_xy=`` lane. Such rows are kept, and never reach the layout
 bounds.
 """
 
+import warnings
+
+import numpy as np
 from pyspark.sql import functions as F
 
 from duckdb_spatial_spark.functions import udfs
@@ -34,6 +37,25 @@ def _src(spark, n=2000, with_nulls=False):
 
 def _envelopes(src):
     return src.select("id", udfs.st_makeenvelope("mx", "my", "mxx", "mxy").alias("geom"))
+
+
+def test_hilbert_scaled_nonfinite_inputs():
+    """Spark-free: NaN maps to grid 0 and ±inf to the curve edge, with no
+    undefined float->int64 cast; a finite row in the same batch keeps its
+    value."""
+    nan, inf = np.nan, np.inf
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = udfs.hilbert_scaled(
+            [nan, 1.0, inf, -inf, 0.5, 0.5], [0.5, nan, 1.0, 1.0, inf, -inf], 0, 0, 2, 2
+        )
+        want = udfs.hilbert_scaled(
+            [0.0, 1.0, 2.0, 0.0, 0.5, 0.5], [0.5, 0.0, 1.0, 1.0, 2.0, 0.0], 0, 0, 2, 2
+        )
+        assert got.dtype == np.int64 and got.tolist() == want.tolist()
+        assert udfs.hilbert_scaled([nan, 1.5], [nan, 0.25], 0, 0, 2, 2)[1] == (
+            udfs.hilbert_scaled([1.5], [0.25], 0, 0, 2, 2)[0]
+        )
 
 
 def test_box_lane_null_bounds_row(spark, tmp_path):

@@ -1,10 +1,17 @@
-"""Clustered-layout maintenance: append + fragmentation + compaction
-(the parquet analog of the reference's online R-tree maintenance,
-core/index/rtree/rtree.cpp)."""
+"""Clustered-layout maintenance: snapshot append, the fragmentation metric
+and compaction (the parquet analog of the reference's online R-tree
+maintenance, core/index/rtree/rtree.cpp), and the write-time manifest
+that prunes files for a windowed scan."""
 
 from pyspark.sql import functions as F
 
 from duckdb_spatial_spark.plans import pruning as P
+from duckdb_spatial_spark.plans.snapshot import (
+    append_geo_snapshot,
+    compact_geo_snapshot,
+    read_geo_snapshot,
+    write_geo_snapshot,
+)
 
 
 def _points(spark, lo, hi):
@@ -15,25 +22,28 @@ def _points(spark, lo, hi):
     )
 
 
+def _fragmentation(spark, path):
+    return P.layout_fragmentation(
+        spark, path, files=read_geo_snapshot(spark, path).inputFiles()
+    )
+
+
 def test_append_fragmentation_compact(spark, tmp_path):
     path = str(tmp_path / "layout")
     base = _points(spark, 0, 20_000)
-    P.write_geo_parquet(base, path, point_xy=("x", "y"), num_partitions=4)
-    meta = P.read_layout_meta(path)
-    assert meta is not None and meta["generation"] == 1
-    f0 = P.layout_fragmentation(spark, path)
+    write_geo_snapshot(base, path, point_xy=("x", "y"), num_partitions=4)
+    f0 = _fragmentation(spark, path)
 
-    P.append_geo_parquet(
+    append_geo_snapshot(
         _points(spark, 20_000, 30_000), path, point_xy=("x", "y"), num_partitions=4
     )
-    assert P.read_layout_meta(path)["generation"] == 2
-    df = spark.read.parquet(path)
+    df = read_geo_snapshot(spark, path)
     assert df.count() == 30_000
     # appended files overlap the original hilbert ranges
-    f1 = P.layout_fragmentation(spark, path)
+    f1 = _fragmentation(spark, path)
     assert f1 > f0
 
-    # pruned read stays correct across generations (same bounds => same curve)
+    # pruned read stays correct across versions (same bounds => same curve)
     n_pruned = P.filter_bbox(df, 100, 100, 300, 300, exact="within").count()
     n_exact = _points(spark, 0, 30_000).filter(
         (F.col("x") > 100) & (F.col("x") < 300) & (F.col("y") > 100) & (F.col("y") < 300)
@@ -41,15 +51,14 @@ def test_append_fragmentation_compact(spark, tmp_path):
     assert n_pruned == n_exact
 
     # compaction folds the layout back to near-disjoint ranges
-    assert P.compact_geo_parquet(spark, path, min_fragmentation=0.0)
-    f2 = P.layout_fragmentation(spark, path)
+    assert compact_geo_snapshot(spark, path, min_fragmentation=0.0)
+    f2 = _fragmentation(spark, path)
     assert f2 <= f1
-    df2 = spark.read.parquet(path)
+    df2 = read_geo_snapshot(spark, path)
     assert df2.count() == 30_000
-    assert P.read_layout_meta(path)["generation"] == 3
     assert P.filter_bbox(df2, 100, 100, 300, 300, exact="within").count() == n_exact
     # idempotent: already-compact layout skips
-    assert not P.compact_geo_parquet(spark, path, min_fragmentation=max(f2, 0.05))
+    assert compact_geo_snapshot(spark, path, min_fragmentation=max(f2, 0.05)) is None
 
 
 def test_scan_geo_parquet_manifest_pruning(spark, tmp_path):
@@ -88,28 +97,3 @@ def test_scan_geo_parquet_manifest_pruning(spark, tmp_path):
     legacy = P.scan_geo_parquet(spark, path, bbox=win)
     assert len(legacy.inputFiles()) == len(full.inputFiles())
     assert P.filter_bbox(legacy, *win, exact="within", points=True).count() == n_full
-    with open(mp, "w", encoding="utf-8") as f:
-        json.dump(meta, f)
-
-    # manifest stays fresh across append + compact
-    P.append_geo_parquet(
-        _points(spark, 50_000, 60_000), path, point_xy=("x", "y"), num_partitions=4
-    )
-    m_app = P.read_layout_meta(path)
-    assert len(m_app["files"]) == 12
-    n2 = P.filter_bbox(
-        P.scan_geo_parquet(spark, path, bbox=win), *win, exact="within", points=True
-    ).count()
-    n2_full = P.filter_bbox(
-        spark.read.parquet(path), *win, exact="within", points=True
-    ).count()
-    assert n2 == n2_full
-    assert P.compact_geo_parquet(spark, path, min_fragmentation=0.0)
-    m_cmp = P.read_layout_meta(path)
-    assert set(m_cmp["files"]) == {
-        os.path.basename(f) for f in spark.read.parquet(path).inputFiles()
-    }
-    n3 = P.filter_bbox(
-        P.scan_geo_parquet(spark, path, bbox=win), *win, exact="within", points=True
-    ).count()
-    assert n3 == n2_full

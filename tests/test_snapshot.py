@@ -212,6 +212,21 @@ def test_delete_rewrites_only_affected_files(spark, layout):
     shared = set(m1["files"]) & set(m2["files"])
     assert shared, "expected at least one untouched file to carry over"
     assert set(m2["files"]) - set(m1["files"]), "expected rewritten files in a new data dir"
+    # rewritten files keep the layout's writer encoding (zstd column chunks)
+    import pyarrow.parquet as pq
+
+    def codecs(files):
+        out = set()
+        for f in files:
+            md = pq.ParquetFile(os.path.join(path, f)).metadata
+            out |= {
+                md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)
+            }
+        return out
+
+    assert codecs(m1["files"]) == codecs(m2["files"]) == {"ZSTD"}
 
 
 def test_delete_keeps_null_predicate_rows(spark, tmp_path):
