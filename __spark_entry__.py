@@ -2748,7 +2748,7 @@ def q_zonal_stats(spark, sf_dir):
     ).select(F.col("rid").alias("zone_id"), "geom")
     z = zonal_stats(
         pts, zones, "v", zone_cols=("zone_id",),
-        predicate="within", strategy="grid", cell_size=250.0,
+        predicate="within", cell_size=250.0,
     )
     return z.selectExpr(
         "zone_id", "n_cells", "sum_v",

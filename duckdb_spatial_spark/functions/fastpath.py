@@ -1,16 +1,21 @@
 """Vectorized batch fast paths for the hot UDF shapes.
 
-The dominant spatial filter at scale is ``pred(point_column, CONSTANT
-region)`` (the reference optimizes exactly this with prepared geometries,
-``geos_executor.hpp:28-67``, and its R-tree rewrite targets it too). When an
-Arrow batch arrives where
+The dominant spatial predicates at scale pair a point column with regions:
+``pred(point_column, CONSTANT region)`` in a filter, and
+``pred(point, polygon)`` per candidate pair in the ``st_join`` recheck (the
+reference serves both from one executor with a prepared-geometry fast
+path, ``geos_executor.hpp:28-67``). When an Arrow batch arrives where
 
   * one side is entirely 21-byte 2D point WKBs -> coordinates decode in ONE
     numpy view (no per-row parse), and
-  * the other side is a constant geometry -> parsed once,
+  * the other side is points too -> decided elementwise, or else its rows
+    are grouped by distinct geometry (``pd.factorize``; a constant batch is
+    one group) -> each geometry parses once,
 
-the predicate evaluates as a numpy broadcast over (points x ring edges)
-instead of a Python loop. Falls back to the generic per-row path otherwise.
+the predicate evaluates as one numpy broadcast of each group's points over
+its ring edges instead of a Python loop per row. A group that is not a
+point, polygon or multipolygon sends the whole batch back to the generic
+per-row path.
 """
 
 from __future__ import annotations
@@ -141,22 +146,6 @@ def box_flags(s: pd.Series, mnx, mny, mxx, mxy) -> np.ndarray:
     return flags
 
 
-def const_geom(s: pd.Series):
-    """Parsed geometry if the whole batch holds one constant value."""
-    if len(s) == 0:
-        return None
-    first = s.iloc[0]
-    if first is None:
-        return None
-    fb = bytes(first)
-    for v in s:
-        if v is None or bytes(v) != fb:
-            return None
-    from .udfs import _g
-
-    return _g(fb)
-
-
 def ring_state(xs: np.ndarray, ys: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Vectorized ray cast: 0 outside, 1 boundary, 2 inside (per point)."""
     x1, y1 = ring[:-1, 0], ring[:-1, 1]
@@ -199,14 +188,15 @@ def multipolygon_state(xs, ys, g: G.Geometry):
     return st if any_poly else None
 
 
-# predicate name -> fn(state) for (point batch, const polygon)
+# predicate name -> fn(state) for (point batch, polygon); point-vs-point
+# pairs take state 2 where equal, else 0
 _PT_IN_POLY = {
     "intersects": lambda st: st >= 1,
     "within": lambda st: st == 2,
     "covered_by": lambda st: st >= 1,
     "disjoint": lambda st: st == 0,
 }
-# (const polygon, point batch) orientation
+# (polygon, point batch) orientation
 _POLY_HAS_PT = {
     "intersects": lambda st: st >= 1,
     "contains": lambda st: st == 2,
@@ -217,35 +207,66 @@ _POLY_HAS_PT = {
 
 def try_predicate_batch(name: str, a: pd.Series, b: pd.Series):
     """Vectorized result Series or None (fall back to per-row)."""
-    pa = points_xy(a)
-    if pa is not None and name in _PT_IN_POLY:
-        g = const_geom(b)
-        if g is not None:
-            if g.tag == G.POINT and not g.is_empty():
-                xs, ys, mask = pa
-                eq = (xs == float(g.data[0])) & (ys == float(g.data[1]))
-                res = {"intersects": eq, "within": eq, "covered_by": eq, "disjoint": ~eq}[name]
-                return _mask_series(res, mask)
-            st = _poly_state_or_none(pa, g)
-            if st is not None:
-                return _mask_series(_PT_IN_POLY[name](st), pa[2])
-    pb = points_xy(b)
-    if pb is not None and name in _POLY_HAS_PT:
-        g = const_geom(a)
-        if g is not None:
-            if g.tag == G.POINT and not g.is_empty():
-                xs, ys, mask = pb
-                eq = (xs == float(g.data[0])) & (ys == float(g.data[1]))
-                res = {"intersects": eq, "contains": eq, "covers": eq, "disjoint": ~eq}[name]
-                return _mask_series(res, mask)
-            st = _poly_state_or_none(pb, g)
-            if st is not None:
-                return _mask_series(_POLY_HAS_PT[name](st), pb[2])
+    for pts, other, table in ((a, b, _PT_IN_POLY), (b, a, _POLY_HAS_PT)):
+        p = points_xy(pts) if name in table else None
+        r = None if p is None else _vs_other(p, other, _eq_state, _poly_state_or_none)
+        if r is not None:
+            return _mask_series(table[name](r[0]), r[1])
     return None
 
 
-def _poly_state_or_none(p, g: G.Geometry):
-    xs, ys, _ = p
+def try_distance_batch(a: pd.Series, b: pd.Series):
+    """Vectorized distance from a point batch to point geometries, else None."""
+    pa = points_xy(a)
+    r = None if pa is None else _vs_other(pa, b, _hypot, lambda xs, ys, g: None)
+    if r is None:
+        return None
+    d, valid = r
+    return _mask_series(d, valid & ~np.isnan(d))  # NaN: an EMPTY point
+
+
+def _vs_other(p, other: pd.Series, point_fn, poly_fn):
+    """Per-row values of the point batch ``p`` against ``other`` and their
+    validity (False where either side is NULL), or None to fall back.
+
+    ``point_fn(xs, ys, ox, oy)`` decides point pairs elementwise (an EMPTY
+    point is NaN, NaN); ``poly_fn(xs, ys, g)`` decides points against one
+    other geometry, or returns None. When ``other`` is a point batch too it
+    is one elementwise pass; else its rows are grouped by distinct WKB value
+    and each group is decided in one call."""
+    from .udfs import _g
+
+    xs, ys, valid = p
+    q = points_xy(other)
+    if q is not None:
+        return point_fn(xs, ys, q[0], q[1]), valid & q[2]
+    codes, uniq = pd.factorize(other)  # NULL -> -1, in no group
+    order = np.argsort(codes, kind="stable")
+    starts = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
+    out = np.zeros(len(xs))
+    for k, w in enumerate(uniq):
+        ii = order[starts[k]:starts[k + 1]]
+        g = _g(w)
+        if g.tag == G.POINT:
+            ox, oy = (np.nan, np.nan) if g.is_empty() else (g.data[0], g.data[1])
+            v = point_fn(xs[ii], ys[ii], ox, oy)
+        else:
+            v = poly_fn(xs[ii], ys[ii], g)
+        if v is None:
+            return None
+        out[ii] = v
+    return out, valid & (codes >= 0)
+
+
+def _eq_state(xs, ys, ox, oy):
+    return np.where((xs == ox) & (ys == oy), 2, 0)
+
+
+def _hypot(xs, ys, ox, oy):
+    return np.hypot(xs - ox, ys - oy)
+
+
+def _poly_state_or_none(xs, ys, g: G.Geometry):
     if g.tag == G.POLYGON and g.data:
         return polygon_state(xs, ys, g)
     if g.tag in (G.MULTIPOLYGON, G.GEOMETRYCOLLECTION):
@@ -259,22 +280,3 @@ def _mask_series(values: np.ndarray, mask: np.ndarray) -> pd.Series:
         out = out.astype(object)
         out[~mask] = None
     return out
-
-
-def try_distance_batch(a: pd.Series, b: pd.Series):
-    """Vectorized point-to-constant-point distance, else None."""
-    pa = points_xy(a)
-    if pa is None:
-        return None
-    g = const_geom(b)
-    if g is None:
-        return None
-    xs, ys, mask = pa
-    if g.tag == G.POINT and not g.is_empty():
-        d = np.hypot(xs - float(g.data[0]), ys - float(g.data[1]))
-        out = pd.Series(d)
-        if not mask.all():
-            out = out.astype(object)
-            out[~mask] = None
-        return out
-    return None

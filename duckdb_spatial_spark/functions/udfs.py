@@ -930,10 +930,11 @@ def st_buffer_style(
 # --------------------------------------------------------------------------
 
 def _binary_pred(name, fn):
-    """Predicate UDF with the vectorized point-batch/constant fast path
-    (see fastpath.py); falls back to the per-row kernel."""
+    """Predicate UDF with the vectorized point-batch fast path (see
+    fastpath.py: a point side against points or polygons grouped by
+    distinct geometry); falls back to the per-row kernel. The one kernel
+    for filters, SQL and the ``st_join`` recheck."""
 
-    @F.pandas_udf(T.BooleanType())
     def u(a: pd.Series, b: pd.Series) -> pd.Series:
         from . import fastpath
 
@@ -944,7 +945,8 @@ def _binary_pred(name, fn):
             [None if (x is None or y is None) else fn(_g(x), _g(y)) for x, y in zip(a, b)]
         )
 
-    return u
+    u.__name__ = "st_" + name.replace("_", "")  # plans show st_within(...), not u(...)
+    return F.pandas_udf(T.BooleanType())(u)
 
 
 st_intersects = _binary_pred("intersects", A.intersects)

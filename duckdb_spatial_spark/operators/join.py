@@ -26,9 +26,11 @@ see PAPERS.md):
      is emitted only in the cell containing the lower-left corner of the
      two bboxes' intersection — no dropDuplicates shuffle needed (a point
      left meets each right row in one cell, so it needs no such term)
-  6. exact predicate re-check (pandas UDF over WKB) as one filter — same
-     two-phase exactness argument as the reference (bbox overlap is implied
-     by all supported predicates, ``optimizer_rules.cpp:30-31``)
+  6. exact predicate re-check as one filter through the predicate's own
+     ``ST_*`` UDF (``st_within``, ``st_dwithin`` ...), the kernel SQL and
+     filters call too — same two-phase exactness argument as the
+     reference (bbox overlap is implied by all supported predicates,
+     ``optimizer_rules.cpp:30-31``)
 
 This is the only plan, as in the reference. A small right side is
 broadcast by Spark's own ``autoBroadcastJoinThreshold``; a dense cell on a
@@ -41,30 +43,17 @@ All 10 reference predicates are supported; ``ST_Disjoint`` is NOT eligible
 
 from __future__ import annotations
 
-import functools
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..geo import algorithms as A
 from ..functions import udfs
 from ..plans.pruning import _finite, _ident
 
-_PREDICATES = {
-    "intersects": A.intersects,
-    "contains": A.contains,
-    "contains_properly": A.contains_properly,
-    "within": A.within,
-    "covers": lambda a, b: A.covers(a, b),
-    "covered_by": A.covered_by,
-    "touches": A.touches,
-    "crosses": A.crosses,
-    "overlaps": A.overlaps,
-    "equals": A.equals,
-    "dwithin": None,  # handled specially (distance arg)
-}
+_PREDICATES = (
+    "intersects", "contains", "contains_properly", "within", "covers", "covered_by",
+    "touches", "crosses", "overlaps", "equals", "dwithin",
+)
 
 _CELL_SHIFT = 1 << 22  # pack (cx, cy) into one bigint cell id
 _SJ_ID = "__sj_left_id"  # surrogate key for left/semi/anti reconciliation
@@ -243,7 +232,7 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
     pairs = lc.join(rc, F.expr(" AND ".join(terms)), "inner")
     if exact:
         return pairs  # pure SQL expressions — the whole join is JVM-side
-    recheck = _make_recheck_udf(predicate, distance)
+    udf, args = _recheck(predicate), ((F.lit(pad),) if predicate == "dwithin" else ())
     lg, rg = _sql(left_geom), _sql(right_geom)
     sure = None
     if "r_is_box" in rb.columns and predicate in ("within", "intersects", "covered_by"):
@@ -259,70 +248,17 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
         # contains (open box) / covers (closed box)
         sure = f"coalesce(l_is_box AND {inside(R, L, strict=predicate == 'contains')}, false)"
     if sure is None:
-        return pairs.filter(recheck(F.expr(lg), F.expr(rg)))
-    masked = recheck(F.expr(f"CASE WHEN NOT {sure} THEN {lg} END"),
-                     F.expr(f"CASE WHEN NOT {sure} THEN {rg} END"))
+        return pairs.filter(udf(F.expr(lg), F.expr(rg), *args))
+    masked = udf(F.expr(f"CASE WHEN NOT {sure} THEN {lg} END"),
+                 F.expr(f"CASE WHEN NOT {sure} THEN {rg} END"), *args)
     return pairs.filter(F.expr(sure) | F.coalesce(masked, F.lit(False)))
 
 
-@functools.lru_cache(maxsize=64)
-def _make_recheck_udf(predicate: str, distance):
-    """The exact-recheck pandas UDF for one ``(predicate, distance)``,
-    built once per process like the ``udfs.*`` UDFs, so an ``st_join``
-    does not create, pickle and register a new one (about 33 py4j round
-    trips)."""
-    from pyspark.sql import types as T
-
-    pred_fn = _PREDICATES[predicate]
-
-    @F.pandas_udf(T.BooleanType())
-    def recheck(a: pd.Series, b: pd.Series) -> pd.Series:
-        # vectorized lane: left side all 2D-point WKBs (the dominant join
-        # shape) -> group rows by the right geometry and run one numpy
-        # point-in-polygon per distinct geometry instead of per pair
-        if predicate in ("within", "intersects", "covered_by"):
-            from ..functions import fastpath
-
-            pa = fastpath.points_xy(a)
-            if pa is not None:
-                xs, ys, mask = pa
-                out = np.zeros(len(a), dtype=bool)
-                groups: dict = {}
-                bvals = b.to_numpy(dtype=object)
-                for i, bv in enumerate(bvals):
-                    if bv is None or not mask[i]:
-                        continue
-                    groups.setdefault(bytes(bv), []).append(i)
-                vectorized = True
-                results = {}
-                for bb, idxs in groups.items():
-                    g = udfs._g(bb)
-                    ii = np.asarray(idxs)
-                    st_arr = fastpath._poly_state_or_none((xs[ii], ys[ii], None), g)
-                    if st_arr is None:
-                        vectorized = False
-                        break
-                    if predicate == "within":
-                        results[bb] = (ii, st_arr == 2)
-                    else:
-                        results[bb] = (ii, st_arr >= 1)
-                if vectorized:
-                    for ii, vals in results.values():
-                        out[ii] = vals
-                    return pd.Series(out)
-        out = []
-        for x, y in zip(a, b):
-            if x is None or y is None:
-                out.append(False)
-                continue
-            ga, gb = udfs._g(x), udfs._g(y)
-            if predicate == "dwithin":
-                out.append(A.dwithin(ga, gb, distance))
-            else:
-                out.append(pred_fn(ga, gb))
-        return pd.Series(out)
-
-    return recheck
+def _recheck(predicate: str):
+    """The exact recheck of ``predicate``: its module-level ``ST_*`` UDF,
+    the one SQL and filters call (``dwithin`` takes the distance as a
+    third argument). Its NULL result on a NULL input filters as no match."""
+    return getattr(udfs, "st_" + predicate.replace("_", ""))
 
 
 def st_join(

@@ -32,6 +32,8 @@ from pyspark.sql import types as T
 from ..functions import udfs
 
 BBOX_COLS = ("bbox_min_x", "bbox_min_y", "bbox_max_x", "bbox_max_y")
+# filter_bbox(exact=...) name -> the UDF that rechecks it
+_EXACT = {"intersects": udfs.st_intersects, "within": udfs.st_within, "contains": udfs.st_contains}
 
 
 @F.arrow_udf(T.BinaryType())
@@ -562,6 +564,8 @@ def filter_bbox(
     break (2), which is why this is a declaration like ``points=True``,
     not an inference.) ``intersects`` keeps its boundary-band recheck —
     partial overlap is not decidable from the bbox."""
+    if exact and exact not in _EXACT:
+        raise ValueError(f"unsupported exact={exact!r}; supported: {', '.join(_EXACT)} or None")
     if all(c in df.columns for c in BBOX_COLS):
         pre = (
             (F.col(BBOX_COLS[0]) <= max_x)
@@ -599,9 +603,7 @@ def filter_bbox(
         env = F.lit(
             WKB.to_wkb(G.polygon([[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]]))
         )
-        pred = {"intersects": udfs.st_intersects, "within": udfs.st_within, "contains": udfs.st_contains}[
-            exact
-        ]
+        pred = _EXACT[exact]
         if exact in ("within", "intersects") and all(c in df.columns for c in BBOX_COLS):
             # Sure-true short-circuit on the TIGHT sidecar bbox (the
             # reference's cached-bbox prefilter, geometry_type.hpp:100-146,

@@ -117,6 +117,18 @@ def test_filter_bbox_points_fast_path_matches_udf(spark, tmp_path):
     assert filter_bbox(clustered, 2, 2, 8, 8, exact="intersects", points=True).count() == 49
 
 
+def test_filter_bbox_rejects_unknown_exact():
+    """An unsupported ``exact=`` name is a ValueError that names the
+    supported values, raised before the frame is touched (no plan built)."""
+
+    class Untouched:
+        def __getattr__(self, name):
+            raise AssertionError(f"filter_bbox read df.{name} before validating exact=")
+
+    with pytest.raises(ValueError, match="intersects, within, contains"):
+        filter_bbox(Untouched(), 0, 0, 1, 1, exact="touches")
+
+
 def test_filter_bbox_sure_true_short_circuit_matches_udf(spark, tmp_path):
     """Non-point geometries: the sidecar-bbox sure-true/sure-false split
     must agree with the pure-UDF path, including the boundary band — a

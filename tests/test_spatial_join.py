@@ -503,7 +503,7 @@ def test_grid_box_shortcircuit_plan_shape(spark):
     )
     j = st_join(pts, rects, predicate="within", strategy="grid", cell_size=4.0)
     plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "recheck(CASE WHEN NOT coalesce((r_is_box" in plan
+    assert "st_within(CASE WHEN NOT coalesce((r_is_box" in plan
     assert "OR coalesce(pythonUDF" in plan  # sure-true disjunct bypasses the UDF verdict
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
@@ -637,10 +637,12 @@ def test_st_join_restores_caller_job_description(spark):
 
 
 def test_recheck_udf_built_once_per_key():
-    """The exact-recheck UDF is built once per (predicate, distance) and
-    reused by every later st_join with that key."""
-    from duckdb_spatial_spark.operators.join import _make_recheck_udf
+    """The exact recheck of every accepted predicate is the SQL registry's
+    module-level ST_* UDF: no st_join builds a new UDF, and the join, SQL
+    and filters share one kernel."""
+    from duckdb_spatial_spark import functions
+    from duckdb_spatial_spark.operators.join import _PREDICATES, _recheck
 
-    assert _make_recheck_udf("within", None) is _make_recheck_udf("within", None)
-    assert _make_recheck_udf("dwithin", 2.5) is _make_recheck_udf("dwithin", 2.5)
-    assert _make_recheck_udf("dwithin", 2.5) is not _make_recheck_udf("dwithin", 3.0)
+    assert len(_PREDICATES) == 11
+    for name in _PREDICATES:
+        assert _recheck(name) is functions._REGISTRY["st_" + name.replace("_", "")], name
