@@ -2539,18 +2539,16 @@ def q_layout_pruned_polys(spark, sf_dir):
     """Polygon windowed query through the layout (the reference's headline
     rtree_index.benchmark shape: windowed ST_Within over POLYGONS): cluster
     the rect polygons into a bbox-sidecar layout, then answer the same
-    windows as the point row via filter_bbox's sure-true short-circuit —
-    bbox strictly inside the open envelope decides within TRUE, bbox inside
-    the closed envelope decides intersects TRUE, and ONLY boundary-band
-    rows (bbox touching the envelope edge) decode WKB in the exact UDF
-    (reference geometry_type.hpp:100-146 cached-bbox prefilter, completed
-    into a decision). r12: every box binds through scan_geo_parquet
-    (manifest FILE pruning from _geo_layout.json per-file bounds +
-    schema-from-manifest bind — the R-tree root-descent analog), and box
-    3 runs the solid=True within fast path (closed bbox containment IS
-    ST_Within for positive-area geometries; box 1 keeps the general UDF
-    plan so both branches stay driver-gated). Oracle = closed/strict
-    interval arithmetic over the same rects."""
+    windows as the point row via filter_bbox's cached-bbox rule — the
+    prefilter keeps bboxes overlapping the window (and, for within, inside
+    the closed window), a bbox strictly inside the open window decides
+    within TRUE, one inside the closed window decides intersects TRUE, and
+    ONLY boundary-band rows (bbox touching the window edge) decode WKB in
+    the exact UDF (reference geometry_type.hpp:100-146 cached-bbox
+    prefilter, completed into a decision). Every box binds through
+    scan_geo_parquet (manifest FILE pruning from _geo_layout.json per-file
+    bounds + schema-from-manifest bind — the R-tree root-descent analog).
+    Oracle = closed/strict interval arithmetic over the same rects."""
     _prep(spark, sf_dir)
     from duckdb_spatial_spark.plans.pruning import (
         filter_bbox,
@@ -2566,10 +2564,7 @@ def q_layout_pruned_polys(spark, sf_dir):
     outs = []
     for bid, x0, y0, x1, y1, sem in _LAYOUT_BOXES:
         base = scan_geo_parquet(spark, path, bbox=(x0, y0, x1, y1))
-        w = filter_bbox(
-            base, x0, y0, x1, y1, exact=sem,
-            solid=(sem == "within" and bid == 3),
-        )
+        w = filter_bbox(base, x0, y0, x1, y1, exact=sem)
         outs.append(
             w.groupBy().agg(
                 F.count("*").alias("_n"),
@@ -2734,8 +2729,11 @@ def q_zonal_stats(spark, sf_dir):
     """Zonal statistics (operators/join.zonal_stats): point 'cells' with a
     value column aggregated per containing zone polygon — through st_join's
     grid plan with a fixed cell size, so the driver pins the
-    solid-rectangle short-circuit path end-to-end (rects are boxes: the
-    recheck UDF sees only boundary rows with NULL-masked inputs).
+    solid-rectangle short-circuit path end-to-end: the rects are boxes,
+    detected in the zones' bbox pass, so the cached-bbox rule filter_bbox
+    applies to its window decides the pairs with a point strictly inside a
+    zone, and the recheck UDF sees only boundary pairs, with NULL-masked
+    inputs.
     avg intentionally derived from the integer sum / count on both sides."""
     _prep(spark, sf_dir)
     from duckdb_spatial_spark.operators.join import zonal_stats

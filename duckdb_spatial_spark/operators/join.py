@@ -43,12 +43,14 @@ All 10 reference predicates are supported; ``ST_Disjoint`` is NOT eligible
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import udfs
-from ..plans.pruning import _finite, _ident
+from ..plans.pruning import _BOX_SURE, _dbl, _finite, _ident, _inside, _masked_recheck, _sure
 
 _PREDICATES = (
     "intersects", "contains", "contains_properly", "within", "covers", "covered_by",
@@ -58,6 +60,8 @@ _PREDICATES = (
 _CELL_SHIFT = 1 << 22  # pack (cx, cy) into one bigint cell id
 _SJ_ID = "__sj_left_id"  # surrogate key for left/semi/anti reconciliation
 _BOX = ("mnx", "mny", "mxx", "mxy")  # a side's flat bbox columns: {side}_mnx ...
+# ST_<pred>(box, g) for a solid-rectangle LEFT is ST_<converse>(g, box)
+_CONVERSE = {"contains": "within", "covers": "covered_by"}
 
 
 def _with_bbox(df: DataFrame, geom_col: str, p: str, with_isbox: bool = False) -> DataFrame:
@@ -100,12 +104,6 @@ def _with_bbox(df: DataFrame, geom_col: str, p: str, with_isbox: bool = False) -
     return df.mapInPandas(gen, schema=schema)
 
 
-def _sql(v) -> str:
-    """SQL text for a column name, read as ``F.col`` reads it (dots nest,
-    backticks quote), or for a float as an exact double literal."""
-    return _ident(v) if isinstance(v, str) else f"{float(v)!r}D"
-
-
 def _sidecar(df: DataFrame, cols, p: str, extra=()) -> DataFrame:
     """The bbox from plain columns — ``cols`` is ``(x, y)`` for a point
     side, else ``(mnx, mny, mxx, mxy)`` — in one select and one filter.
@@ -114,7 +112,7 @@ def _sidecar(df: DataFrame, cols, p: str, extra=()) -> DataFrame:
     arithmetic (``abs(NaN) < inf`` is false in Spark)."""
     names = [f"{p}_{f}" for f in _BOX[: len(cols)]]
     return df.selectExpr(
-        "*", *(f"{_sql(c)} AS {n}" for c, n in zip(cols, names)), *extra
+        "*", *(f"{_ident(c)} AS {n}" for c, n in zip(cols, names)), *extra
     ).filter(_finite(*names))
 
 
@@ -172,6 +170,10 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
     native-exact terms. The exact recheck follows as one filter. The
     dwithin pad goes on the right side, so a point left keeps its one cell.
 
+    A solid-rectangle side (``r_is_box`` / ``l_is_box``) is decided by
+    ``filter_bbox``'s cached-bbox rule: ``_inside``, ``_sure`` and
+    ``_masked_recheck`` in ``plans.pruning``.
+
     Expressions are SQL text, parsed once on the JVM: each PySpark Column
     operator costs several py4j round trips (about 1,700 per join when
     this plan was built from Columns)."""
@@ -179,10 +181,10 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
     params = _grid_params([(rb, "r")] if point else [(lb, "l"), (rb, "r")], cell_size, pad)
     if params is None:  # a sampled side has no finite bbox
         return lb.limit(0).crossJoin(rb.limit(0))
-    ox, oy, cs = (_sql(v) for v in params)
+    ox, oy, cs = (_dbl(v) for v in params)
     L = ("l_mnx", "l_mny") * 2 if point else tuple(f"l_{f}" for f in _BOX)
     R = tuple(f"r_{f}" for f in _BOX)
-    Rp = tuple(f"({c} {s} {_sql(pad)})" for c, s in zip(R, "--++")) if pad else R
+    Rp = tuple(f"({c} {s} {_dbl(pad)})" for c, s in zip(R, "--++")) if pad else R
 
     def cx(e):
         return f"floor(({e} - {ox}) / {cs})"
@@ -200,10 +202,6 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
         cells = df.selectExpr("*", f"explode_outer(sequence(0, {n} - 1)) AS {k}")
         return cells, f"({cx(b[0])} + {k} div {ny}) * {_CELL_SHIFT} + {cy(b[1])} + {k} % {ny}"
 
-    def inside(a, b, strict):  # bbox a inside bbox b
-        lo, hi = (">", "<") if strict else (">=", "<=")
-        return f"({a[0]} {lo} {b[0]} AND {a[2]} {hi} {b[2]} AND {a[1]} {lo} {b[1]} AND {a[3]} {hi} {b[3]})"
-
     rc, rcell = grid(rb, "r", Rp)
     lc, lcell = (lb, f"{cx(L[0])} * {_CELL_SHIFT} + {cy(L[1])}") if point else grid(lb, "l", L)
     terms = [f"{lcell} = {rcell}", f"{L[0]} <= {Rp[2]}", f"{L[2]} >= {Rp[0]}",
@@ -215,43 +213,35 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
         ref_x, ref_y = f"greatest({L[0]}, {Rp[0]})", f"greatest({L[1]}, {Rp[1]})"
         terms.append(f"{lcell} = {cx(ref_x)} * {_CELL_SHIFT} + {cy(ref_y)}")
     # point x box: the bbox comparison IS the exact predicate -> no UDF
-    exact = native and predicate in ("within", "intersects", "covered_by", "dwithin")
+    exact = native and predicate in (*_BOX_SURE, "dwithin")
     if exact:  # intersects / covered_by: the overlap terms are already exact
         if predicate == "within":
-            terms.append(inside(L, R, strict=True))
+            terms.append(_sure("within", L, R))
         elif predicate == "dwithin":
             dx = f"greatest({R[0]} - {L[0]}, {L[0]} - {R[2]}, 0D)"
             dy = f"greatest({R[1]} - {L[1]}, {L[1]} - {R[3]}, 0D)"
-            terms.append(f"sqrt({dx} * {dx} + {dy} * {dy}) <= {_sql(pad)}")
+            terms.append(f"sqrt({dx} * {dx} + {dy} * {dy}) <= {_dbl(pad)}")
     elif predicate in ("within", "covered_by"):
         # JVM-side sure-false: containment predicates REQUIRE bbox
         # containment whatever the geometries are
-        terms.append(inside(L, R, strict=False))
+        terms.append(_inside(L, R, strict=False))
     elif predicate in ("contains", "contains_properly", "covers"):
-        terms.append(inside(R, L, strict=False))
+        terms.append(_inside(R, L, strict=False))
     pairs = lc.join(rc, F.expr(" AND ".join(terms)), "inner")
     if exact:
         return pairs  # pure SQL expressions — the whole join is JVM-side
     udf, args = _recheck(predicate), ((F.lit(pad),) if predicate == "dwithin" else ())
-    lg, rg = _sql(left_geom), _sql(right_geom)
+    lg, rg = _ident(left_geom), _ident(right_geom)
+    # a box right decides within / intersects / covered_by from bbox(l), a
+    # box left contains / covers from bbox(r); only the rest reach Python
     sure = None
-    if "r_is_box" in rb.columns and predicate in ("within", "intersects", "covered_by"):
-        # sure-true against a solid-rectangle right: geom ⊆ bbox(geom),
-        # so bbox(l) inside the box decides. within needs the OPEN box
-        # (l entirely on the boundary is not within); intersects /
-        # covered_by are decided by the closed box. Only boundary-band
-        # and non-box pairs cross into Python — their inputs are masked
-        # to NULL for sure rows, so no WKB even transfers.
-        sure = f"coalesce(r_is_box AND {inside(L, R, strict=predicate == 'within')}, false)"
-    elif "l_is_box" in lb.columns and predicate in ("contains", "covers"):
-        # symmetric: a solid-rectangle LEFT containing bbox(r) decides
-        # contains (open box) / covers (closed box)
-        sure = f"coalesce(l_is_box AND {inside(R, L, strict=predicate == 'contains')}, false)"
+    if "r_is_box" in rb.columns and (s := _sure(predicate, L, R)):
+        sure = f"coalesce(r_is_box AND {s}, false)"
+    elif "l_is_box" in lb.columns and (s := _sure(_CONVERSE.get(predicate), R, L)):
+        sure = f"coalesce(l_is_box AND {s}, false)"
     if sure is None:
         return pairs.filter(udf(F.expr(lg), F.expr(rg), *args))
-    masked = udf(F.expr(f"CASE WHEN NOT {sure} THEN {lg} END"),
-                 F.expr(f"CASE WHEN NOT {sure} THEN {rg} END"), *args)
-    return pairs.filter(F.expr(sure) | F.coalesce(masked, F.lit(False)))
+    return pairs.filter(_masked_recheck(sure, udf, (lg, rg), *args))
 
 
 def _recheck(predicate: str):
@@ -287,13 +277,21 @@ def st_join(
     written by ``write_geo_parquet`` already persists
     ``bbox_min_x..bbox_max_y`` sidecars — pass those as ``left_bbox`` /
     ``right_bbox`` and the grid phase never decodes WKB (the reference's
-    cached-RTree-bbox analog). With ``right_is_box=True`` and a point left
-    side, within/intersects/covered_by/dwithin joins skip the
-    exact-recheck UDF entirely — the whole join is JVM-side (bbox test IS
-    the exact test for point×box).
+    cached-RTree-bbox analog).
+
+    ``right_is_box=True`` declares every ``right_bbox`` row a solid
+    rectangle: the one way to join x/y points to bbox-only rectangles with
+    no geometry column. With ``left_point=``, within / intersects /
+    covered_by / dwithin then run no recheck UDF (the bbox test IS the
+    exact test for point×box) and never read ``right_geom``. A WKB side's
+    rectangles are detected in its bbox pass (``fastpath.box_flags``).
 
     Building the plan runs at most one Spark job per non-point side (the
     grid sizing sample, see ``_grid_params``); with ``cell_size=`` none.
+
+    ``cell_size`` must be finite and > 0 and ``distance`` finite, else
+    ``ValueError`` before any plan is built; a negative distance matches
+    nothing, as in ST_DWithin.
 
     ``strategy`` accepts only ``"grid"``, the one plan."""
     if predicate == "disjoint":
@@ -302,6 +300,10 @@ def st_join(
         raise ValueError(f"unsupported predicate {predicate!r}; supported: {sorted(_PREDICATES)}")
     if predicate == "dwithin" and distance is None:
         raise ValueError("dwithin requires distance=")
+    if cell_size is not None and not 0 < float(cell_size) < math.inf:
+        raise ValueError(f"cell_size must be finite and > 0, got {cell_size!r}")
+    if distance is not None and not math.isfinite(float(distance)):
+        raise ValueError(f"distance must be finite, got {distance!r}")
     if strategy != "grid":
         raise ValueError(
             f"unsupported strategy {strategy!r}: st_join has one plan, 'grid' "
@@ -333,7 +335,7 @@ def st_join(
     else:
         # symmetric box detection for contains/covers: a solid-rectangle
         # LEFT decides those predicates from bboxes alone in _grid_join
-        lb = _with_bbox(left, left_geom, "l", with_isbox=predicate in ("contains", "covers"))
+        lb = _with_bbox(left, left_geom, "l", with_isbox=predicate in _CONVERSE)
     if right_bbox is not None:
         # right_is_box: the caller vouches every right row is the solid
         # rectangle of its bbox — the grid recheck can then decide rows
@@ -345,7 +347,7 @@ def st_join(
         # sure-true pairs never cross into the recheck UDF (_grid_join)
         rb = _with_bbox(
             right, right_geom, "r",
-            with_isbox=predicate in ("within", "intersects", "covered_by"),
+            with_isbox=predicate in _BOX_SURE,
         )
 
     joined = _grid_join(

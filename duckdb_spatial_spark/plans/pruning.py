@@ -23,6 +23,8 @@ row groups whose Hilbert range overlaps the query window.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -145,6 +147,48 @@ def _finite(*exprs: str) -> str:
     is false for NULL, NaN and ±inf alike. One predicate parsed on the JVM;
     built from Column operators it cost several py4j round trips each."""
     return " AND ".join(f"abs({e}) < double('inf')" for e in exprs)
+
+
+def _dbl(v: float) -> str:
+    """SQL text for a finite float as an exact double literal. A non-finite
+    value has no literal (``infD`` would parse as a column name)."""
+    v = float(v)
+    if not math.isfinite(v):
+        raise ValueError(f"{v!r} is not a finite double")
+    return f"{v!r}D"
+
+
+# predicate -> whether _sure's bbox-in-box containment is strict (open box)
+_BOX_SURE = {"within": True, "intersects": False, "covered_by": False}
+
+
+def _inside(a, b, strict: bool) -> str:
+    """SQL text, true where box ``a`` lies inside box ``b`` — each a
+    ``(min_x, min_y, max_x, max_y)`` tuple of SQL expressions — open
+    (``strict``) or closed."""
+    lo, hi = (">", "<") if strict else (">=", "<=")
+    return f"({a[0]} {lo} {b[0]} AND {a[2]} {hi} {b[2]} AND {a[1]} {lo} {b[1]} AND {a[3]} {hi} {b[3]})"
+
+
+def _sure(predicate: str | None, bbox, box) -> str | None:
+    """SQL text, true where ``ST_<predicate>(g, box)`` against a SOLID
+    axis-aligned ``box`` is decided TRUE by the tight ``bbox`` of g alone
+    (the reference's cached bbox, geometry_type.hpp:100-146): bbox inside
+    the OPEN box decides within (g may not lie on the boundary alone),
+    inside the CLOSED box intersects / covered_by. None when the bbox
+    cannot decide the predicate."""
+    strict = _BOX_SURE.get(predicate)
+    return None if strict is None else _inside(bbox, box, strict)
+
+
+def _masked_recheck(sure: str, udf, masked, *rest):
+    """``sure OR coalesce(udf(CASE WHEN NOT sure THEN m END ..., *rest),
+    false)``: sure rows pass outright and only the rest reach the exact
+    UDF. Catalyst evaluates an extracted Python UDF on every row, so the
+    lever is the NULL mask on the ``masked`` SQL arguments — decided rows
+    ship a null bitmap, not WKB, and the kernel skips them."""
+    args = (F.expr(f"CASE WHEN NOT {sure} THEN {m} END") for m in masked)
+    return F.expr(sure) | F.coalesce(udf(*args, *rest), F.lit(False))
 
 
 def _finite_bounds(df: DataFrame, min_x: str, min_y: str, max_x: str, max_y: str) -> tuple:
@@ -533,118 +577,66 @@ def filter_bbox(
     geom_col: str = "geom",
     exact: str | None = "intersects",
     points: bool = False,
-    solid: bool = False,
 ) -> DataFrame:
-    """Windowed query with data skipping.
+    """Windowed query with data skipping: the rows whose geometry satisfies
+    ``ST_<exact>(geom, window)`` (``exact=None``: the bbox prefilter only).
 
-    Emits bbox conjuncts on the plain numeric bbox columns (pushed to the
-    parquet scan -> row-group skipping), then optionally re-checks the exact
-    predicate against the query envelope — the same filter pull-up split as
-    the reference (``rtree_index_plan_scan.cpp:207-231``).
+    The window is normalized per axis (an inverted bound pair is swapped,
+    as the envelope's bbox is) and its four bounds must be finite: a NaN or
+    ±inf bound raises ``ValueError`` before any plan is built.
+
+    On a frame with the layout's bbox sidecars (``BBOX_COLS``) the window
+    is a solid axis-aligned box declared for every row, and the cached-bbox
+    rule (``_sure``) splits the exact filter as the reference's R-tree scan
+    does (``rtree_index_plan_scan.cpp:207-231``):
+
+    * prefilter: bbox overlap, plus closed containment for ``within``,
+      pushed to the parquet scan (row-group skipping);
+    * sure-true: a tight bbox inside the open window decides ``within``,
+      inside the closed window ``intersects``; those rows pass with no WKB
+      decode;
+    * the rest — the boundary band, and every row for ``contains`` — is
+      decided by the exact UDF, whose geometry input is NULL-masked on
+      sure rows (``_masked_recheck``).
 
     ``points=True`` declares every geometry a POINT (e.g. a layout written
     with ``write_geo_parquet(point_xy=...)``): a point's bbox IS the point,
-    so within/intersects against the envelope are decided by plain Column
-    compares on the bbox columns — no geometry decode, no Python. This is
-    the native POINT fast path of the reference's ``st_contains.cpp``
-    (POLYGON_2D x POINT_2D) re-expressed on the layout's sidecar columns;
-    within excludes the envelope boundary, matching ST_Within.
+    so the sure-true term is the whole answer to within / intersects and no
+    UDF runs (the reference's native POINT lane of ``st_contains.cpp``);
+    within excludes the window boundary, matching ST_Within.
 
-    ``solid=True`` declares every geometry 2-DIMENSIONAL with nonempty
-    interior (valid polygons/multipolygons of positive area — building
-    footprints, parcels, admin boundaries). For such geometries,
-    ``within`` against the AXIS-ALIGNED query envelope is decided
-    exactly by the closed bbox containment alone, no WKB decode:
-    (1) the sidecar bbox is tight, so geom ⊆ envelope ⟺ bbox ⊆
-    envelope for an axis-aligned convex window; (2) DE-9IM Within
-    additionally needs interior(geom) ∩ interior(env) ≠ ∅, and any
-    interior point of geom carries an open disc inside the closed
-    envelope, so it cannot lie on the envelope boundary — the interior
-    condition is implied. (A boundary-hugging POINT or LINESTRING would
-    break (2), which is why this is a declaration like ``points=True``,
-    not an inference.) ``intersects`` keeps its boundary-band recheck —
-    partial overlap is not decidable from the bbox."""
+    Without sidecars the exact UDF decides every row. All text is SQL,
+    parsed once on the JVM."""
     if exact and exact not in _EXACT:
         raise ValueError(f"unsupported exact={exact!r}; supported: {', '.join(_EXACT)} or None")
-    if all(c in df.columns for c in BBOX_COLS):
-        pre = (
-            (F.col(BBOX_COLS[0]) <= max_x)
-            & (F.col(BBOX_COLS[2]) >= min_x)
-            & (F.col(BBOX_COLS[1]) <= max_y)
-            & (F.col(BBOX_COLS[3]) >= min_y)
-        )
-        df = df.filter(pre)
-    if exact and points and exact in ("within", "intersects") and all(
-        c in df.columns for c in BBOX_COLS
-    ):
-        if exact == "within":
-            return df.filter(
-                (F.col(BBOX_COLS[0]) > min_x) & (F.col(BBOX_COLS[0]) < max_x)
-                & (F.col(BBOX_COLS[1]) > min_y) & (F.col(BBOX_COLS[1]) < max_y)
-            )
-        return df  # intersects: the inclusive prefilter above IS exact for points
-    if exact == "within" and solid and all(c in df.columns for c in BBOX_COLS):
-        # solid-2D declaration: closed bbox containment IS ST_Within
-        # against the axis-aligned envelope (see docstring) — the whole
-        # query stays JVM-side, one scan, zero Python
-        return df.filter(
-            (F.col(BBOX_COLS[0]) >= min_x) & (F.col(BBOX_COLS[1]) >= min_y)
-            & (F.col(BBOX_COLS[2]) <= max_x) & (F.col(BBOX_COLS[3]) <= max_y)
-        )
-    if exact:
-        # envelope WKB built ONCE driver-side and shipped as a binary
-        # literal: chaining st_makeenvelope(lit,...) as a pandas UDF makes
-        # the Python worker rebuild the envelope per ROW (measured 4x on a
-        # 10M-point scan — the constant column defeats the point fast path)
-        from ..geo import geom as G
-        from ..geo import wkb as WKB
+    for name, v in zip(("min_x", "min_y", "max_x", "max_y"), (min_x, min_y, max_x, max_y)):
+        if not math.isfinite(float(v)):
+            raise ValueError(f"filter_bbox: window bound {name}={v!r} is not finite")
+    (x0, x1), (y0, y1) = sorted((float(min_x), float(max_x))), sorted((float(min_y), float(max_y)))
+    win = tuple(_dbl(v) for v in (x0, y0, x1, y1))
+    sidecars = all(c in df.columns for c in BBOX_COLS)
+    sure = _sure(exact, BBOX_COLS, win) if sidecars else None
+    if sidecars:
+        b = BBOX_COLS
+        terms = [f"{b[0]} <= {win[2]} AND {b[2]} >= {win[0]} AND {b[1]} <= {win[3]} AND {b[3]} >= {win[1]}"]
+        if points and sure:
+            terms.append(sure)
+        elif exact == "within":  # ST_Within requires bbox containment
+            terms.append(_inside(b, win, strict=False))
+        df = df.filter(" AND ".join(terms))
+    if not exact or (points and sure):
+        return df
+    # the envelope WKB is built ONCE driver-side and shipped as a binary
+    # literal: st_makeenvelope over literal columns would rebuild it per
+    # row in the Python worker
+    from ..geo import geom as G
+    from ..geo import wkb as WKB
 
-        x0, y0, x1, y1 = float(min_x), float(min_y), float(max_x), float(max_y)
-        env = F.lit(
-            WKB.to_wkb(G.polygon([[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]]))
-        )
-        pred = _EXACT[exact]
-        if exact in ("within", "intersects") and all(c in df.columns for c in BBOX_COLS):
-            # Sure-true short-circuit on the TIGHT sidecar bbox (the
-            # reference's cached-bbox prefilter, geometry_type.hpp:100-146,
-            # completed into a decision): geom ⊆ bbox always, and the bbox
-            # is the exact extent written at cluster time, so
-            #   * bbox strictly inside the OPEN envelope  ⇒ within  TRUE
-            #     (geom can't touch the envelope boundary at all)
-            #   * bbox inside the CLOSED envelope         ⇒ intersects TRUE
-            #     (every geom point is in bbox ⊆ envelope)
-            #   * within + bbox poking OUTSIDE the closed envelope ⇒ FALSE
-            #     (tight bbox ⇒ some geom vertex is outside)
-            # Only the boundary band (bbox touching/straddling the envelope
-            # edge) decodes WKB in the exact UDF — interior rows stay
-            # all-JVM. The plan is a union of a pure-Column branch and a
-            # UDF branch, both reading the same pruned scan.
-            bx0, by0, bx1, by1 = (F.col(c) for c in BBOX_COLS)
-            inside_closed = (
-                (bx0 >= min_x) & (by0 >= min_y) & (bx1 <= max_x) & (by1 <= max_y)
-            )
-            if exact == "within":
-                sure_true = (
-                    (bx0 > min_x) & (by0 > min_y) & (bx1 < max_x) & (by1 < max_y)
-                )
-                band = inside_closed & ~sure_true
-            else:
-                sure_true = inside_closed
-                band = ~inside_closed
-            # ONE scan (r13; the union-of-branches this replaces read the
-            # pruned files twice — two jobs for a count): the UDF input is
-            # null-masked to the boundary band, so ExtractPythonUDFs may
-            # schedule it over every pruned row but the kernel's null fast
-            # path touches only band rows, and Arrow ships a null bitmap
-            # for the rest. Semantics unchanged: sure_true rows pass
-            # outright, band rows are decided by the exact WKB predicate,
-            # outside-band rows fail both disjuncts.
-            band_pred = F.coalesce(
-                pred(F.when(band, F.col(geom_col)), env), F.lit(False)
-            )
-            return df.filter(sure_true | band_pred)
-        df = df.filter(pred(F.col(geom_col), env))
-    return df
+    ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+    env = F.expr(f"X'{WKB.to_wkb(G.polygon([ring])).hex()}'")
+    if sure is None:
+        return df.filter(_EXACT[exact](F.expr(_ident(geom_col)), env))
+    return df.filter(_masked_recheck(sure, _EXACT[exact], (_ident(geom_col),), env))
 
 
 # ---------------------------------------------------------------------------

@@ -160,6 +160,6 @@ def test_write_geo_parquet_box_lane_pruned_scan(spark, tmp_path):
     ).count()
     pruned = filter_bbox(
         scan_geo_parquet(spark, path, bbox=(100, 100, 700, 700)),
-        100, 100, 700, 700, exact="within", solid=True,
+        100, 100, 700, 700, exact="within",
     ).count()
     assert pruned == expected

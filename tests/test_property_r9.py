@@ -73,9 +73,15 @@ def test_gtx_affine_field_exact_and_invertible(a, b, c, data):
 @pytest.mark.parametrize("seed", [1, 7, 23])
 def test_filter_bbox_union_matches_udf_randomized(spark, tmp_path, seed):
     """Random rects/lines/points (integer coords so boundary contact is
-    common) through a clustered layout: the sure-true union path must
-    agree with the pure-UDF exact path for within AND intersects on
-    random integer windows."""
+    common) through a clustered layout: the cached-bbox decision must
+    agree with the pure-UDF exact path for within, intersects AND
+    contains on random integer windows, their inverted twins (bounds
+    given max-first) and zero-area windows (a segment and a point)."""
+    import functools
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
     from duckdb_spatial_spark.plans import filter_bbox, write_geo_parquet
 
     rng = np.random.default_rng(seed)
@@ -98,10 +104,33 @@ def test_filter_bbox_union_matches_udf_randomized(spark, tmp_path, seed):
     path = str(tmp_path / f"mix{seed}")
     write_geo_parquet(df, path, num_partitions=2)
     clustered = spark.read.parquet(path)
+    cases = []
     for trial in range(3):
         wx0 = int(rng.integers(0, 30)); wy0 = int(rng.integers(0, 30))
         wx1 = wx0 + int(rng.integers(2, 15)); wy1 = wy0 + int(rng.integers(2, 15))
-        for exact in ("within", "intersects"):
-            fast = {r.id for r in filter_bbox(clustered, wx0, wy0, wx1, wy1, exact=exact).collect()}
-            slow = {r.id for r in filter_bbox(df, wx0, wy0, wx1, wy1, exact=exact).collect()}
-            assert fast == slow, (seed, trial, exact, (wx0, wy0, wx1, wy1))
+        # each trial's window, then one twin in turn: inverted (bounds
+        # given max-first), a zero-width segment, a zero-area point
+        twin = [(wx1, wy1, wx0, wy0), (wx0, wy0, wx0, wy1), (wx1, wy0, wx1, wy0)][trial]
+        for win in ((wx0, wy0, wx1, wy1), twin):
+            for exact in ("within", "intersects", "contains"):
+                cases.append((win, exact))
+
+    def answers(frame):
+        # every case in one job over one partition: a union of tagged
+        # windowed filters
+        frame = frame.coalesce(1)
+        parts = [
+            filter_bbox(frame, *win, exact=exact).select(F.lit(k).alias("k"), "id")
+            for k, (win, exact) in enumerate(cases)
+        ]
+        out = {k: set() for k in range(len(cases))}
+        for r in functools.reduce(DataFrame.unionAll, parts).collect():
+            out[r.k].add(r.id)
+        return out
+
+    fast, slow = answers(clustered), answers(df)
+    for k, case in enumerate(cases):
+        assert fast[k] == slow[k], (seed, case, fast[k] ^ slow[k])
+    # the sweep is not vacuous: within and intersects select rows
+    assert all(any(slow[k] for k, (_, e) in enumerate(cases) if e == exact)
+               for exact in ("within", "intersects"))

@@ -1,6 +1,7 @@
 """Snapshot (manifest) commit protocol over the clustered geo-parquet
 layout: atomic visibility, reader isolation across compact, vacuum."""
 
+import math
 import os
 import shutil
 import tempfile
@@ -117,16 +118,36 @@ def test_filter_bbox_points_fast_path_matches_udf(spark, tmp_path):
     assert filter_bbox(clustered, 2, 2, 8, 8, exact="intersects", points=True).count() == 49
 
 
+class _Untouched:
+    """A frame stand-in that fails on any use: proves a ValueError is
+    raised before a plan is built."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"filter_bbox read df.{name} before validating its arguments")
+
+
 def test_filter_bbox_rejects_unknown_exact():
     """An unsupported ``exact=`` name is a ValueError that names the
     supported values, raised before the frame is touched (no plan built)."""
-
-    class Untouched:
-        def __getattr__(self, name):
-            raise AssertionError(f"filter_bbox read df.{name} before validating exact=")
-
     with pytest.raises(ValueError, match="intersects, within, contains"):
-        filter_bbox(Untouched(), 0, 0, 1, 1, exact="touches")
+        filter_bbox(_Untouched(), 0, 0, 1, 1, exact="touches")
+
+
+@pytest.mark.parametrize(
+    "bounds, exact, name",
+    [
+        ((-math.inf, -math.inf, math.inf, math.inf), "within", "min_x"),
+        ((0, 0, math.nan, 20), "intersects", "max_x"),
+        ((0, -math.inf, 1, 1), None, "min_y"),
+        ((0, 0, 1, math.nan), "contains", "max_y"),
+    ],
+)
+def test_filter_bbox_rejects_non_finite_window(bounds, exact, name):
+    """A NaN or ±inf window bound is a ValueError naming the bound, raised
+    before the frame is touched: with sidecars such a window kept every
+    row (Spark orders NaN above every double), without them none."""
+    with pytest.raises(ValueError, match=f"window bound {name}="):
+        filter_bbox(_Untouched(), *bounds, exact=exact)
 
 
 def test_filter_bbox_sure_true_short_circuit_matches_udf(spark, tmp_path):
@@ -160,6 +181,10 @@ def test_filter_bbox_sure_true_short_circuit_matches_udf(spark, tmp_path):
         fast = {r.id for r in filter_bbox(clustered, 10, 10, 20, 20, exact=exact).collect()}
         slow = {r.id for r in filter_bbox(plain, 10, 10, 20, 20, exact=exact).collect()}
         assert fast == slow == expected[exact], exact
+    # an inverted window (max bounds first) is the same window: the
+    # layout lane and the UDF lane both normalize it per axis
+    for frame in (clustered, plain):
+        assert {r.id for r in filter_bbox(frame, 14, 14, 12, 12, exact="within").collect()} == {0}
     # the within plan short-circuits in ONE scan (r13: the former
     # union-of-branches read the pruned files twice): exactly one UDF
     # eval whose input is null-masked to the boundary band, no Union,

@@ -646,3 +646,32 @@ def test_recheck_udf_built_once_per_key():
     assert len(_PREDICATES) == 11
     for name in _PREDICATES:
         assert _recheck(name) is functions._REGISTRY["st_" + name.replace("_", "")], name
+
+
+class _Untouched:
+    """A frame stand-in that fails on any use: proves a ValueError is
+    raised before a plan is built."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"st_join read df.{name} before validating its arguments")
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"cell_size": 0}, "cell_size"),
+        ({"cell_size": -2}, "cell_size"),
+        ({"cell_size": math.inf}, "cell_size"),
+        ({"cell_size": math.nan}, "cell_size"),
+        ({"predicate": "dwithin", "distance": math.inf}, "distance"),
+        ({"predicate": "dwithin", "distance": math.nan}, "distance"),
+        ({"predicate": "dwithin", "distance": -math.inf}, "distance"),
+    ],
+)
+def test_st_join_rejects_bad_numeric_arguments(kwargs, match):
+    """A zero, negative or non-finite ``cell_size`` and a non-finite
+    ``distance`` are ValueErrors raised before any plan is built (they
+    failed at execution with DIVIDE_BY_ZERO, or at analysis on a column
+    named ``infD`` / ``nanD``)."""
+    with pytest.raises(ValueError, match=match):
+        st_join(_Untouched(), _Untouched(), **kwargs)
