@@ -2543,9 +2543,10 @@ def q_layout_pruned_polys(spark, sf_dir):
     prefilter keeps bboxes overlapping the window (and, for within, inside
     the closed window), a bbox strictly inside the open window decides
     within TRUE, one inside the closed window decides intersects TRUE, and
-    ONLY boundary-band rows (bbox touching the window edge) decode WKB in
-    the exact UDF (reference geometry_type.hpp:100-146 cached-bbox
-    prefilter, completed into a decision). Every box binds through
+    ONLY boundary-band rows (bbox touching the window edge) decode WKB, in
+    the JVM through the SQL-text WKB kernel (plans/sqlwkb.py; no Python
+    task) (reference geometry_type.hpp:100-146 cached-bbox prefilter,
+    completed into a decision). Every box binds through
     scan_geo_parquet (manifest FILE pruning from _geo_layout.json per-file
     bounds + schema-from-manifest bind — the R-tree root-descent analog).
     Oracle = closed/strict interval arithmetic over the same rects."""

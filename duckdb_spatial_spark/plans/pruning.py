@@ -32,10 +32,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import udfs
+from . import sqlwkb
 
 BBOX_COLS = ("bbox_min_x", "bbox_min_y", "bbox_max_x", "bbox_max_y")
-# filter_bbox(exact=...) name -> the UDF that rechecks it
+# filter_bbox(exact=...) name -> the UDF that decides it without sidecars
 _EXACT = {"intersects": udfs.st_intersects, "within": udfs.st_within, "contains": udfs.st_contains}
+# ... and the SQL-text kernel that decides the boundary band with them
+_SQL_EXACT = {"intersects": sqlwkb.intersects, "within": sqlwkb.within}
 
 
 @F.arrow_udf(T.BinaryType())
@@ -416,7 +419,9 @@ def scan_geo_parquet(
     analog of the reference's R-tree descending from the root node
     (``rtree_index_plan_scan.cpp``) instead of visiting every leaf.
     Row-group skipping inside the surviving files still comes from the
-    footer stats via :func:`filter_bbox`'s pushed bbox conjuncts.
+    footer stats via :func:`filter_bbox`'s pushed bbox conjuncts. The
+    window is normalized and checked as :func:`filter_bbox` does it
+    (:func:`_window`).
 
     Safety contract: pruning is CONSERVATIVE — a file not listed in the
     manifest (legacy layout, foreign writer) is always read, and a
@@ -427,6 +432,7 @@ def scan_geo_parquet(
     (:mod:`~duckdb_spatial_spark.plans.snapshot`)."""
     if bbox is None:
         return spark.read.parquet(path)
+    x0, y0, x1, y1 = _window(*bbox)
     meta = read_layout_meta(path)
     fmap = (meta or {}).get("files") or {}
     files = _hadoop_list_parquet(spark, path)
@@ -437,7 +443,6 @@ def scan_geo_parquet(
         # manifest-recorded schema: binding the pruned file set does not
         # re-infer from footers (a per-query driver-side footer read)
         reader = reader.schema(T.StructType.fromJson(meta["schema"]))
-    x0, y0, x1, y1 = (float(v) for v in bbox)
 
     def _keep(fp: str) -> bool:
         import os as _os
@@ -568,6 +573,18 @@ def geo_parquet_stats(
     return spark.createDataFrame(rdd, schema)
 
 
+def _window(min_x: float, min_y: float, max_x: float, max_y: float) -> tuple:
+    """A query window as ``(x0, y0, x1, y1)`` floats, normalized per axis
+    (an inverted bound pair is swapped, as the envelope's bbox is). Its four
+    bounds must be finite: a NaN or ±inf bound raises ``ValueError`` before
+    any plan is built."""
+    for name, v in zip(("min_x", "min_y", "max_x", "max_y"), (min_x, min_y, max_x, max_y)):
+        if not math.isfinite(float(v)):
+            raise ValueError(f"window bound {name}={v!r} is not finite")
+    (x0, x1), (y0, y1) = sorted((float(min_x), float(max_x))), sorted((float(min_y), float(max_y)))
+    return x0, y0, x1, y1
+
+
 def filter_bbox(
     df: DataFrame,
     min_x: float,
@@ -581,38 +598,38 @@ def filter_bbox(
     """Windowed query with data skipping: the rows whose geometry satisfies
     ``ST_<exact>(geom, window)`` (``exact=None``: the bbox prefilter only).
 
-    The window is normalized per axis (an inverted bound pair is swapped,
-    as the envelope's bbox is) and its four bounds must be finite: a NaN or
-    ±inf bound raises ``ValueError`` before any plan is built.
+    The window is normalized per axis and must be finite (:func:`_window`).
 
     On a frame with the layout's bbox sidecars (``BBOX_COLS``) the window
     is a solid axis-aligned box declared for every row, and the cached-bbox
     rule (``_sure``) splits the exact filter as the reference's R-tree scan
     does (``rtree_index_plan_scan.cpp:207-231``):
 
-    * prefilter: bbox overlap, plus closed containment for ``within``,
-      pushed to the parquet scan (row-group skipping);
+    * prefilter: bbox overlap, plus closed containment of the bbox in the
+      window for ``within`` and of the window in the bbox for
+      ``contains``, pushed to the parquet scan (row-group skipping);
     * sure-true: a tight bbox inside the open window decides ``within``,
       inside the closed window ``intersects``; those rows pass with no WKB
       decode;
-    * the rest — the boundary band, and every row for ``contains`` — is
-      decided by the exact UDF, whose geometry input is NULL-masked on
-      sure rows (``_masked_recheck``).
+    * the boundary band — the rest — is decided for ``intersects`` and
+      ``within`` by the SQL-text WKB kernel (:mod:`.sqlwkb`) behind the
+      sure term, ``sure OR coalesce(kernel, false)``: ``Or`` short-circuits,
+      so only band rows are decoded, in the JVM, with no Python task;
+    * ``contains`` has no sure rule: the exact UDF decides every prefiltered
+      row.
 
     ``points=True`` declares every geometry a POINT (e.g. a layout written
     with ``write_geo_parquet(point_xy=...)``): a point's bbox IS the point,
     so the sure-true term is the whole answer to within / intersects and no
-    UDF runs (the reference's native POINT lane of ``st_contains.cpp``);
+    WKB is read (the reference's native POINT lane of ``st_contains.cpp``);
     within excludes the window boundary, matching ST_Within.
 
-    Without sidecars the exact UDF decides every row. All text is SQL,
-    parsed once on the JVM."""
+    Without sidecars the exact UDF decides every row: the slow lane the
+    layout lanes must agree with. All text is SQL, parsed once on the
+    JVM."""
     if exact and exact not in _EXACT:
         raise ValueError(f"unsupported exact={exact!r}; supported: {', '.join(_EXACT)} or None")
-    for name, v in zip(("min_x", "min_y", "max_x", "max_y"), (min_x, min_y, max_x, max_y)):
-        if not math.isfinite(float(v)):
-            raise ValueError(f"filter_bbox: window bound {name}={v!r} is not finite")
-    (x0, x1), (y0, y1) = sorted((float(min_x), float(max_x))), sorted((float(min_y), float(max_y)))
+    x0, y0, x1, y1 = _window(min_x, min_y, max_x, max_y)
     win = tuple(_dbl(v) for v in (x0, y0, x1, y1))
     sidecars = all(c in df.columns for c in BBOX_COLS)
     sure = _sure(exact, BBOX_COLS, win) if sidecars else None
@@ -623,9 +640,14 @@ def filter_bbox(
             terms.append(sure)
         elif exact == "within":  # ST_Within requires bbox containment
             terms.append(_inside(b, win, strict=False))
+        elif exact == "contains":  # ST_Contains requires the converse
+            terms.append(_inside(win, b, strict=False))
         df = df.filter(" AND ".join(terms))
     if not exact or (points and sure):
         return df
+    if sure is not None:
+        kernel = _SQL_EXACT[exact](_ident(geom_col), win)
+        return df.filter(f"{sure} OR coalesce({kernel}, false)")
     # the envelope WKB is built ONCE driver-side and shipped as a binary
     # literal: st_makeenvelope over literal columns would rebuild it per
     # row in the Python worker
@@ -634,9 +656,7 @@ def filter_bbox(
 
     ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
     env = F.expr(f"X'{WKB.to_wkb(G.polygon([ring])).hex()}'")
-    if sure is None:
-        return df.filter(_EXACT[exact](F.expr(_ident(geom_col)), env))
-    return df.filter(_masked_recheck(sure, _EXACT[exact], (_ident(geom_col),), env))
+    return df.filter(_EXACT[exact](F.expr(_ident(geom_col)), env))
 
 
 # ---------------------------------------------------------------------------

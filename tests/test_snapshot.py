@@ -185,14 +185,15 @@ def test_filter_bbox_sure_true_short_circuit_matches_udf(spark, tmp_path):
     # layout lane and the UDF lane both normalize it per axis
     for frame in (clustered, plain):
         assert {r.id for r in filter_bbox(frame, 14, 14, 12, 12, exact="within").collect()} == {0}
-    # the within plan short-circuits in ONE scan (r13: the former
-    # union-of-branches read the pruned files twice): exactly one UDF
-    # eval whose input is null-masked to the boundary band, no Union,
-    # a single parquet scan
-    plan = filter_bbox(clustered, 10, 10, 20, 20, exact="within")._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    assert "Union" not in plan
-    assert plan.count("Scan parquet") == 1
+    # the plan short-circuits in ONE scan (the former union-of-branches
+    # read the pruned files twice): the boundary band is decided by the
+    # SQL-text WKB kernel behind the sure term, so no Python eval node,
+    # no Union, a single parquet scan
+    for exact in ("within", "intersects"):
+        plan = filter_bbox(clustered, 10, 10, 20, 20, exact=exact)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 0 and "BatchEvalPython" not in plan, exact
+        assert "Union" not in plan
+        assert plan.count("Scan parquet") == 1
 
 
 def test_vacuum_reclaims_crash_orphans(spark, layout):
