@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import udfs
-from ..plans.pruning import _BOX_SURE, _dbl, _finite, _ident, _inside, _masked_recheck, _sure
+from ..plans.pruning import _BOX_SURE, _dbl, _finite, _ident, _inside, _sure, job_description
 
 _PREDICATES = (
     "intersects", "contains", "contains_properly", "within", "covers", "covered_by",
@@ -134,11 +134,8 @@ def _grid_params(sized, cell_size, pad=0.0):
     Returns None when a sampled side has no finite bbox."""
     if cell_size is not None:
         return 0.0, 0.0, float(cell_size)
-    sc = sized[0][0].sparkSession.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("st_join: grid sizing sample")
     stats = []
-    try:
+    with job_description(sized[0][0].sparkSession.sparkContext, "st_join: grid sizing sample"):
         for df, p in sized:
             rows = df.select(*(f"{p}_{f}" for f in _BOX)).coalesce(1).take(10_000)
             a = np.array([tuple(r) for r in rows], dtype=np.float64).reshape(-1, 4)
@@ -146,8 +143,6 @@ def _grid_params(sized, cell_size, pad=0.0):
             if len(a) == 0:
                 return None
             stats.append(a)
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
     min_x = min(float(a[:, 0].min()) for a in stats)
     min_y = min(float(a[:, 1].min()) for a in stats)
     max_x = max(float(a[:, 2].max()) for a in stats)
@@ -171,8 +166,8 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
     dwithin pad goes on the right side, so a point left keeps its one cell.
 
     A solid-rectangle side (``r_is_box`` / ``l_is_box``) is decided by
-    ``filter_bbox``'s cached-bbox rule: ``_inside``, ``_sure`` and
-    ``_masked_recheck`` in ``plans.pruning``.
+    ``filter_bbox``'s cached-bbox rule: ``_inside`` and ``_sure`` in
+    ``plans.pruning``, with :func:`_masked_recheck` below.
 
     Expressions are SQL text, parsed once on the JVM: each PySpark Column
     operator costs several py4j round trips (about 1,700 per join when
@@ -242,6 +237,16 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
     if sure is None:
         return pairs.filter(udf(F.expr(lg), F.expr(rg), *args))
     return pairs.filter(_masked_recheck(sure, udf, (lg, rg), *args))
+
+
+def _masked_recheck(sure: str, udf, masked, *rest):
+    """``sure OR coalesce(udf(CASE WHEN NOT sure THEN m END ..., *rest),
+    false)``: sure rows pass outright and only the rest reach the exact
+    UDF. Catalyst evaluates an extracted Python UDF on every row, so the
+    lever is the NULL mask on the ``masked`` SQL arguments — decided rows
+    ship a null bitmap, not WKB, and the kernel skips them."""
+    args = (F.expr(f"CASE WHEN NOT {sure} THEN {m} END") for m in masked)
+    return F.expr(sure) | F.coalesce(udf(*args, *rest), F.lit(False))
 
 
 def _recheck(predicate: str):

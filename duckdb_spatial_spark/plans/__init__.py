@@ -4,7 +4,6 @@ from .pruning import (  # noqa: F401
     filter_bbox,
     geo_parquet_stats,
     hilbert_cluster,
-    hilbert_cluster_points,
     scan_geo_parquet,
     write_geo_parquet,
 )

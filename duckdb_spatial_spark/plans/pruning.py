@@ -24,6 +24,7 @@ row groups whose Hilbert range overlaps the query window.
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -88,7 +89,9 @@ def with_bbox_columns(df: DataFrame, geom_col: str = "geom") -> DataFrame:
     projection-level ST_Extent gets re-expanded by Catalyst into every
     downstream reference — audited at 4+ evals in the round-1 cluster
     build), and point WKB decodes as a single numpy view. NULL/EMPTY
-    geometries keep NULL bbox columns (rows are not dropped)."""
+    geometries keep NULL bbox columns (rows are not dropped), and so does a
+    geometry with any NaN bound (``POINT (5 NaN)``): the four columns are
+    NULL together or not at all."""
     from ..functions import fastpath
 
     schema = T.StructType(
@@ -99,44 +102,12 @@ def with_bbox_columns(df: DataFrame, geom_col: str = "geom") -> DataFrame:
     def gen(batches):
         for pdf in batches:
             arrs = fastpath.bbox_arrays(pdf.iloc[:, gi])
-            nan = np.isnan(arrs[0])
-            if nan.any():  # NULL (not NaN) for missing/EMPTY — parquet stats stay clean
+            nan = np.isnan(np.asarray(arrs)).any(axis=0)
+            if nan.any():  # NULL (not NaN) for missing/EMPTY/NaN — parquet stats stay clean
                 arrs = [pd.arrays.FloatingArray(a, nan) for a in arrs]
             yield pdf.assign(**dict(zip(BBOX_COLS, arrs)))
 
     return df.mapInPandas(gen, schema=schema)
-
-
-def _hash_preimages(spark: SparkSession, n: int) -> list[int]:
-    """For each bucket b in [0, n): an int j with pmod(hash(j), n) == b.
-
-    Lets ``repartition(n, j)`` place bucket b exactly in partition b —
-    manual range partitioning with a single shuffle and NO sampling pass.
-    Found with Spark's own hash() so the mapping matches the shuffle's
-    Murmur3 exactly (one tiny driver-side job, no data scan)."""
-    need, out = set(range(n)), [0] * n
-    width = max(64 * n, 256)
-    rows = (
-        spark.range(0, width)
-        .select(
-            F.col("id").cast("int").alias("j"),
-            F.pmod(F.hash(F.col("id").cast("int")), F.lit(n)).alias("b"),
-        )
-        .collect()
-    )
-    for r in rows:
-        if r.b in need:
-            out[r.b] = r.j
-            need.discard(r.b)
-    if need:  # astronomically unlikely with 64n candidates; widen once
-        for r in spark.range(width, width * 16).select(
-            F.col("id").cast("int").alias("j"),
-            F.pmod(F.hash(F.col("id").cast("int")), F.lit(n)).alias("b"),
-        ).collect():
-            if r.b in need:
-                out[r.b] = r.j
-                need.discard(r.b)
-    return out
 
 
 def _ident(name: str) -> str:
@@ -184,16 +155,6 @@ def _sure(predicate: str | None, bbox, box) -> str | None:
     return None if strict is None else _inside(bbox, box, strict)
 
 
-def _masked_recheck(sure: str, udf, masked, *rest):
-    """``sure OR coalesce(udf(CASE WHEN NOT sure THEN m END ..., *rest),
-    false)``: sure rows pass outright and only the rest reach the exact
-    UDF. Catalyst evaluates an extracted Python UDF on every row, so the
-    lever is the NULL mask on the ``masked`` SQL arguments — decided rows
-    ship a null bitmap, not WKB, and the kernel skips them."""
-    args = (F.expr(f"CASE WHEN NOT {sure} THEN {m} END") for m in masked)
-    return F.expr(sure) | F.coalesce(udf(*args, *rest), F.lit(False))
-
-
 def _finite_bounds(df: DataFrame, min_x: str, min_y: str, max_x: str, max_y: str) -> tuple:
     """Layout bounds — (min(min_x), min(min_y), max(max_x), max(max_y)) —
     over the rows whose four coordinates are all finite, in one JVM
@@ -216,117 +177,61 @@ def hilbert_cluster(
     geom_col: str = "geom",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
+    point_xy: tuple | None = None,
 ) -> DataFrame:
     """Add bbox columns + the Hilbert index of the bbox center, and
     range-partition by it (``repartitionByRange`` + ``sortWithinPartitions``).
 
+    Two lanes share that one clustering rule:
+
+    * generic: the bbox columns come from the WKB in ``geom_col``
+      (:func:`with_bbox_columns`); a NULL or EMPTY geometry gets NULL bbox
+      columns and a NULL hilbert;
+    * ``point_xy=(x_col, y_col)``: the rows carry plain x/y doubles (raw
+      telemetry, the 100 TB shape), so the exchange and sort carry plain
+      numerics and the point WKB (``geom_col``) and bbox sidecars are
+      assembled AFTER the sort, in the write stage. x/y are dropped. bbox,
+      hilbert and geom are NULL when either coordinate is NULL or NaN.
+
     ``bounds`` (min_x, min_y, max_x, max_y) defaults to the extent of the
-    rows with finite bboxes (one aggregate job, like the reference's index
-    build scan; see :func:`_finite_bounds`). A NULL or EMPTY geometry gets
-    NULL bbox columns and a NULL hilbert."""
+    rows whose lane coordinates are all finite (one aggregate job, like the
+    reference's index build scan; see :func:`_finite_bounds`). An infinite
+    coordinate is clipped to the curve edge."""
     n = int(num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = with_bbox_columns(df, geom_col)
-    if bounds is None:
-        bounds = _finite_bounds(df, *BBOX_COLS)
-    cx = (F.col(BBOX_COLS[0]) + F.col(BBOX_COLS[2])) / 2
-    cy = (F.col(BBOX_COLS[1]) + F.col(BBOX_COLS[3])) / 2
-    df = df.withColumn(
-        "hilbert",
-        udfs.st_hilbert(cx, cy, *(F.lit(float(b)) for b in bounds)),
-    )
-    return df.repartitionByRange(n, "hilbert").sortWithinPartitions("hilbert")
-
-
-# hilbert_cluster_points' split-point sample: fraction and seed
-_SPLIT_SAMPLE_FRACTION = 0.01
-_SPLIT_SAMPLE_SEED = 7
-
-
-def hilbert_cluster_points(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    geom_col: str = "geom",
-    bounds: tuple | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Point-ingest clustering: the source rows carry plain ``x``/``y``
-    doubles (raw telemetry, the 100 TB shape), so the bounds aggregate and
-    the split-point sample (1% of the finite rows, at most 2M) run
-    entirely JVM-side against the numeric columns.
-
-    ``bounds`` defaults to the extent of the finite points (see
-    :func:`_finite_bounds`). The pre-exchange crossing computes ONLY
-    (hilbert, route) from (x, y) — 16 B/row up, 12 B/row down — so the
-    exchange and sort carry plain numerics; one hash shuffle places split
-    bucket b in partition b via :func:`_hash_preimages`. The point WKB is
-    assembled AFTER the sort, in the write stage, and the bbox sidecars
-    are JVM conditional projections of x/y. bbox, hilbert and geom are
-    NULL when either coordinate is NULL; a NaN coordinate nulls hilbert
-    and geom. An infinite coordinate is clipped to the curve edge."""
-    spark = df.sparkSession
-    n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # rows with a non-finite coordinate stay out of the bounds and the
-    # split sample (see _finite_bounds)
-    if bounds is None:
-        bounds = _finite_bounds(df, x_col, y_col, x_col, y_col)
-    b0, b1, b2, b3 = (float(b) for b in bounds)
-    px, py = F.col(x_col), F.col(y_col)
-    sample = (
-        df.filter(_finite(_ident(x_col), _ident(y_col)))
-        .select(px.alias("x"), py.alias("y"))
-        .sample(fraction=_SPLIT_SAMPLE_FRACTION, seed=_SPLIT_SAMPLE_SEED)
-        .limit(2_000_000)  # driver-memory guard: 1% of a 100 TB table is not collectable
-        .collect()
-    )
-    if sample:
-        sx = np.asarray([r.x for r in sample], dtype=np.float64)
-        sy = np.asarray([r.y for r in sample], dtype=np.float64)
-        hs = udfs.hilbert_scaled(sx, sy, b0, b1, b2, b3)
-        probs = np.arange(1, n) / n
-        splits = np.unique(np.quantile(hs, probs).astype(np.int64))
+    if point_xy is None:
+        df = with_bbox_columns(df, geom_col)
+        coords = BBOX_COLS
+        cx = (F.col(BBOX_COLS[0]) + F.col(BBOX_COLS[2])) / 2
+        cy = (F.col(BBOX_COLS[1]) + F.col(BBOX_COLS[3])) / 2
     else:
-        splits = np.array([], dtype=np.int64)
-    nb = len(splits) + 1
-    jmap = np.asarray(_hash_preimages(spark, nb), dtype=np.int32) if nb > 1 else None
-
-    stype = T.StructType(
-        [T.StructField("hilbert", T.LongType()), T.StructField("route", T.IntegerType())]
-    )
-
-    @F.pandas_udf(stype)
-    def hilbert_route(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        xs = x.to_numpy(dtype=np.float64, na_value=np.nan)
-        ys = y.to_numpy(dtype=np.float64, na_value=np.nan)
-        nan = np.isnan(xs) | np.isnan(ys)
-        h = udfs.hilbert_scaled(xs, ys, b0, b1, b2, b3)
-        bucket = np.searchsorted(splits, h, side="right") if len(splits) else np.zeros(len(h), dtype=np.int64)
-        route = jmap[bucket] if jmap is not None else np.zeros(len(h), dtype=np.int32)
-        return pd.DataFrame({
-            "hilbert": pd.arrays.IntegerArray(h, nan) if nan.any() else h,
-            "route": route.astype(np.int32),
-        })
-
-    both = px.isNotNull() & py.isNotNull()
-    keep = [c for c in df.columns if c not in (x_col, y_col)]
-    routed = df.select("*", hilbert_route(px, py).alias("_s")).select(
-        "*", F.col("_s.hilbert").alias("hilbert"), F.col("_s.route").alias("_route")
-    ).drop("_s")
-    if nb == 1:
-        placed = routed.coalesce(1).sortWithinPartitions("hilbert")
-    else:
-        placed = routed.repartition(nb, F.col("_route")).sortWithinPartitions("hilbert")
-    # WKB + bbox sidecars materialize HERE, post-sort, in the write stage;
-    # bbox NULL iff either coordinate is NULL
-    return placed.select(
-        *keep,
-        _point_wkb_arrow(px, py).alias(geom_col),
-        F.when(both, px).alias(BBOX_COLS[0]),
-        F.when(both, py).alias(BBOX_COLS[1]),
-        F.when(both, px).alias(BBOX_COLS[2]),
-        F.when(both, py).alias(BBOX_COLS[3]),
+        coords = tuple(point_xy) * 2
+        cx, cy = F.col(point_xy[0]), F.col(point_xy[1])
+    if bounds is None:
+        bounds = _finite_bounds(df, *coords)
+    df = df.withColumn("hilbert", udfs.st_hilbert(cx, cy, *(F.lit(float(b)) for b in bounds)))
+    df = df.repartitionByRange(n, "hilbert").sortWithinPartitions("hilbert")
+    if point_xy is None:
+        return df
+    # bbox NULL iff either coordinate is NULL or NaN (a point's bbox IS the point)
+    both = cx.isNotNull() & cy.isNotNull() & ~F.isnan(cx) & ~F.isnan(cy)
+    return df.select(
+        *(c for c in df.columns if c not in (*point_xy, "hilbert")),
+        _point_wkb_arrow(cx, cy).alias(geom_col),
+        *(F.when(both, c).alias(b) for c, b in zip((cx, cy, cx, cy), BBOX_COLS)),
         "hilbert",
     )
+
+
+@contextmanager
+def job_description(sc, text: str):
+    """Run the block's Spark jobs under the description ``text``; the
+    caller's own description is restored afterwards."""
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def write_geo_parquet(
@@ -338,20 +243,22 @@ def write_geo_parquet(
     point_xy: tuple | None = None,
 ) -> None:
     """Hilbert-clustered GeoParquet-style write (geometry stays WKB binary,
-    which IS GeoParquet's encoding). Two lanes:
-
-    * ``point_xy=(x_col, y_col)``: the rows carry plain x/y columns and the
-      point geometry is ASSEMBLED here (see :func:`hilbert_cluster_points`);
-    * otherwise the generic lane: bbox columns from the WKB in
-      ``geom_col``, then ``repartitionByRange(hilbert)`` (see
-      :func:`hilbert_cluster`).
+    which IS GeoParquet's encoding), clustered by :func:`hilbert_cluster`
+    in one of its two lanes: ``point_xy=(x_col, y_col)`` assembles the
+    point geometry from plain x/y columns; otherwise the bbox columns come
+    from the WKB in ``geom_col``.
 
     Bounds rule, the same for both lanes: the caller's ``bounds``, else the
     extent of the rows whose lane coordinates (x/y, or the bbox columns)
     are all finite (:func:`_finite_bounds`, one JVM aggregate). A row with a
     NULL or NaN coordinate gets a NULL hilbert; an infinite one is clipped
     to the curve edge. Neither reaches the bounds. The layout manifest
-    records the bounds the data was clustered with.
+    records the bounds the data was clustered with, and per-file bboxes read
+    from the footers just written, on the driver (:func:`footer_stats`): no
+    Spark job runs after the data write. With ``bounds=`` given a write runs
+    three jobs (the range-partition sample, the shuffle and the write);
+    without, one bounds aggregate more. Each runs under the description
+    ``write_geo_parquet: ...``.
 
     Parquet dictionary encoding is disabled: WKB geometries are near-unique,
     so dictionary pages only add CPU + a failed-dictionary fallback per row
@@ -369,28 +276,22 @@ def write_geo_parquet(
     signatures equal on the same staged rows) and no read-side regression
     (Spark's vectorized reader decodes v2 pages natively; probe read guard
     0.2-0.7 s across variants)."""
+    sc = df.sparkSession.sparkContext
     if bounds is None:
         coords = df if point_xy else with_bbox_columns(df, geom_col)
-        bounds = _finite_bounds(coords, *(tuple(point_xy) * 2 if point_xy else BBOX_COLS))
-    if point_xy is not None:
-        clustered = hilbert_cluster_points(
-            df, point_xy[0], point_xy[1], geom_col, bounds, num_partitions
-        )
-    else:
-        clustered = hilbert_cluster(df, geom_col, bounds, num_partitions)
-    clustered.write.mode("overwrite").options(**GEO_PARQUET_WRITE_OPTIONS).parquet(path)
+        with job_description(sc, "write_geo_parquet: layout bounds"):
+            bounds = _finite_bounds(coords, *(tuple(point_xy) * 2 if point_xy else BBOX_COLS))
+    clustered = hilbert_cluster(df, geom_col, bounds, num_partitions, point_xy)
+    with job_description(sc, "write_geo_parquet: cluster and write"):
+        clustered.write.mode("overwrite").options(**GEO_PARQUET_WRITE_OPTIONS).parquet(path)
     if not path.startswith(("s3://", "s3a://", "hdfs://")):
         # layout manifest: the clustering bounds, plus per-file bboxes from
-        # one footer-stats job at WRITE time, so a windowed read can drop
-        # whole files from the driver-side manifest BEFORE Spark lists them
-        # or tasks open their footers (the reference's R-tree answers the
-        # same question from its root node; see scan_geo_parquet)
-        frows = geo_parquet_stats(df.sparkSession, path, level="file").collect()
-        fmap = {
-            r["file"]: [r["min_x"], r["min_y"], r["max_x"], r["max_y"]]
-            for r in frows
-            if r["min_x"] is not None
-        }
+        # the footers just written, so a windowed read can drop whole files
+        # from the driver-side manifest BEFORE Spark lists them or tasks
+        # open their footers (the reference's R-tree answers the same
+        # question from its root node; see scan_geo_parquet)
+        files = _hadoop_list_parquet(df.sparkSession, path)
+        fmap = {r[0]: list(r[3:7]) for r in footer_stats(files, level="file") if None not in r[3:7]}
         _write_layout_meta(
             path,
             {
@@ -448,8 +349,8 @@ def scan_geo_parquet(
         import os as _os
 
         b = fmap.get(_os.path.basename(fp))
-        if b is None or b[0] is None:
-            return True  # unknown to the manifest: conservative read
+        if b is None or None in b:
+            return True  # unknown to the manifest, or incomplete: conservative read
         return not (b[2] < x0 or b[0] > x1 or b[3] < y0 or b[1] > y1)
 
     kept = [fp for fp in files if _keep(fp)]
@@ -489,9 +390,9 @@ def _hadoop_list_parquet(spark: SparkSession, path: str) -> list[str]:
 
 
 def _pyarrow_openable(fp: str):
-    """Map a Hadoop path/URI to something pyarrow can open on an executor:
-    strip ``file:`` schemes to a local path; translate ``s3a://`` to the
-    ``s3://`` scheme pyarrow's native S3 filesystem expects."""
+    """Map a Hadoop path/URI to something pyarrow can open: strip ``file:``
+    schemes to a local path; translate ``s3a://`` to the ``s3://`` scheme
+    pyarrow's native S3 filesystem expects."""
     if fp.startswith("file:"):
         rest = fp[len("file:"):]
         if rest.startswith("///"):
@@ -502,9 +403,75 @@ def _pyarrow_openable(fp: str):
     return fp
 
 
-def geo_parquet_stats(
-    spark: SparkSession, path: str, level: str = "rowgroup", files: list | None = None
-) -> DataFrame:
+_STATS_SCHEMA = (
+    "file string, row_group int, n_rows long, min_x double, min_y double,"
+    " max_x double, max_y double, hilbert_min long, hilbert_max long"
+)
+
+
+# a row group's bound when its column chunk holds values but no usable
+# min/max statistics (none written, or a NaN one): unknown
+_NO_STATS = object()
+
+
+def _fold(pick, vals):
+    """``pick`` (min or max) of a column's row-group bounds: None when one
+    is unknown, else over the row groups that have one (an all-NULL chunk
+    has none)."""
+    if any(v is _NO_STATS for v in vals):
+        return None
+    return pick((v for v in vals if v is not None), default=None)
+
+
+def footer_stats(files: list, level: str = "rowgroup") -> list[tuple]:
+    """The bbox-column and hilbert min/max of each row group of ``files``
+    (or of each file with ``level='file'``, ``row_group`` -1), read from
+    the parquet FOOTERS with pyarrow on the driver: no data pages, no Spark
+    job. Tuples in :data:`_STATS_SCHEMA` order, ``file`` the base name.
+
+    A bound is None where the footer has no usable one: an all-NULL column
+    chunk, or one that holds values without min/max statistics or with a
+    NaN min or max (Spark's writer records a NaN value there). A file-level
+    bound folds the row groups' bounds, skipping all-NULL chunks; it is None
+    if any other chunk has no usable bound, so a file bbox never leaves
+    rows out."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for fp in files:
+        name = os.path.basename(fp)
+        md = pq.ParquetFile(_pyarrow_openable(fp)).metadata
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        idx = {c: names.index(c) for c in BBOX_COLS + ("hilbert",) if c in names}
+        rows = []
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            lo, hi = {}, {}
+            for c, ci in idx.items():
+                st = g.column(ci).statistics
+                if st is not None and st.has_min_max and not np.isnan((st.min, st.max)).any():
+                    lo[c], hi[c] = st.min, st.max
+                elif st is None or not st.has_null_count or st.null_count < g.num_rows:
+                    lo[c] = hi[c] = _NO_STATS
+            rows.append((
+                name, rg, g.num_rows,
+                lo.get(BBOX_COLS[0]), lo.get(BBOX_COLS[1]), hi.get(BBOX_COLS[2]), hi.get(BBOX_COLS[3]),
+                lo.get("hilbert"), hi.get("hilbert"),
+            ))
+        if level == "file" and rows:
+            cols = list(zip(*rows))
+            rows = [(
+                name, -1, sum(cols[2]),
+                _fold(min, cols[3]), _fold(min, cols[4]), _fold(max, cols[5]), _fold(max, cols[6]),
+                _fold(min, cols[7]), _fold(max, cols[8]),
+            )]
+        out.extend(tuple(None if v is _NO_STATS else v for v in r) for r in rows)
+    return out
+
+
+def geo_parquet_stats(spark: SparkSession, path: str, level: str = "rowgroup") -> DataFrame:
     """R-tree introspection analog (``rtree_index_pragmas.cpp`` exposes
     ``rtree_index_dump`` with per-node bounding boxes; here the 'nodes' are
     parquet row groups of a :func:`write_geo_parquet` dataset).
@@ -513,64 +480,10 @@ def geo_parquet_stats(
     the bbox-column min/max from the parquet FOOTER statistics plus row
     counts — exactly the numbers the pruning rewrite skips on, so a slow
     windowed query can be debugged by eyeballing which row groups a window
-    overlaps. Listing goes through the Hadoop FileSystem API (so ``file:``,
-    ``hdfs:`` and ``s3a:`` dataset paths all work — no driver-side local
-    glob); footers are read on executors (one task per file): no data pages
-    are touched and no driver bottleneck at 100k files."""
-    import os
-
-    if files is None:
-        files = _hadoop_list_parquet(spark, path)
-
-    want_file_level = level == "file"
-
-    def footer_stats(fp: str):
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(_pyarrow_openable(fp)).metadata
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        idx = {c: names.index(c) for c in BBOX_COLS + ("hilbert",) if c in names}
-        rows = []
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            vals = {}
-            for c, ci in idx.items():
-                st = g.column(ci).statistics
-                vals[c] = (st.min, st.max) if st is not None and st.has_min_max else (None, None)
-            rows.append(
-                (
-                    os.path.basename(fp),
-                    rg,
-                    g.num_rows,
-                    vals.get(BBOX_COLS[0], (None, None))[0],
-                    vals.get(BBOX_COLS[1], (None, None))[0],
-                    vals.get(BBOX_COLS[2], (None, None))[1],
-                    vals.get(BBOX_COLS[3], (None, None))[1],
-                    vals.get("hilbert", (None, None))[0],
-                    vals.get("hilbert", (None, None))[1],
-                )
-            )
-        if want_file_level and rows:
-            agg = (
-                os.path.basename(fp),
-                -1,
-                sum(r[2] for r in rows),
-                min((r[3] for r in rows if r[3] is not None), default=None),
-                min((r[4] for r in rows if r[4] is not None), default=None),
-                max((r[5] for r in rows if r[5] is not None), default=None),
-                max((r[6] for r in rows if r[6] is not None), default=None),
-                min((r[7] for r in rows if r[7] is not None), default=None),
-                max((r[8] for r in rows if r[8] is not None), default=None),
-            )
-            return [agg]
-        return rows
-
-    schema = (
-        "file string, row_group int, n_rows long, min_x double, min_y double,"
-        " max_x double, max_y double, hilbert_min long, hilbert_max long"
-    )
-    rdd = spark.sparkContext.parallelize(files, max(len(files), 1)).flatMap(footer_stats)
-    return spark.createDataFrame(rdd, schema)
+    overlaps. Listing goes through the Hadoop FileSystem API (``file:``,
+    ``hdfs:`` and ``s3a:`` dataset paths); the footers are read on the
+    driver (:func:`footer_stats`), and no data pages are touched."""
+    return spark.createDataFrame(footer_stats(_hadoop_list_parquet(spark, path), level), _STATS_SCHEMA)
 
 
 def _window(min_x: float, min_y: float, max_x: float, max_y: float) -> tuple:
@@ -702,10 +615,9 @@ def layout_fragmentation(
     manifests) instead of listing the directory."""
     import heapq
 
-    rows = geo_parquet_stats(spark, path, level="file", files=files).select(
-        "hilbert_min", "hilbert_max"
-    ).collect()
-    rng = [(r.hilbert_min, r.hilbert_max) for r in rows if r.hilbert_min is not None]
+    if files is None:
+        files = _hadoop_list_parquet(spark, path)
+    rng = [r[7:9] for r in footer_stats(files, level="file") if r[7] is not None]
     k = len(rng)
     if k <= 1:
         return 0.0

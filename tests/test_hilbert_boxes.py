@@ -75,15 +75,15 @@ def test_box_lane_null_bounds_row(spark, tmp_path):
 
 
 def test_point_lane_null_semantics(spark):
-    """r16 post-sort-WKB refactor of hilbert_cluster_points: bbox, hilbert
-    and geom must be NULL iff EITHER coordinate is NULL (the pre-r16 fused
-    lane's semantics — a bare rename of x into bbox_min_x would wrongly
-    keep x's value when only y is null). A NaN coordinate nulls hilbert and
-    geom too, and NULL/NaN rows stay out of the bounds and split sample:
-    a NaN there reaches an undefined float-to-int64 cast."""
+    """The point lane, ``hilbert_cluster(point_xy=...)``: bbox, hilbert
+    and geom must be NULL iff EITHER coordinate is NULL (a bare rename of
+    x into bbox_min_x would wrongly keep x's value when only y is null).
+    A NaN coordinate nulls hilbert and geom too, and NULL/NaN rows stay
+    out of the bounds: a NaN there reaches an undefined float-to-int64
+    cast."""
     import warnings
 
-    from duckdb_spatial_spark.plans.pruning import hilbert_cluster_points
+    from duckdb_spatial_spark.plans import hilbert_cluster
 
     df = spark.sql(
         """
@@ -99,7 +99,7 @@ def test_point_lane_null_semantics(spark):
         warnings.simplefilter("error", RuntimeWarning)
         out = {
             r.id: r
-            for r in hilbert_cluster_points(df, "x", "y", num_partitions=2).collect()
+            for r in hilbert_cluster(df, num_partitions=2, point_xy=("x", "y")).collect()
         }
     assert len(out) == 200
     assert out[3].geom is None and out[3].hilbert is None

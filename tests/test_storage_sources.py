@@ -7,6 +7,7 @@ ST_GeneratePoints box + ST_Within(envelope) count."""
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from duckdb_spatial_spark.functions import udfs
@@ -61,11 +62,13 @@ def test_hilbert_cluster_and_prune(spark, tmp_path):
     assert len(files_hit) < len(files_all)
 
 
-def test_hilbert_cluster_sampled_splits(spark, tmp_path):
-    """Range partitioning by the sampled hilbert split points must preserve
+@pytest.mark.parametrize("point_xy", [None, ("x", "y")], ids=["generic", "points"])
+def test_hilbert_cluster_sampled_splits(spark, tmp_path, point_xy):
+    """Both lanes range-partition by the hilbert index: they must preserve
     rows, produce partition-disjoint hilbert ranges, and prune files."""
     pts = st_generatepoints(spark, 0, 0, 10000, 10000, 20000, seed=7)
-    clustered = hilbert_cluster(pts.repartition(8), num_partitions=8)
+    src = pts.select("id", "x", "y") if point_xy else pts.select("id", "geom")
+    clustered = hilbert_cluster(src.repartition(8), num_partitions=8, point_xy=point_xy)
     assert clustered.count() == 20000
 
     # partitions hold disjoint hilbert ranges (the locality contract)
@@ -82,7 +85,7 @@ def test_hilbert_cluster_sampled_splits(spark, tmp_path):
     assert max(r.n for r in rng) < 10000
 
     out = str(tmp_path / "pts_sampled")
-    write_geo_parquet(pts.repartition(8), out, num_partitions=8)
+    write_geo_parquet(src.repartition(8), out, num_partitions=8, point_xy=point_xy)
     back = spark.read.parquet(out)
     assert back.count() == 20000
     files_all = {r.f for r in back.select(F.input_file_name().alias("f")).distinct().collect()}
