@@ -931,8 +931,8 @@ def st_buffer_style(
 
 def _binary_pred(name, fn):
     """Predicate UDF with the vectorized point-batch fast path (see
-    fastpath.py: a point side against points or polygons grouped by
-    distinct geometry); falls back to the per-row kernel. The one kernel
+    fastpath.py: a point side against points elementwise and against
+    polygons in one flat pass); falls back to the per-row kernel. The one kernel
     for filters, SQL and the ``st_join`` recheck."""
 
     def u(a: pd.Series, b: pd.Series) -> pd.Series:

@@ -17,7 +17,7 @@ see PAPERS.md):
   3. a point side keeps its one cell; a non-point side explodes onto the
      cells its bbox overlaps — one ``explode_outer`` over a linear cell
      index, pure Column, stays JVM-side
-  4. ONE equi-join on the packed cell id (hash-partitioned both sides —
+  4. ONE equi-join on the cell (cx, cy) (hash-partitioned both sides —
      scales linearly with executors; no broadcast of the big side) whose
      condition also carries the bbox-overlap terms (cheap, codegen'd), the
      containment terms of the containment predicates and, for a point left
@@ -57,7 +57,6 @@ _PREDICATES = (
     "touches", "crosses", "overlaps", "equals", "dwithin",
 )
 
-_CELL_SHIFT = 1 << 22  # pack (cx, cy) into one bigint cell id
 _SJ_ID = "__sj_left_id"  # surrogate key for left/semi/anti reconciliation
 _BOX = ("mnx", "mny", "mxx", "mxy")  # a side's flat bbox columns: {side}_mnx ...
 # ST_<pred>(box, g) for a solid-rectangle LEFT is ST_<converse>(g, box)
@@ -160,7 +159,7 @@ def _grid_params(sized, cell_size, pad=0.0):
 
 
 def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_size, distance):
-    """The whole bbox phase as ONE equi-join on the packed cell id: its
+    """The whole bbox phase as ONE equi-join on the cell ``(cx, cy)``: its
     condition carries the bbox-overlap, reference-cell, containment and
     native-exact terms. The exact recheck follows as one filter. The
     dwithin pad goes on the right side, so a point left keeps its one cell.
@@ -195,18 +194,19 @@ def _grid_join(lb, rb, point, native, predicate, left_geom, right_geom, cell_siz
         k, ny = f"{p}_k", f"({cy(b[3])} - {cy(b[1])} + 1)"
         n = f"({cx(b[2])} - {cx(b[0])} + 1) * {ny}"
         cells = df.selectExpr("*", f"explode_outer(sequence(0, {n} - 1)) AS {k}")
-        return cells, f"({cx(b[0])} + {k} div {ny}) * {_CELL_SHIFT} + {cy(b[1])} + {k} % {ny}"
+        return cells, (f"{cx(b[0])} + {k} div {ny}", f"{cy(b[1])} + {k} % {ny}")
 
-    rc, rcell = grid(rb, "r", Rp)
-    lc, lcell = (lb, f"{cx(L[0])} * {_CELL_SHIFT} + {cy(L[1])}") if point else grid(lb, "l", L)
-    terms = [f"{lcell} = {rcell}", f"{L[0]} <= {Rp[2]}", f"{L[2]} >= {Rp[0]}",
+    # a cell is two join keys, never one packed id: no two cells share a key
+    rc, (rcx, rcy) = grid(rb, "r", Rp)
+    lc, (lcx, lcy) = (lb, (cx(L[0]), cy(L[1]))) if point else grid(lb, "l", L)
+    terms = [f"{lcx} = {rcx}", f"{lcy} = {rcy}", f"{L[0]} <= {Rp[2]}", f"{L[2]} >= {Rp[0]}",
              f"{L[1]} <= {Rp[3]}", f"{L[3]} >= {Rp[1]}"]
     if not point:
         # reference-point dedup: a pair that meets in several cells is kept
         # only in the cell holding the lower-left corner of the bboxes'
         # intersection (a point left has one cell, so its pairs meet once)
         ref_x, ref_y = f"greatest({L[0]}, {Rp[0]})", f"greatest({L[1]}, {Rp[1]})"
-        terms.append(f"{lcell} = {cx(ref_x)} * {_CELL_SHIFT} + {cy(ref_y)}")
+        terms += [f"{lcx} = {cx(ref_x)}", f"{lcy} = {cy(ref_y)}"]
     # point x box: the bbox comparison IS the exact predicate -> no UDF
     exact = native and predicate in (*_BOX_SURE, "dwithin")
     if exact:  # intersects / covered_by: the overlap terms are already exact

@@ -5,9 +5,10 @@ pandas Series exactly as the ST_* pandas UDFs call it."""
 
 import math
 import struct
+from unittest import mock
 
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from duckdb_spatial_spark.functions import fastpath
 from duckdb_spatial_spark.geo import algorithms as A, from_wkb, geom as G, to_wkb
@@ -38,9 +39,25 @@ def point_values(draw):
     return to_wkb(G.point(draw(half), draw(half)))
 
 
+def _holed(x0, y0, w, h):
+    outer = [[x0, y0], [x0 + w, y0], [x0 + w, y0 + h], [x0, y0 + h], [x0, y0]]
+    hole = [[x0 + 1, y0 + 1], [x0 + 1, y0 + h - 1], [x0 + w - 1, y0 + h - 1],
+            [x0 + w - 1, y0 + 1], [x0 + 1, y0 + 1]]
+    return G.polygon([outer, hole])
+
+
+def _pinhole(x0, y0):
+    """A box with a one-vertex hole at its centre: a point on the hole's
+    vertex is on the boundary."""
+    return G.polygon([G.box_polygon(x0, y0, x0 + 2, y0 + 2).data[0], [[x0 + 1, y0 + 1]]])
+
+
 @st.composite
 def regions(draw):
-    kind = draw(st.sampled_from(["box", "triangle", "holed", "multi", "point", "empty"]))
+    kind = draw(st.sampled_from(
+        ["box", "triangle", "holed", "multi", "multi_holed", "degenerate", "pinhole", "point", "empty",
+         "polygon_empty"]
+    ))
     if kind == "box":
         x0, y0 = draw(st.integers(0, 4)), draw(st.integers(0, 4))
         return G.box_polygon(x0, y0, x0 + draw(st.integers(1, 2)), y0 + draw(st.integers(1, 2)))
@@ -51,27 +68,35 @@ def regions(draw):
                 return G.polygon([[[ax, ay], [bx, by], [cx, cy], [ax, ay]]])
     if kind == "holed":
         x0, y0 = draw(st.integers(0, 2)), draw(st.integers(0, 2))
-        w, h = draw(st.integers(3, 4)), draw(st.integers(3, 4))
-        outer = [[x0, y0], [x0 + w, y0], [x0 + w, y0 + h], [x0, y0 + h], [x0, y0]]
-        hole = [[x0 + 1, y0 + 1], [x0 + 1, y0 + h - 1], [x0 + w - 1, y0 + h - 1],
-                [x0 + w - 1, y0 + 1], [x0 + 1, y0 + 1]]
-        return G.polygon([outer, hole])
+        return _holed(x0, y0, draw(st.integers(3, 4)), draw(st.integers(3, 4)))
     if kind == "multi":
         y0 = draw(st.integers(0, 4))
         return G.collect([G.box_polygon(0, y0, 2, y0 + 2), G.box_polygon(3, 0, 3 + draw(st.integers(1, 3)), 6)])
+    if kind == "multi_holed":  # a holed part beside a plain one
+        x0 = draw(st.integers(0, 3))
+        return G.collect([_holed(x0, 0, 3, draw(st.integers(3, 4))), G.box_polygon(x0, 5, x0 + 2, 6)])
+    if kind == "degenerate":  # a repeated vertex and a collinear one on the shell
+        x0, y0 = draw(st.integers(0, 3)), draw(st.integers(0, 3))
+        return G.polygon([[[x0, y0], [x0, y0], [x0 + 1, y0], [x0 + 2, y0], [x0 + 2, y0 + 2],
+                           [x0 + 1, y0 + 1], [x0, y0 + 2], [x0, y0 + 1], [x0, y0]]])
+    if kind == "pinhole":
+        return _pinhole(draw(st.integers(0, 3)), draw(st.integers(0, 3)))
     if kind == "point":
         return G.point(draw(grid), draw(grid))
+    if kind == "polygon_empty":
+        return G.empty(G.POLYGON)
     return G.empty(G.POINT)
 
 
 @st.composite
 def batches(draw):
     """(point side, region side) Series. A constant batch repeats one
-    region on every row; otherwise rows draw from a small pool of regions
-    (so groups repeat) and the region side may be NULL."""
-    n = draw(st.integers(1, 30))
+    region on every row; otherwise rows draw from a pool of up to 40
+    regions (so groups repeat, and point and polygon groups mix) and the
+    region side may be NULL."""
+    n = draw(st.integers(1, 60))
     pts = [draw(point_values()) for _ in range(n)]
-    pool = [to_wkb(g) for g in draw(st.lists(regions(), min_size=1, max_size=4))]
+    pool = [to_wkb(g) for g in draw(st.lists(regions(), min_size=1, max_size=draw(st.sampled_from([4, 40]))))]
     if draw(st.booleans()):
         other = [pool[0]] * n
     else:
@@ -88,6 +113,8 @@ def _values(s):
 
 
 @given(batches())
+@example((pd.Series([to_wkb(G.point(1, 1)), to_wkb(G.point(0.5, 1))], dtype=object),
+          pd.Series([to_wkb(_pinhole(0, 0))] * 2, dtype=object)))
 @settings(max_examples=300, deadline=None)
 def test_predicate_batch_matches_per_row_kernel(batch):
     pts, other = batch
@@ -98,6 +125,20 @@ def test_predicate_batch_matches_per_row_kernel(batch):
                 assert fast is not None, name
             if fast is not None:
                 assert _values(fast) == _per_row(fn, a, b), name
+
+
+@given(batches(), st.integers(1, 24))
+@settings(max_examples=150, deadline=None)
+def test_predicate_batch_in_small_passes_matches_per_row_kernel(batch, cap):
+    """A pair-edge cap below the batch's pair x edge count splits the flat
+    point-in-polygon pass; the result is the same."""
+    pts, other = batch
+    with mock.patch.object(fastpath, "_PAIR_EDGE_CAP", cap):
+        for name, fn in PREDICATES.items():
+            for a, b in ((pts, other), (other, pts)):
+                fast = fastpath.try_predicate_batch(name, a, b)
+                if fast is not None:
+                    assert _values(fast) == _per_row(fn, a, b), name
 
 
 @given(batches(), st.sampled_from([G.linestring([[0, 0], [6, 6]]), G.linestring([[1, 0], [1, 3], [4, 3]])]))

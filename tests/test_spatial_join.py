@@ -585,6 +585,20 @@ def test_point_left_is_not_sampled_and_cells_do_not_alias(spark):
     assert {rid for _, rid in expected} & {10_100, 10_101, 10_102} == {10_100, 10_101, 10_102}
 
 
+def test_cells_far_apart_in_y_do_not_share_a_join_key(spark):
+    """Cells ``(0, 2^22 + 3)`` and ``(1, 3)`` are different cells: a point
+    in the second, against a tall box that spans both columns, is one pair
+    (a cell id packed as ``cx * 2^22 + cy`` gave both the same key and
+    returned the pair twice). The box explodes onto 2 x (2^22 + 11) cells,
+    so the one-row point side is the one broadcast."""
+    pts = F.broadcast(spark.createDataFrame([(0, 1.2, 3.5)], "pid long, x double, y double"))
+    rects = spark.createDataFrame([(0, 0.5, 0.0, 1.5, float(2**22 + 10))],
+                                  "rid long, mnx double, mny double, mxx double, mxy double")
+    got = st_join(pts, rects, predicate="within", left_point=("x", "y"), right_bbox=_BBOX,
+                  right_is_box=True, cell_size=1.0)
+    assert [(r.pid, r.rid) for r in got.select("pid", "rid").collect()] == [(0, 0)]
+
+
 def _jobs_in(spark, group, fn):
     """Number of Spark jobs ``fn()`` launches, counted by job group."""
     sc = spark.sparkContext
